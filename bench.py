@@ -109,7 +109,7 @@ def bench_queries(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, float
 
 def bench_cdc(spark, n_events: int) -> dict:
     """Generate a seeded change log and replay it through the full apply
-    path (evolve -> normalize -> extract -> salted dedup -> MERGE)."""
+    path (evolve -> normalize -> MERGE with max-LSN winner + extract)."""
     from clinical_trials_etl_spark.cdc.replay import replay
     from clinical_trials_etl_spark.datagen.changelog import (
         LogSpec,

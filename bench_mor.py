@@ -69,17 +69,16 @@ def main() -> None:
         results = {}
         for mode in ("cow", "delta"):
             root = os.path.join(work, f"table_{mode}")
-            os.environ["SPARK_GRAFT_MERGE_MODE"] = "cow"
             # distinct batch-id namespaces per phase: both phases start
             # at segment index 0, so a shared prefix would make
             # is_applied() skip the update phase's first batch
             table = replay(spark, base_log, root, segments_per_batch=1,
                            n_buckets=N_BUCKETS, batch_prefix="base")
             bytes_before = _dir_bytes(root)
-            os.environ["SPARK_GRAFT_MERGE_MODE"] = mode
             t0 = time.perf_counter()
             table = replay(spark, upd_log, root, segments_per_batch=1,
-                           n_buckets=N_BUCKETS, batch_prefix="update")
+                           n_buckets=N_BUCKETS, batch_prefix="update",
+                           merge_mode=mode)
             if mode == "delta":
                 table.compact()
             wall = time.perf_counter() - t0
@@ -90,7 +89,6 @@ def main() -> None:
                 "bytes_written": _dir_bytes(root) - bytes_before,
                 "final_rows": table.read().count(),
             }
-        os.environ.pop("SPARK_GRAFT_MERGE_MODE", None)
 
         assert results["cow"]["final_rows"] == results["delta"]["final_rows"]
         out = {

@@ -9,16 +9,19 @@ This is the engine's spine (SURVEY.md §7 stage 3; north rule):
   2. **Normalize transport -> table columns**: the wire format is the
      union-of-versions (Debezium-style); ``coalesce`` folds renamed
      columns (lang/language), types are cast to the evolved schema.
-  3. **Salted max-LSN dedup** (W3): ``max_by`` aggregation with
-     map-side partial aggregation (optionally two-phase salted — see
-     the dedup_max_lsn docstring for the measured skew analysis). This
-     replaces the reference's last-write-wins race
-     (mongodb_storage.py:229-231) with deterministic max-LSN semantics.
+  3. **Max-LSN MERGE** into the bucket-pruned lake table
+     (lake/table.py): ``LakeTable.merge`` owns the per-key
+     max-(lsn, deleted) winner decision in both merge modes — one
+     aggregation (``LakeTable._winner_per_key``) whose map-side partial
+     aggregation collapses duplicate deliveries and hot keys before
+     its shuffle.
+     This replaces the reference's last-write-wins race
+     (mongodb_storage.py:229-231) with deterministic max-LSN
+     semantics; deletes tombstone.
   4. **Extract text** from html via the Arrow kernel (byte-identity
-     invariant) — after the dedup shuffle, so it runs at shuffle
-     parallelism and only on surviving upsert rows.
-  5. **LSN-guarded MERGE** into the bucket-pruned lake table
-     (lake/table.py), tombstoning deletes.
+     invariant) as the merge's ``fill`` hook — after the winner
+     shuffle, so it runs at shuffle parallelism and only on winning
+     live batch rows.
 
 Re-running the same (batch_id, rows) is a no-op end-to-end — the
 exactly-once contract foreachBatch needs.
@@ -32,19 +35,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from clinical_trials_etl_spark.cdc import registry as reg
 from clinical_trials_etl_spark.dist import ensure_package_on_executors
-from clinical_trials_etl_spark.functions.html_extract import (
-    extract_text_udf,
-    fill_text_udf,
-)
-from clinical_trials_etl_spark.lake.table import LakeTable
-
-# Dedup plan selector (measured — bench_skew.py + BENCH/BASELINE.md):
-# max_by's map-side partial aggregation already neutralizes hot keys, so
-# the single-phase plan (1) is the throughput default; two-phase salting
-# (e.g. 16) bounds the hot-key reducer fan-in (#map_tasks x payload) and
-# pays off once payloads are wide (~100 KB html) and map-task counts are
-# in the thousands — set SPARK_GRAFT_SALT for that regime.
-DEFAULT_SALT = int(os.environ.get("SPARK_GRAFT_SALT", "1"))
+from clinical_trials_etl_spark.functions.html_extract import fill_text_udf
+from clinical_trials_etl_spark.lake.table import SYS_DELETED, SYS_LSN, LakeTable
 
 
 def evolve_for_batch(table: LakeTable, batch: DataFrame,
@@ -97,12 +89,12 @@ def normalize_batch(
     """Transport (union schema) -> evolved table columns + (lsn, op).
 
     ``text`` is emitted as a null placeholder here and filled in by
-    :func:`extract_text_post_dedup` AFTER the max-LSN dedup shuffle —
+    :func:`fill_text_post_winner` AFTER the merge's winner shuffle —
     so the Arrow HTML kernel (the expensive step) runs (a) with the
     shuffle's full parallelism instead of the scan's file-level
     parallelism (a WAL segment can be a single file = a single task),
-    and (b) only on rows that survived dedup, never on superseded
-    duplicate deliveries.
+    and (b) only on winning rows, never on superseded duplicate
+    deliveries.
 
     Renamed columns fold by FIELD ID via the registry: a record written
     before a rename carries the old name, after it the new one — all
@@ -137,77 +129,14 @@ def _dt(t: str) -> str:
             "double": "double", "boolean": "boolean"}[t]
 
 
-def dedup_max_lsn(batch: DataFrame, key: str, n_salt: int = DEFAULT_SALT) -> DataFrame:
-    """Keep the max-lsn event per key via max_by aggregation, optionally
-    salted into two phases.
-
-    Skew analysis (measured — see bench_skew.py / BENCH/BASELINE.md):
-    ``max_by`` is algebraic, so Spark's map-side partial aggregation
-    already collapses a hot key to ONE row per map partition before any
-    shuffle — the first-line skew defense, and why this is a groupBy
-    and not a row_number window (a window sorts the whole hot partition
-    on one task with no partial aggregation).
-
-    What partial aggregation does NOT bound is the reducer fan-in for a
-    hot key: one reducer still receives #map_partitions partial rows ×
-    payload size (html can be ~100 KB at production scale — with 10^4
-    map tasks that is ~1 GB into a single reducer). Salting (n_salt>1)
-    spreads that fan-in over n_salt phase-1 reducers and reduces n_salt
-    partials per key in phase 2, at the cost of a second (tiny) shuffle.
-    At sandbox payload sizes the extra shuffle dominates, so callers can
-    pass n_salt=1 for the single-phase plan; at design scale n_salt~16
-    bounds the hot-key reducer to #map_tasks/n_salt × payload."""
-    payload = F.struct(
-        *[F.col(c) for c in batch.columns if c != key]
-    )
-    if n_salt <= 1:
-        one = batch.groupBy(key).agg(
-            F.max_by(payload, F.col("lsn")).alias("_p")
-        )
-        return one.select(key, "_p.*")
-    salted = batch.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col("lsn")), F.lit(n_salt))
-    )
-    phase1 = salted.groupBy(key, "_salt").agg(
-        F.max_by(payload, F.col("lsn")).alias("_p"), F.max("lsn").alias("_mx")
-    )
-    phase2 = phase1.groupBy(key).agg(
-        F.max_by(F.col("_p"), F.col("_mx")).alias("_p")
-    )
-    return phase2.select(key, "_p.*")
-
-
-def extract_text_post_dedup(df: DataFrame) -> DataFrame:
-    """Fill the ``text`` column from ``html`` via the Arrow kernel, on
-    the post-shuffle (deduped) rows only.
-
-    Uses the MASKED kernel (``fill_text_udf``), not ``F.when(...,
-    extract_text_udf(...))``: Spark extracts Python UDFs into an
-    unconditional ``ArrowEvalPython`` node and the CASE WHEN merely
-    selects among already-computed results, so a when-masked kernel
-    would parse every row including tombstones. The masked kernel
-    keeps the plan single-branch (a split-filter-union would duplicate
-    the dedup aggregation's final pass) while parsing only live rows."""
-    if "text" not in df.columns:
-        return df
-    return df.withColumn(
-        "text",
-        fill_text_udf(
-            F.col("html"), F.col("text"), F.col("op") == "D"
-        ).cast("string"),
-    )
-
-
 def fill_text_post_winner(df: DataFrame) -> DataFrame:
-    """Fill ``text`` on the MERGE winner rows (single-shuffle COW path):
+    """Fill ``text`` on the MERGE winner rows (both merge modes): COW
     target winners arrive with text already extracted at their original
     apply; batch winners carry the null placeholder and get the Arrow
     kernel here — after the one winner shuffle, at shuffle parallelism,
     and never on superseded duplicate deliveries. The kernel is
     deterministic, so a (url, lsn) redelivery tie resolving to either
     side yields byte-identical text."""
-    from clinical_trials_etl_spark.lake.table import SYS_DELETED
-
     if "text" not in df.columns or "html" not in df.columns:
         return df
     # Masked kernel, NOT F.when(needy, kernel): Spark evaluates a
@@ -234,26 +163,22 @@ def apply_batch(
     batch: DataFrame,
     batch_id: str,
     registry: dict | None = None,
-    n_salt: int = DEFAULT_SALT,
     lineage: dict | None = None,
-    merge_mode: str | None = None,
+    merge_mode: str = "cow",
     wap_id: str | None = None,
 ) -> dict:
-    """Full apply: evolve -> normalize -> dedup -> MERGE. Idempotent on
-    ``batch_id``.
+    """Full apply: evolve -> normalize -> MERGE (winner + extraction).
+    Idempotent on ``batch_id``.
 
     ``merge_mode``: "cow" (rewrite touched buckets; default) or
     "delta" (merge-on-read append — O(batch) commit cost, reads
     reconcile, compact() folds; the write-amplification answer when
-    micro-batches are small relative to bucket size). Defaults from
-    SPARK_GRAFT_MERGE_MODE.
+    micro-batches are small relative to bucket size).
 
     ``wap_id``: stage the merge for write-audit-publish instead of
     committing (LakeTable.merge wap contract; schema evolution still
     commits directly — an add/rename/widen is metadata the audit
     can't veto without vetoing the registry itself)."""
-    if merge_mode is None:
-        merge_mode = os.environ.get("SPARK_GRAFT_MERGE_MODE", "cow")
     ensure_package_on_executors(table.spark)
     snap = table.snapshot()
     if table.is_applied(batch_id, snap):
@@ -261,8 +186,8 @@ def apply_batch(
 
     # ONE metadata action over the cheap column-pruned raw-batch scan
     # collects both per-batch facts the driver needs: the max schema_ver
-    # (evolution trigger) and the exact touched-bucket set (dedup
-    # preserves the url set, so the hint is exact). Round 1 ran these as
+    # (evolution trigger) and the exact touched-bucket set (the winner
+    # rule preserves the url set, so the hint is exact). Round 1 ran these as
     # two separate jobs — two full-batch scan barriers per micro-batch,
     # the dominant fixed cost at small batch sizes.
     meta = batch.agg(
@@ -286,40 +211,18 @@ def apply_batch(
     ops = evolve_for_batch(table, batch, registry, max_ver=meta["_mx"])
     fields = table.fields()
     normalized = normalize_batch(batch, fields, registry)
-    if merge_mode == "cow" and n_salt <= 1:
-        # Single-shuffle COW: the batch's max-LSN dedup folds into the
-        # merge's winner aggregation — max over (lsn, deleted) is
-        # associative, so winner(target U batch) == winner(target U
-        # dedup(batch)) and the batch never takes its own key shuffle.
-        # Superseded duplicates still collapse map-side (algebraic
-        # max_by partial aggregation); extraction moves post-winner
-        # (fill_text_post_winner) so it stays winners-only and
-        # shuffle-parallel. Measured: one fewer full-batch shuffle +
-        # stage barrier per micro-batch (BENCH/BASELINE.md).
-        source, fill = normalized, fill_text_post_winner
-    else:
-        # Salted regime (SPARK_GRAFT_SALT>1, wide-payload design scale)
-        # and delta commits keep the explicit two-phase dedup: salting
-        # needs its own phase-1 spread, and delta commits the batch rows
-        # as-is so they must be per-key deduped and extracted up front.
-        source, fill = (
-            extract_text_post_dedup(
-                dedup_max_lsn(normalized, table.key_field(), n_salt)
-            ),
-            None,
-        )
+    # the batch reaches merge unshuffled: merge's winner aggregation
+    # is its one key shuffle (duplicates collapse map-side), and
+    # extraction runs post-winner via fill
     stats = table.merge(
-        source,
+        normalized,
         lsn_col="lsn",
         op_col="op",
         batch_id=batch_id,
         lineage=lineage,
         touched_hint=touched,
         mode=merge_mode,
-        fill=fill,
-        # the salted/delta branch pre-dedups per key; telling the merge
-        # saves its broadcast plan the redundant batch-wide shuffle
-        source_unique=fill is None,
+        fill=fill_text_post_winner,
         wap_id=wap_id,
     )
     stats["evolution_ops"] = ops
@@ -340,12 +243,16 @@ def apply_batch(
         ]
         stats["iceberg_sql"] = statements
         if os.environ.get("SPARK_GRAFT_ICEBERG_EXECUTE") == "1":
-            # the catalog MERGE needs the per-key deduped, extracted
-            # batch regardless of which local plan ran (lazy — no job
-            # unless these statements execute)
-            extract_text_post_dedup(
-                dedup_max_lsn(normalized, table.key_field(), n_salt)
-            ).createOrReplaceTempView(view)
+            # the catalog MERGE needs the per-key winners, extracted —
+            # the same rule and kernel the local merge runs (lazy — no
+            # job unless these statements execute)
+            fill_text_post_winner(LakeTable._winner_per_key(
+                normalized.withColumns({
+                    SYS_LSN: F.col("lsn"),
+                    SYS_DELETED: F.col("op") == "D",
+                }),
+                table.key_field(),
+            )).drop(SYS_LSN, SYS_DELETED).createOrReplaceTempView(view)
             for stmt in statements:
                 table.spark.sql(stmt)
     return stats

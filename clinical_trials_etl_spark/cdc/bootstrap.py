@@ -45,7 +45,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from clinical_trials_etl_spark.cdc import registry as reg
-from clinical_trials_etl_spark.cdc.apply import DEFAULT_SALT, apply_batch
+from clinical_trials_etl_spark.cdc.apply import apply_batch
 from clinical_trials_etl_spark.lake.table import LakeTable
 
 BOOTSTRAP_BATCH_ID = "bootstrap-0"
@@ -78,8 +78,7 @@ def bootstrap_from_snapshot(
     n_buckets: int = 16,
     registry: dict | None = None,
     schema_ver: int | None = None,
-    n_salt: int = DEFAULT_SALT,
-    merge_mode: str | None = None,
+    merge_mode: str = "cow",
     key_bloom_bits: int | None = None,
 ) -> LakeTable:
     """Create the pages table at ``table_root`` and bulk-load
@@ -133,7 +132,7 @@ def bootstrap_from_snapshot(
     )
     apply_batch(
         table, events, batch_id=BOOTSTRAP_BATCH_ID,
-        registry=registry, n_salt=n_salt, merge_mode=merge_mode,
+        registry=registry, merge_mode=merge_mode,
         lineage={"mode": "bootstrap", "snapshot_lsn": snapshot_lsn},
     )
     return table

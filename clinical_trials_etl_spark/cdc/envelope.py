@@ -190,11 +190,18 @@ def _list_complete_windows(out_dir: str) -> list[tuple[int, int, str]]:
     return out
 
 
-def _probe_window_versions(spark, paths: list[str]) -> dict[str, int | None]:
+# _probe_window_versions' answer for a window whose rows carry no
+# stamped version (legacy): never equal to a registry version, so such
+# a window never joins a stamped run
+_UNSTAMPED = -1
+
+
+def _probe_window_versions(spark, paths: list[str]) -> dict[str, int]:
     """One slim job over ``paths`` (window directories) answering each
     window's stamped ``source.schema_ver`` — keyed by directory
-    basename; a window absent from the result (empty: maintenance-only
-    publish) or stamped None (legacy) maps to None."""
+    basename. A window with rows but no stamped version (legacy) maps
+    to ``_UNSTAMPED``; an empty window (maintenance-only publish) is
+    absent from the result."""
     if not paths:
         return {}
     rows = (spark.read.schema(_SLIM_VER_SCHEMA)
@@ -202,14 +209,12 @@ def _probe_window_versions(spark, paths: list[str]) -> dict[str, int | None]:
             .groupBy(F.input_file_name().alias("f"))
             .agg(F.max("source.schema_ver").alias("v"))
             .collect())
-    out: dict[str, int | None] = {}
+    out: dict[str, int] = {}
     for r in rows:
         d = os.path.basename(os.path.dirname(
             unquote(urlparse(r["f"]).path)))
-        v = None if r["v"] is None else int(r["v"])
-        cur = out.get(d)
-        if cur is None or (v is not None and v > cur):
-            out[d] = v
+        v = _UNSTAMPED if r["v"] is None else int(r["v"])
+        out[d] = max(v, out.get(d, _UNSTAMPED))
     return out
 
 
@@ -786,10 +791,11 @@ def compact_envelope_windows(source: LakeTable, out_dir: str,
         spark, [os.path.join(out_dir, fn) for _a, _b, fn in windows])
 
     # maximal runs: contiguous spans (a == previous b) whose stamped
-    # versions are COMPATIBLE — a None-version window (empty
-    # maintenance-only publish, or legacy unstamped) has no rows to
-    # parse, so it joins a run at any version instead of fragmenting
-    # the topic around every maintenance pass
+    # versions are COMPATIBLE — an empty window (maintenance-only
+    # publish, absent from the probe) has no rows to parse, so it
+    # joins a run at any version instead of fragmenting the topic
+    # around every maintenance pass; a legacy window's rows would be
+    # parsed at the run's version, so _UNSTAMPED only matches itself
     runs: list[list[tuple[int, int, str]]] = []
     run_vers: list[int | None] = []
     for w in windows:
@@ -876,7 +882,7 @@ def topic_windows_df(spark, env_dir: str,
     decisions: the low-water sweep bound, runs eligible for
     compaction, a late consumer's re-bootstrap horizon."""
     rows = []
-    vers: dict[str, int | None] = {}
+    vers: dict[str, int] = {}
     complete_paths = []
     if os.path.isdir(env_dir):
         for fn in sorted(os.listdir(env_dir)):
@@ -898,7 +904,8 @@ def topic_windows_df(spark, env_dir: str,
     if complete_paths:
         vers = _probe_window_versions(spark, complete_paths)
         for row in rows:
-            row[6] = vers.get(row[0])
+            v = vers.get(row[0])
+            row[6] = None if v == _UNSTAMPED else v
     return spark.createDataFrame(
         [tuple(r) for r in rows], _TOPIC_WINDOWS_SCHEMA)
 
@@ -979,7 +986,6 @@ def bootstrap_replica(spark, export_dir: str, root: str,
         .alias("op"),
     )
     table.merge(batch, batch_id=f"env-{man['version']}",
-                source_unique=True,
                 lineage={"mode": "replica_bootstrap",
                          "export_version": man["version"]})
     return table

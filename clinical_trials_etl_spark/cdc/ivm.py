@@ -389,8 +389,7 @@ def refresh_agg_view(
                 view.spark.createDataFrame(
                     [], _merge_schema(spec, view)),
                 batch_id=f"{_PREFIX}{to_version}",
-                lineage={"source_versions": [start, to_version]},
-                source_unique=True)
+                lineage={"source_versions": [start, to_version]})
             return {"skipped": False, "from": start, "to": to_version,
                     "groups": 0}
         if mm or hll:
@@ -438,8 +437,7 @@ def refresh_agg_view(
         stats = view.merge(
             src, batch_id=f"{_PREFIX}{to_version}",
             lineage={"source_versions": [start, to_version]},
-            touched_hint=touched,
-            source_unique=True)
+            touched_hint=touched)
     finally:
         delta.unpersist()
         for df in cleanup:

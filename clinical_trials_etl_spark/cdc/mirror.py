@@ -113,27 +113,10 @@ def sync_mirror(
         F.when(F.col("_change_type") == "delete", F.lit("D"))
         .otherwise(F.lit("U")).alias("op"),
     )
-    source_unique = False
-    if mode == "delta":
-        # delta commits append rows as-is, so a multi-commit window
-        # (same key changed at several source versions) must collapse
-        # to its per-key winner here — same (lsn, deleted) rule the
-        # merge itself uses
-        key = mirror.key_field()
-        payload = F.struct(*[c for c in src.columns if c != key])
-        src = (
-            src.groupBy(key)
-            .agg(F.max_by(
-                payload,
-                F.struct(F.col("lsn"), F.col("op") == "D")).alias("_p"))
-            .select(key, "_p.*")
-        )
-        source_unique = True
     stats = mirror.merge(
         src, batch_id=f"{_PREFIX}{to_version}",
         lineage={"source_versions": [start, to_version]},
         mode=mode,
-        source_unique=source_unique,
     )
     return {
         "skipped": stats.get("skipped", False),

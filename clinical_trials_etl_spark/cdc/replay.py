@@ -33,10 +33,14 @@ def create_pages_table(
 
 
 def list_segments(log_dir: str) -> list[str]:
+    """``segment=<n>`` dirs under ``log_dir`` in numeric log order
+    (``segment=10`` after ``segment=2``)."""
     segs = [
         os.path.join(log_dir, d)
-        for d in sorted(os.listdir(log_dir))
-        if d.startswith("segment=")
+        for d in sorted(
+            (d for d in os.listdir(log_dir) if d.startswith("segment=")),
+            key=lambda d: int(d[len("segment="):]),
+        )
     ]
     if not segs:
         raise FileNotFoundError(f"no segment=* dirs under {log_dir}")
@@ -51,9 +55,8 @@ def replay(
     n_buckets: int = 16,
     registry: dict | None = None,
     start_segment: int = 0,
-    n_salt: int | None = None,
     batch_prefix: str = "replay",
-    merge_mode: str | None = None,
+    merge_mode: str = "cow",
     compact_every: int | None = None,
     key_bloom_bits: int | None = None,
     min_lsn: int | None = None,
@@ -100,7 +103,6 @@ def replay(
         ).parquet(*chunk)
         if min_lsn is not None:
             batch = batch.filter(F.col("lsn") > min_lsn)
-        kwargs = {} if n_salt is None else {"n_salt": n_salt}
         stats = apply_batch(
             table,
             batch,
@@ -108,7 +110,6 @@ def replay(
             registry=registry or PAGES_REGISTRY,
             lineage={"segments": [os.path.basename(s) for s in chunk]},
             merge_mode=merge_mode,
-            **kwargs,
         )
         if not stats.get("skipped"):
             applied += 1

@@ -102,8 +102,7 @@ def run_stream(
     max_files_per_trigger: int = 1,
     metrics_path: str | None = None,
     registry: dict | None = None,
-    n_salt: int | None = None,
-    merge_mode: str | None = None,
+    merge_mode: str = "cow",
     compact_every: int | None = None,
     compact_sort_by: str | None = None,
     compact_zorder_by: list[str] | None = None,
@@ -232,7 +231,6 @@ def run_stream(
     rejected: dict[str, object] = {}
 
     def handle(batch_df, epoch_id: int):
-        kwargs = {} if n_salt is None else {"n_salt": n_salt}
         wap = f"epoch-{epoch_id}-audit" if audit is not None else None
         if wap is not None and wap in table.staged():
             # residue of a crash between stage and publish on an
@@ -247,7 +245,6 @@ def run_stream(
             lineage={"epoch": epoch_id},
             merge_mode=merge_mode,
             wap_id=wap,
-            **kwargs,
         )
         if wap is not None and stats.get("staged"):
             if audit(table.read_staged(wap), stats):

@@ -55,9 +55,6 @@ def build_parser() -> argparse.ArgumentParser:
                         "a lost commit race rebases, it does not abort")
     p.add_argument("--metrics", help="parquet path for per-batch metrics")
     p.add_argument("--n-buckets", type=int, default=64)
-    from clinical_trials_etl_spark.cdc.apply import DEFAULT_SALT
-
-    p.add_argument("--n-salt", type=int, default=DEFAULT_SALT)
     p.add_argument("--max-files-per-trigger", type=int, default=8)
     p.add_argument("--merge-mode", choices=["cow", "delta"], default=None,
                    help="cow rewrites touched buckets; delta appends "
@@ -470,7 +467,7 @@ def main(argv: list[str] | None = None) -> dict:
             spark, spark.read.parquet(args.bootstrap_snapshot),
             args.table, args.snapshot_lsn,
             n_buckets=args.n_buckets, registry=registry,
-            n_salt=args.n_salt, merge_mode=args.merge_mode,
+            merge_mode=args.merge_mode or "cow",
             key_bloom_bits=args.key_bloom_bits,
         )
         if min_lsn is None:
@@ -494,8 +491,7 @@ def main(argv: list[str] | None = None) -> dict:
             args.checkpoint,
             max_files_per_trigger=args.max_files_per_trigger,
             metrics_path=args.metrics,
-            n_salt=args.n_salt,
-            merge_mode=args.merge_mode,
+            merge_mode=args.merge_mode or "cow",
             compact_every=args.compact_every,
             compact_sort_by=args.compact_sort_by,
             compact_zorder_by=(args.compact_zorder_by.split(",")
@@ -535,8 +531,8 @@ def main(argv: list[str] | None = None) -> dict:
                     key_bloom_bits=args.key_bloom_bits)
             target = _ingest_target(base)
         table = replay(spark, args.log_dir, args.table,
-                       n_buckets=args.n_buckets, n_salt=args.n_salt,
-                       merge_mode=args.merge_mode,
+                       n_buckets=args.n_buckets,
+                       merge_mode=args.merge_mode or "cow",
                        compact_every=args.compact_every,
                        key_bloom_bits=args.key_bloom_bits,
                        registry=registry, min_lsn=min_lsn,

@@ -1171,11 +1171,15 @@ class LakeTable:
 
     @staticmethod
     def _winner_per_key(df: DataFrame, key: str) -> DataFrame:
-        """Max-(lsn, deleted) row per key — the merge-on-read
-        reconciliation AND the merge's winner rule (one algebraic
-        max_by aggregation with map-side partial aggregation, not a
-        row_number window: see merge())."""
-        payload = F.struct(*[F.col(c) for c in df.columns])
+        """Max-(lsn, deleted) row per key — THE winner rule: merge-on-
+        read reconciliation, and merge()'s decision in both modes. One
+        algebraic max_by aggregation, not a row_number window: its
+        map-side partial aggregation collapses duplicate deliveries and
+        hot keys to one row per map partition before the shuffle,
+        where a window would sort a whole hot partition on one task.
+        The key rides as the grouping column, outside the payload;
+        the output keeps ``df``'s column order."""
+        payload = F.struct(*[F.col(c) for c in df.columns if c != key])
         return (
             df.groupBy(key)
             .agg(
@@ -1183,7 +1187,8 @@ class LakeTable:
                     payload, F.struct(F.col(SYS_LSN), F.col(SYS_DELETED))
                 ).alias("_w")
             )
-            .select("_w.*")
+            .select(*[F.col(c if c == key else f"_w.{c}")
+                      for c in df.columns])
         )
 
     def _read_reconciled(
@@ -1557,8 +1562,8 @@ class LakeTable:
             all_delta = all(e.get("delta") for e in entries)
             if all_delta:
                 # layer rows are the change candidates; defensively
-                # collapse to one row per key (apply pre-dedups, so
-                # this is a batch-sized no-op aggregation)
+                # collapse to one row per key (merge writes per-key
+                # winners, so this is a batch-sized no-op aggregation)
                 new = self._winner_per_key(new, key)
                 if not net:
                     parts.append(_out(new, v))
@@ -2589,138 +2594,6 @@ class LakeTable:
         n = self.snapshot()["n_buckets"]
         return F.pmod(F.xxhash64(key_col), F.lit(n)).cast("int")
 
-    # Above this many bytes of touched target data, the COW merge
-    # switches from the wide winner aggregation to the broadcast winner
-    # plan (see _cow_merged). Measured crossover on local[32]: at
-    # ~30 MB touched the agg plan replays 200k events ~20% faster (the
-    # broadcast plan pays ~0.45 s/epoch of serialized broadcast-build
-    # latency); at ~250 MB the two are at parity; beyond that the agg
-    # plan's table-sized exchange + sort grows linearly while the
-    # broadcast plan's exchanges stay batch-sized. On a cluster the
-    # crossover is lower (exchange = network, broadcast build is
-    # latency-bound) — override via SPARK_GRAFT_COW_BROADCAST_BYTES.
-    COW_BROADCAST_BYTES = int(
-        os.environ.get("SPARK_GRAFT_COW_BROADCAST_BYTES",
-                       str(192 * 1024 * 1024)))
-
-    def _touched_bytes(self, snap: dict, touched: set[int]) -> int:
-        """Driver-side size of the touched buckets' data files (os.stat
-        over the manifest's file list — no Spark job)."""
-        total = 0
-        for fmeta in self.files(snap, touched):
-            try:
-                total += os.path.getsize(fmeta["path"])
-            except OSError:
-                pass
-        return total
-
-    def _cow_merged(self, snap, src: DataFrame, key: str,
-                    touched: set[int], fill,
-                    source_unique: bool = False) -> DataFrame:
-        """The rows a COW commit writes: per-key max-(lsn, deleted)
-        winners of target(touched buckets) vs the batch.
-
-        Two physically different plans compute the same rows; the
-        switch is on touched-target size (COW_BROADCAST_BYTES):
-
-        - **agg plan** (small touched set): union(target, batch) ->
-          max_by winner aggregation. One table-sized exchange feeding
-          the write's clustering exchange; map-side partial
-          aggregation collapses duplicate deliveries AND hot keys
-          before the shuffle. Lowest fixed cost per commit.
-        - **broadcast plan** (large touched set): a COW table is
-          one-row-per-key at rest, so the winner decision is a
-          pairwise compare of the deduped batch row vs the key's
-          single target row — computed over slim column-pruned scans
-          and applied via TWO broadcast joins (b_slim, then the
-          O(batch) set of keys the target beat). The full-width
-          target crosses NO exchange except the write clustering:
-          per-commit shuffle volume is O(batch) + one table-sized
-          clustering pass, vs the agg plan's additional table-sized
-          aggregation exchange *and* its SortAggregate (max_by over a
-          struct payload cannot hash-aggregate, so every html payload
-          is sorted twice). At 10^10-row scale the agg plan re-sorts
-          and re-shuffles the table every epoch; the broadcast plan
-          does not.
-
-        Both plans run ``fill`` (Arrow text extraction) only on rows
-        whose text is null — i.e. O(batch) kernel work either way
-        (cdc/apply.py::fill_text_post_winner splits the frame so the
-        UDF's input plan contains only needy rows).
-
-        Winner-tie semantics are identical and deterministic: tombstone
-        outranks live at equal lsn; at a full (lsn, deleted) tie the
-        agg plan's max_by picks either side and the broadcast plan
-        picks the batch side — a redelivery's content is byte-identical
-        by construction (deterministic extraction), so both yield the
-        same bytes."""
-        target = self.read_raw(buckets=touched).withColumn(
-            SYS_BUCKET, self.bucket_expr(F.col(key))
-        )
-        payload = F.struct(*[c for c in src.columns if c != key])
-        order = F.struct(F.col(SYS_LSN), F.col(SYS_DELETED))
-
-        if self._touched_bytes(snap, touched) < self.COW_BROADCAST_BYTES:
-            merged = (
-                target.unionByName(src)
-                .groupBy(key)
-                .agg(F.max_by(payload, order).alias("_p"))
-                .select(key, "_p.*")
-            )
-            return fill(merged) if fill is not None else merged
-
-        # broadcast plan ------------------------------------------------
-        # per-key dedup of the batch (duplicate deliveries collapse
-        # map-side; batch-sized shuffle) — skipped when the caller
-        # already deduped (salted path), saving a full-batch shuffle
-        if source_unique:
-            src_one = src
-        else:
-            src_one = (
-                src.groupBy(key)
-                .agg(F.max_by(payload, order).alias("_p"))
-                .select(key, "_p.*")
-            )
-        # slim per-key batch winner, computed independently of the wide
-        # dedup via max(struct) so the broadcast build scans only three
-        # pruned parquet columns. Same ordering struct as max_by above,
-        # so the (lsn, deleted) winner per key matches by construction.
-        b_slim = (
-            src.groupBy(key)
-            .agg(F.max(order).alias("_w"))
-            .select(
-                F.col(key),
-                F.col(f"_w.{SYS_LSN}").alias("_b_lsn"),
-                F.col(f"_w.{SYS_DELETED}").alias("_b_del"),
-            )
-        )
-        batch_wins = (
-            F.struct(F.col("_b_lsn"), F.col("_b_del"), F.lit(1))
-            > F.struct(F.col(SYS_LSN), F.col(SYS_DELETED), F.lit(0))
-        )
-        # target keeps every key the batch didn't beat; the b_slim
-        # broadcast exchange is built once and reused below
-        keep_target = (
-            target.join(F.broadcast(b_slim), key, "left")
-            .where(F.coalesce(~batch_wins, F.lit(True)))
-            .drop("_b_lsn", "_b_del")
-        )
-        # keys where the TARGET won (O(batch) rows, slim scans only)
-        # knock their rows out of the batch side
-        t_beats = (
-            target.select(key, SYS_LSN, SYS_DELETED)
-            .join(F.broadcast(b_slim), key, "inner")
-            .where(~batch_wins)
-            .select(key)
-        )
-        keep_batch = src_one.join(F.broadcast(t_beats), key, "left_anti")
-        if fill is not None:
-            # Arrow extraction on surviving batch rows only — target
-            # rows carry their text from their original apply and
-            # never enter the Python worker
-            keep_batch = fill(keep_batch)
-        return keep_target.unionByName(keep_batch)
-
     def merge(
         self,
         source: DataFrame,
@@ -2731,46 +2604,38 @@ class LakeTable:
         touched_hint: set[int] | None = None,
         mode: str = "cow",
         fill: Callable[[DataFrame], DataFrame] | None = None,
-        source_unique: bool = False,
         wap_id: str | None = None,
         add_correction_fence: int | None = None,
     ) -> dict:
         """LSN-guarded keyed MERGE (I/U upsert, D tombstone) into the
         touched buckets. ``source`` must carry the table's data columns
-        plus ``lsn_col``/``op_col``. In ``"cow"`` mode the merge dedups
-        the source to one row per key itself (batch-sized max_by), so
-        the source may carry duplicate deliveries — unless the caller
-        states ``source_unique=True`` (already one row per key, e.g.
-        the salted pre-dedup path), which skips the redundant dedup
-        shuffle; ``"delta"`` commits
-        source rows as-is, so the caller must pre-dedup (cdc/apply.py
-        does the salted max-LSN dedup there).
+        plus ``lsn_col``/``op_col``, and may carry duplicate deliveries
+        and out-of-order lsns in either mode: the merge owns the
+        per-key max-(lsn, deleted) winner decision (_winner_per_key —
+        the same rule reads reconcile with).
 
-        ``fill``: optional column transform (cow only) applied to the
-        winner rows just before the bucket write — the seam
-        cdc/apply.py uses to run the Arrow text extraction exactly once
-        per winning NEW row (its split-filter keeps already-extracted
-        target rows out of the Python worker in both plans).
+        ``fill``: optional column transform applied to the winner rows
+        just before the bucket write — the seam cdc/apply.py uses to
+        run the Arrow text extraction once per winning NEW row, after
+        the winner shuffle (already-extracted target rows pass through
+        its masked kernel untouched).
 
         ``mode``:
-        - ``"cow"`` (copy-on-write): read the touched buckets, decide
-          the max-(lsn, deleted) winner per key, rewrite those buckets
-          as fresh base files. Two physical winner plans, switched on
-          touched-target size (see _cow_merged): a wide max_by
-          aggregation when the touched set is small, and a slim
-          broadcast-join decision when it is large — the latter keeps
-          the full-width target out of every exchange except the write
-          clustering, so per-epoch shuffle volume stays O(batch) as
-          the table grows. Reads stay reconciliation-free; each commit
-          rewrites whole buckets.
-        - ``"delta"`` (merge-on-read): append the batch as delta files
-          per touched bucket WITHOUT reading or rewriting the base —
-          O(batch) write cost instead of O(touched bucket size). Reads
-          reconcile layers with the same winner rule; ``compact()``
-          folds layers back into base files. This is the write-
-          amplification fix at design scale: a 1k-row micro-batch must
-          not rewrite a 10^8-row bucket (Iceberg MOR / position-delete
-          analog, expressed as LSN-versioned row layers).
+        - ``"cow"`` (copy-on-write): one max_by winner aggregation over
+          target(touched buckets) ∪ source, then ``fill``, then the
+          bucket-clustering exchange; the touched buckets are rewritten
+          as fresh base files. Map-side partial aggregation collapses
+          duplicate deliveries and hot keys before the shuffle. Reads
+          stay reconciliation-free; each commit rewrites whole buckets.
+        - ``"delta"`` (merge-on-read): the source's per-key winners are
+          appended as delta files per touched bucket WITHOUT reading or
+          rewriting the base — O(batch) write cost instead of
+          O(touched bucket size). Reads reconcile layers with the same
+          winner rule; ``compact()`` folds layers back into base files.
+          This is the write-amplification fix at design scale: a
+          1k-row micro-batch must not rewrite a 10^8-row bucket
+          (Iceberg MOR / position-delete analog, expressed as
+          LSN-versioned row layers).
 
         ``touched_hint``: the exact set of buckets the source touches,
         when the caller can compute it more cheaply than running the
@@ -2855,13 +2720,16 @@ class LakeTable:
         if fences:
             self._guard_correction_fences(snap, src, fences)
 
+        winners_of = src
         if mode == "cow":
-            merged = self._cow_merged(
-                snap, src, key, touched, fill, source_unique)
-        else:
-            # delta: the (already per-key-deduped) batch rows ARE the
-            # commit — no base read, no winner decision, no rewrite
-            merged = src
+            # rewrite the touched buckets: the winner decision runs over
+            # target ∪ batch (read_raw reconciles any delta layers)
+            winners_of = self.read_raw(buckets=touched).withColumn(
+                SYS_BUCKET, self.bucket_expr(F.col(key))
+            ).unionByName(src)
+        merged = self._winner_per_key(winners_of, key)
+        if fill is not None:
+            merged = fill(merged)
 
         out_dir = os.path.join(self.data_dir, f"commit-{uuid.uuid4().hex}")
         phys = {f"f_{f['id']}": f["type"] for f in fields}
@@ -2875,8 +2743,8 @@ class LakeTable:
         # touched bucket; an unclustered dynamic-partition write was
         # measured 1.5-2x slower end-to-end — it fans each task across
         # every bucket dir, exploding file counts and writer overhead).
-        # For cow this is the ONLY table-wide exchange in the commit
-        # (the old winner aggregation was a second one).
+        # With the winner aggregation's key exchange these are the
+        # commit's only two shuffles, in both modes.
         write_df = write_df.repartition(
             max(len(touched), 1), F.col(SYS_BUCKET))
         write_df.write.mode("overwrite").partitionBy(SYS_BUCKET).parquet(out_dir)
@@ -3119,12 +2987,14 @@ class LakeTable:
                       predicate) -> list[str]:
         """Key + the columns the predicate textually references — the
         narrow projection the probe action reads (an over-match only
-        widens the read, never changes it)."""
+        widens the read, never changes it). Case-insensitive, as Spark
+        resolves column names."""
         pred_s = (predicate if isinstance(predicate, str)
                   else str(predicate))
         return [f["name"] for f in fields
                 if f["name"] == key
-                or re.search(rf"\b{re.escape(f['name'])}\b", pred_s)]
+                or re.search(rf"\b{re.escape(f['name'])}\b", pred_s,
+                             re.IGNORECASE)]
 
     def _row_op_hits(self, snap: dict, predicate, columns=None,
                      between=None):
@@ -3218,7 +3088,7 @@ class LakeTable:
             src, batch_id=batch_id,
             lineage={"row_op": "delete_where", "predicate": pred_s,
                      "matched_rows": n},
-            touched_hint=touched, mode=mode, source_unique=True,
+            touched_hint=touched, mode=mode,
             wap_id=wap_id)
         return {**res, "deleted_rows": n}
 
@@ -3322,7 +3192,7 @@ class LakeTable:
                      "assignments": {c: str(v) for c, v
                                      in assignments.items()},
                      "fence_lsn": fence, "matched_rows": n},
-            touched_hint=touched, mode=mode, source_unique=True,
+            touched_hint=touched, mode=mode,
             wap_id=wap_id, add_correction_fence=fence)
         return {**res, "updated_rows": n, "fence_lsn": fence}
 

@@ -2,9 +2,10 @@
 
 Scale notes (100 TB / 1000-executor design):
 - AQE on: runtime coalescing + skew-join splitting cover most shuffle
-  sizing; explicit salting is still applied in the CDC apply path
-  (see ``cdc/apply.py``) because AQE does not rebalance the shuffle
-  feeding a MERGE inside ``foreachBatch``.
+  sizing; AQE does not rebalance the shuffle feeding a MERGE inside
+  ``foreachBatch``, so the CDC merge's hot keys are absorbed by its
+  winner aggregation's map-side partial aggregation instead (see
+  ``LakeTable._winner_per_key``).
 - ``spark.sql.shuffle.partitions`` defaults to the local core count in
   the sandbox; on a real cluster it should be ~2-3x total cores and is
   left overridable via env.

@@ -2,8 +2,8 @@
 ``applyInPandasWithState`` (SURVEY.md §2.9 — the arbitrary-stateful
 extension point the north rule's engine needs beyond windowed aggs).
 
-The in-batch dedup (cdc/apply.dedup_max_lsn) collapses duplicates
-WITHIN a micro-batch; the MERGE's lsn guard then rejects stale rows at
+The merge's per-key winner aggregation (LakeTable._winner_per_key)
+collapses duplicates WITHIN a micro-batch and rejects stale rows at
 the table. This operator adds the middle layer a high-duplication
 stream wants: per-key state (the max lsn ever seen) carried ACROSS
 micro-batches, so a redelivered or out-of-order event is dropped

@@ -9,8 +9,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from clinical_trials_etl_spark.cdc.apply import apply_batch, dedup_max_lsn
+from clinical_trials_etl_spark.cdc.apply import apply_batch
 from clinical_trials_etl_spark.cdc.replay import create_pages_table, replay
+from clinical_trials_etl_spark.lake.table import LakeTable
 from clinical_trials_etl_spark.cdc.registry import PAGES_REGISTRY, diff
 from clinical_trials_etl_spark.datagen.changelog import (
     LogSpec,
@@ -147,20 +148,44 @@ def test_redelivered_data_under_new_batch_id_is_semantic_noop(
     _assert_state_equal(_final_state(table), expected)
 
 
-def test_dedup_max_lsn_semantics(spark):
+def test_delta_merge_writes_one_winner_per_key(spark, tmp_path):
+    """merge() owns the winner rule in delta mode too: a source with
+    duplicate deliveries, out-of-order lsns and a (lsn, delete) tie
+    commits exactly one max-(lsn, deleted) row per key."""
     rows = [
         (1, "I", "u1", "a"),
         (5, "U", "u1", "b"),
         (3, "U", "u1", "c"),
         (5, "U", "u1", "b"),  # duplicate delivery
         (2, "I", "u2", "x"),
+        (4, "U", "u3", "y"),
+        (4, "D", "u3", None),  # tombstone outranks live at equal lsn
     ]
-    df = spark.createDataFrame(rows, "lsn long, op string, url string, payload string")
-    got = {
-        r["url"]: (r["lsn"], r["payload"])
-        for r in dedup_max_lsn(df, "url", n_salt=4).collect()
-    }
-    assert got == {"u1": (5, "b"), "u2": (2, "x")}
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"),
+        [{"id": 1, "name": "url", "type": "string"},
+         {"id": 2, "name": "payload", "type": "string"}],
+        "url", n_buckets=4)
+    df = spark.createDataFrame(
+        rows, "lsn long, op string, url string, payload string")
+    stats = table.merge(df, batch_id="e-1", mode="delta")
+    assert stats["merged_rows"] == 3
+    got = {r["url"]: (r["_lsn"], r["_deleted"], r["payload"])
+           for r in table.read_raw().collect()}
+    assert got == {"u1": (5, False, "b"), "u2": (2, False, "x"),
+                   "u3": (4, True, None)}
+
+
+def test_replay_applies_segments_in_numeric_order(spark, tmp_path):
+    """segment=10 replays after segment=2, not before: each commit's
+    lineage names its segment, in log order."""
+    log = str(tmp_path / "wal")
+    write_changelog_segments(
+        spark, LogSpec(n_events=240, n_hosts=4, seed=5), log,
+        n_segments=12)
+    table = replay(spark, log, str(tmp_path / "tbl"), n_buckets=2)
+    segs = [s for e in table.lineage() for s in e.get("segments", [])]
+    assert segs == [f"segment={i}" for i in range(12)]
 
 
 def test_late_update_after_delete_stays_deleted(spark, tmp_path):
@@ -193,7 +218,7 @@ def test_late_update_after_delete_stays_deleted(spark, tmp_path):
 
 def test_hot_key_distribution(spark, log_dir):
     """The Zipf generator must actually produce a hot host (the skew the
-    salted dedup defends against)."""
+    winner aggregation's map-side partial aggregation absorbs)."""
     df = spark.read.option("basePath", log_dir).parquet(log_dir)
     counts = (
         df.withColumn("host", F.regexp_extract("url", r"https://([^/]+)/", 1))
@@ -206,73 +231,33 @@ def test_hot_key_distribution(spark, log_dir):
     assert counts[0]["count"] > 0.3 * total  # hot head
 
 
-@pytest.mark.parametrize("n_salt", [None, 4], ids=["fill", "salted"])
-def test_replay_equivalence_under_both_cow_winner_plans(
-    spark, log_dir, expected, tmp_path, n_salt
-):
-    """The adaptive COW merge has two physical winner plans (wide
-    aggregation vs broadcast decision, LakeTable._cow_merged). Both
-    must converge to the fold byte-for-byte on the full log — this
-    forces the broadcast plan, which the tiny test tables would never
-    select on their own. The salted variant (n_salt=4) drives the
-    source_unique=True shortcut (src_one=src, lake/table.py:692) — the
-    combination a wide-payload design-scale deployment runs — through
-    the forced broadcast plan."""
-    from clinical_trials_etl_spark.lake.table import LakeTable
-
-    old = LakeTable.COW_BROADCAST_BYTES
-    LakeTable.COW_BROADCAST_BYTES = 0
-    try:
-        table = replay(spark, log_dir, str(tmp_path / "bcast"),
-                       n_salt=n_salt)
-    finally:
-        LakeTable.COW_BROADCAST_BYTES = old
-    got = {r["url"]: r.asDict() for r in table.read().collect()}
-    assert set(got) == set(expected)
-    for url, want in expected.items():
-        assert got[url]["text"] == want["text"], url
-
-
 def test_cow_over_delta_layers_reconciles_before_winner_decision(
     spark, tmp_path
 ):
-    """A cow commit on a table holding unreconciled delta layers: the
-    broadcast winner plan assumes one row per key at rest, which
-    read_raw provides by reconciling layers — gate that a superseded
-    layer row can never resurface through a cow merge. Exercised under
-    BOTH winner plans."""
-    from clinical_trials_etl_spark.lake.table import LakeTable
-
-    for plan_thresh, name in ((1 << 60, "agg"), (0, "bcast")):
-        table = create_pages_table(
-            spark, str(tmp_path / f"mix-{name}"), n_buckets=4)
-        urls = [f"https://h{i}.x/p" for i in range(6)]
-        # two delta epochs: second supersedes first for urls[0:3]
-        b1 = changelog_df(spark, LogSpec(n_events=30, n_hosts=3, seed=1))
-        apply_batch(table, b1, "e-0", merge_mode="delta")
-        b2 = changelog_df(
-            spark, LogSpec(n_events=30, n_hosts=3, seed=2, lsn_offset=30))
-        apply_batch(table, b2, "e-1", merge_mode="delta")
-        want = {(r["url"], r["text"], r["_lsn"])
-                for r in table.read_raw().select(
-                    "url", "text", "_lsn").collect()}
-        # a cow epoch over the layered table must keep exactly the
-        # reconciled winners for untouched keys
-        b3 = changelog_df(
-            spark, LogSpec(n_events=10, n_hosts=1, seed=3, lsn_offset=60))
-        old = LakeTable.COW_BROADCAST_BYTES
-        LakeTable.COW_BROADCAST_BYTES = plan_thresh
-        try:
-            apply_batch(table, b3, "e-2", merge_mode="cow")
-        finally:
-            LakeTable.COW_BROADCAST_BYTES = old
-        got = {(r["url"], r["text"], r["_lsn"])
-               for r in table.read_raw().select(
-                   "url", "text", "_lsn").collect()}
-        b3_urls = {r["url"] for r in b3.select("url").distinct().collect()}
-        unaffected_want = {t for t in want if t[0] not in b3_urls}
-        unaffected_got = {t for t in got if t[0] not in b3_urls}
-        assert unaffected_got == unaffected_want, name
+    """A cow commit on a table holding unreconciled delta layers: gate
+    that a superseded layer row can never resurface through a cow
+    merge."""
+    table = create_pages_table(spark, str(tmp_path / "mix"), n_buckets=4)
+    # two delta epochs: second supersedes first for some urls
+    b1 = changelog_df(spark, LogSpec(n_events=30, n_hosts=3, seed=1))
+    apply_batch(table, b1, "e-0", merge_mode="delta")
+    b2 = changelog_df(
+        spark, LogSpec(n_events=30, n_hosts=3, seed=2, lsn_offset=30))
+    apply_batch(table, b2, "e-1", merge_mode="delta")
+    want = {(r["url"], r["text"], r["_lsn"])
+            for r in table.read_raw().select(
+                "url", "text", "_lsn").collect()}
+    # a cow epoch over the layered table must keep exactly the
+    # reconciled winners for untouched keys
+    b3 = changelog_df(
+        spark, LogSpec(n_events=10, n_hosts=1, seed=3, lsn_offset=60))
+    apply_batch(table, b3, "e-2", merge_mode="cow")
+    got = {(r["url"], r["text"], r["_lsn"])
+           for r in table.read_raw().select(
+               "url", "text", "_lsn").collect()}
+    b3_urls = {r["url"] for r in b3.select("url").distinct().collect()}
+    assert ({t for t in got if t[0] not in b3_urls}
+            == {t for t in want if t[0] not in b3_urls})
 
 
 def test_replay_delta_mode_converges_identically(

@@ -269,16 +269,8 @@ def test_randomized_fold_equivalence(spark, tmp_path):
             cand = (this_lsn, op == "D")
             if cur is None or cand > (cur[0], cur[1]):
                 oracle[k] = (this_lsn, op == "D", val)
+        # both modes take the raw rows: merge picks per-key winners
         mode = "delta" if i % 2 else "cow"
-        if mode == "delta":
-            # delta requires a pre-deduped batch (the apply path's
-            # contract): collapse to per-key winners first
-            best = {}
-            for k, val, l, op in rows:
-                if k not in best or (l, op == "D") > (
-                        best[k][2], best[k][3] == "D"):
-                    best[k] = (k, val, l, op)
-            rows = list(best.values())
         t.merge(_batch(spark, rows), batch_id=f"e-{i}", mode=mode)
         if i in (3, 6):
             t.compact()
@@ -1218,6 +1210,53 @@ def test_compact_envelope_windows_respects_schema_boundary_and_badlines(
              for r in rep.read().collect()}
             == {(r["url"], r["val"], r["extra"])
                 for r in src.read().collect()})
+
+
+def test_compact_envelope_windows_legacy_window_ends_a_run(
+        spark, tmp_path):
+    """A legacy window (rows, but no stamped source.schema_ver) is not
+    an empty bridge: it must not join a stamped run, where its rows
+    would be parsed at the run's version."""
+    import json
+    import os
+
+    from clinical_trials_etl_spark.cdc.envelope import (
+        compact_envelope_windows,
+        publish_envelope_window,
+        topic_windows_df,
+    )
+
+    src = LakeTable.create(spark, str(tmp_path / "src"), FIELDS, "url",
+                           n_buckets=4)
+    env = str(tmp_path / "env")
+    for i in range(3):
+        src.merge(_batch(spark, [(f"u{i}", "v", i + 1, "I")]),
+                  batch_id=f"e-{i + 1}")
+        publish_envelope_window(src, env)
+    # strip the version stamp from the first window (a pre-stamping
+    # publisher); its .crc sidecars go too, or the rewrite fails them
+    legacy = os.path.join(env, "window-00000000-00000001")
+    for fn in os.listdir(legacy):
+        path = os.path.join(legacy, fn)
+        if fn.endswith(".crc"):
+            os.remove(path)
+        elif fn.startswith("part-"):
+            with open(path) as f:
+                envs = [json.loads(ln) for ln in f if ln.strip()]
+            for e in envs:
+                del e["source"]["schema_ver"]
+            with open(path, "w") as f:
+                f.writelines(json.dumps(e) + "\n" for e in envs)
+
+    vers = {r["window"]: r["schema_ver"] for r in
+            topic_windows_df(spark, env, with_schema_ver=True).collect()}
+    assert vers["window-00000000-00000001"] is None
+    res = compact_envelope_windows(src, env)
+    assert res == {"runs_compacted": 1, "windows_in": 2,
+                   "overlaps_swept": 0}
+    assert sorted(d for d in os.listdir(env)
+                  if d.startswith("window-")) == [
+        "window-00000000-00000001", "window-00000001-00000003"]
 
 
 def test_topic_windows_df_inspection(spark, tmp_path):

@@ -5,6 +5,7 @@ evaluation for multi-field extraction, pushed-down parquet filters."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from clinical_trials_etl_spark.operators import analytics as A
@@ -74,10 +75,12 @@ def test_parquet_filter_pushdown(spark, sf_dir):
     assert "o_comment" not in plan
 
 
-def test_cow_apply_hands_merge_an_unshuffled_source(spark, tmp_path):
-    """Single-shuffle COW guardrail: apply_batch (cow, unsalted) must
-    NOT pre-shuffle the batch — max-LSN dedup folds into the merge's
-    winner aggregation, so the source handed to merge() carries no
+@pytest.mark.parametrize("merge_mode", ["cow", "delta"])
+def test_cow_apply_hands_merge_an_unshuffled_source(spark, tmp_path,
+                                                    merge_mode):
+    """Single-shuffle guardrail, both merge modes: apply_batch must NOT
+    pre-shuffle the batch — the max-LSN winner decision belongs to the
+    merge's one aggregation, so the source handed to merge() carries no
     Exchange and no Arrow kernel, and the extraction arrives as the
     post-winner ``fill`` hook instead."""
     from clinical_trials_etl_spark.cdc import apply as apply_mod
@@ -101,8 +104,8 @@ def test_cow_apply_hands_merge_an_unshuffled_source(spark, tmp_path):
 
     LakeTable.merge = spy
     try:
-        apply_mod.apply_batch(table, batch, "plan-gate", n_salt=1,
-                              merge_mode="cow")
+        apply_mod.apply_batch(table, batch, "plan-gate-1",
+                              merge_mode=merge_mode)
     finally:
         LakeTable.merge = real_merge
 
@@ -111,6 +114,41 @@ def test_cow_apply_hands_merge_an_unshuffled_source(spark, tmp_path):
         "extraction must run post-winner, not on the raw batch"
     )
     assert seen["fill"] is apply_mod.fill_text_post_winner
+
+
+@pytest.mark.parametrize("mode", ["cow", "delta"])
+def test_merge_decides_winners_in_one_aggregation(spark, tmp_path, mode):
+    """merge() owns the winner rule in both modes: ``fill`` receives
+    the output of ONE max_by aggregation (one key exchange, one partial
+    aggregation) — over target ∪ batch in cow, over the batch alone in
+    delta — and no extraction has run before it."""
+    from clinical_trials_etl_spark.cdc import apply as apply_mod
+    from clinical_trials_etl_spark.cdc.replay import create_pages_table
+    from clinical_trials_etl_spark.datagen.changelog import (
+        LogSpec,
+        changelog_df,
+    )
+
+    table = create_pages_table(spark, str(tmp_path / "t"), n_buckets=4)
+    apply_mod.apply_batch(
+        table, changelog_df(spark, LogSpec(n_events=40, n_hosts=4, seed=3)),
+        "seed-1")
+    batch = changelog_df(
+        spark, LogSpec(n_events=40, n_hosts=4, seed=4, lsn_offset=40))
+    seen = {}
+
+    def spy_fill(df):
+        seen["plan"] = _plan(df)
+        return apply_mod.fill_text_post_winner(df)
+
+    table.merge(apply_mod.normalize_batch(batch, table.fields()),
+                batch_id="plan-2", mode=mode, fill=spy_fill)
+    plan = seen["plan"]
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("partial_max_by") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+    # only cow reads the target (the batch here is generated, not read)
+    assert ("Scan parquet" in plan) == (mode == "cow"), plan
 
 
 def test_asof_join_is_windowed_not_nested_loop(spark, sf_dir):
@@ -175,70 +213,6 @@ def test_fill_kernel_parses_only_needy_rows(spark):
     plan = _plan(fill_text_post_winner(df))
     assert plan.count("ArrowEvalPython") == 1
     assert "Union" not in plan, "fill must not duplicate its child plan"
-
-
-def test_cow_broadcast_plan_keeps_target_out_of_winner_exchange(
-    spark, tmp_path
-):
-    """Above the size threshold the COW merge must decide winners via
-    broadcast joins: the only hashpartitioning exchanges in the commit
-    plan are batch-sized (dedup) plus the final write clustering — the
-    full-width target must NOT feed a winner aggregation exchange."""
-    from pyspark.sql import functions as F
-
-    from clinical_trials_etl_spark.cdc import apply as apply_mod
-    from clinical_trials_etl_spark.cdc.replay import create_pages_table
-    from clinical_trials_etl_spark.datagen.changelog import (
-        LogSpec,
-        changelog_df,
-    )
-    from clinical_trials_etl_spark.lake.table import LakeTable
-
-    table = create_pages_table(spark, str(tmp_path / "t"), n_buckets=4)
-    base = changelog_df(spark, LogSpec(n_events=60, n_hosts=5, seed=7))
-    apply_mod.apply_batch(table, base, "seed", n_salt=1, merge_mode="cow")
-
-    batch = changelog_df(
-        spark, LogSpec(n_events=40, n_hosts=5, seed=8, lsn_offset=60)
-    )
-    snap = table.snapshot()
-    key = table.key_field(snap)
-    from clinical_trials_etl_spark.lake.table import SYS_BUCKET, SYS_DELETED, SYS_LSN
-
-    src = apply_mod.normalize_batch(batch, table.fields(snap)).select(
-        *[f["name"] for f in table.fields(snap)],
-        F.col("lsn").cast("long").alias(SYS_LSN),
-        (F.col("op") == "D").alias(SYS_DELETED),
-    ).withColumn(SYS_BUCKET, table.bucket_expr(F.col(key)))
-
-    old = LakeTable.COW_BROADCAST_BYTES
-    LakeTable.COW_BROADCAST_BYTES = 0  # force the broadcast plan
-    try:
-        merged = table._cow_merged(
-            snap, src, key, set(range(4)), apply_mod.fill_text_post_winner
-        )
-    finally:
-        LakeTable.COW_BROADCAST_BYTES = old
-    plan = _plan(merged)
-    assert plan.count("BroadcastHashJoin") >= 3, plan
-    assert "max_by" in plan  # the batch-side dedup
-    # The winner decision must NOT be an aggregation over
-    # union(target, batch) — in the broadcast plan the Union is the
-    # plan ROOT (keep_target U keep_batch) and every aggregation sits
-    # on the batch side below it. The old shape (Aggregate over Union)
-    # put the full-width target through a table-sized exchange + sort.
-    lp = merged._jdf.queryExecution().optimizedPlan().toString()
-    lines = [ln for ln in lp.splitlines() if ln.strip()]
-    root_zone = "\n".join(lines[:2])
-    assert "Union" in root_zone, f"Union must be the plan root:\n{lp}"
-    first_agg = next(
-        (i for i, ln in enumerate(lines) if "Aggregate" in ln), None)
-    first_union = next(
-        (i for i, ln in enumerate(lines) if "Union" in ln))
-    assert first_agg is None or first_agg > first_union, (
-        "winner aggregation above the Union — target is being "
-        f"aggregated again:\n{lp}"
-    )
 
 
 def test_mor_read_columns_prunes_the_parquet_scan(spark, tmp_path):

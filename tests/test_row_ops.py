@@ -84,6 +84,21 @@ def test_delete_where_removes_matches_only(spark, tmp_path, mode):
     assert all(after[u] == before[u] for u in after)
 
 
+def test_row_op_predicate_columns_resolve_case_insensitively(
+        spark, tmp_path):
+    """``HOST`` names column ``host`` the way Spark resolves it: the
+    probe's narrow projection must carry the column, or the predicate
+    cannot resolve against it."""
+    t = _make(spark, tmp_path)
+    before = _state(t)
+    assert t.delete_where("HOST = 'h1'")["deleted_rows"] == 3
+    assert set(_state(t)) == {u for u, (h, _v) in before.items()
+                              if h == "h0"}
+    assert t.update_where("Host = 'h0'", {"val": "VAL + 1"})[
+        "updated_rows"] == 3
+    assert _state(t)["u2"] == ("h0", 21)
+
+
 def test_delete_where_column_predicate_and_empty_match(spark, tmp_path):
     t = _make(spark, tmp_path)
     v0 = t.current_version()
@@ -375,8 +390,7 @@ def test_row_ops_randomized_fold_equivalence(spark, tmp_path):
             if kind == "merge":
                 batch_n += 1
                 t.merge(_batch(spark, upstream(rng.randrange(1, 6))),
-                        batch_id=f"e-{batch_n}", mode=mode,
-                        source_unique=False)
+                        batch_id=f"e-{batch_n}", mode=mode)
             elif kind == "compact":
                 t.compact()
             elif kind == "delete":

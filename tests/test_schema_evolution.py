@@ -78,27 +78,10 @@ def test_pre_upgrade_snapshot_infers_registry_version(spark, tmp_path):
     assert rows["u1"]["language"] == "fr"
 
 
-@pytest.mark.parametrize("bcast_thresh", [1 << 60, 0],
-                         ids=["agg_plan", "broadcast_plan"])
-def test_mid_stream_evolution_preserves_old_rows(spark, tmp_path,
-                                                 bcast_thresh):
+def test_mid_stream_evolution_preserves_old_rows(spark, tmp_path):
     """v1 batch, then v3 batch (rename), then v4 batch (widen): rows
     written under the old schema must read back under the new names and
     types without a rewrite."""
-    from clinical_trials_etl_spark.lake.table import LakeTable
-
-    # run under both COW winner plans: the broadcast plan reads the
-    # target twice (slim + full) across MIXED physical file schemas
-    # (pre-rename/pre-widen files) — evolution must survive both
-    old_thresh = LakeTable.COW_BROADCAST_BYTES
-    LakeTable.COW_BROADCAST_BYTES = bcast_thresh
-    try:
-        _run_mid_stream_evolution(spark, tmp_path)
-    finally:
-        LakeTable.COW_BROADCAST_BYTES = old_thresh
-
-
-def _run_mid_stream_evolution(spark, tmp_path):
     table = create_pages_table(spark, str(tmp_path / "tbl"), n_buckets=4)
 
     b1 = spark.createDataFrame(
