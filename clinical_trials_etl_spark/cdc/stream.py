@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
@@ -62,6 +63,8 @@ class MetricsListener(StreamingQueryListener):
 
     def __init__(self):
         self.progress: list[dict] = []
+        self._terminated: set[str] = set()
+        self._cond = threading.Condition()
 
     def onQueryStarted(self, event):
         pass
@@ -80,7 +83,17 @@ class MetricsListener(StreamingQueryListener):
         )
 
     def onQueryTerminated(self, event):
-        pass
+        with self._cond:
+            self._terminated.add(str(event.id))
+            self._cond.notify_all()
+
+    def wait_terminated(self, query_id, timeout_s: float = 10.0) -> bool:
+        """Block until the listener bus has delivered ``query_id``'s
+        termination event. The bus delivers a query's events in order,
+        so every progress event of the query has arrived by then."""
+        with self._cond:
+            return self._cond.wait_for(
+                lambda: str(query_id) in self._terminated, timeout_s)
 
     def onQueryIdle(self, event):
         pass
@@ -336,17 +349,10 @@ def run_stream(
                     f"checkpointed; the resumed stream re-delivers "
                     f"this batch") from exc
             raise
-        # listener events are delivered asynchronously; drain before flush
-        import time as _time
-
-        stable, streak = len(listener.progress), 0
-        for _ in range(40):
-            _time.sleep(0.25)
-            now = len(listener.progress)
-            streak = streak + 1 if now == stable else 0
-            stable = now
-            if streak >= 4 and now > 0:
-                break
+        # listener events are delivered asynchronously; drain before
+        # flush by waiting for the query's termination event, which the
+        # bus delivers after all of the query's progress events
+        listener.wait_terminated(query.id)
     finally:
         spark.streams.removeListener(listener)
         if metrics_path:

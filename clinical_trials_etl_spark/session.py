@@ -11,6 +11,16 @@ Scale notes (100 TB / 1000-executor design):
   left overridable via env.
 - Arrow execution enabled: every Python-side kernel in this repo is an
   Arrow-vectorized pandas UDF (no per-row Python), per BASELINE.json.
+- PySpark's DataFrame debugging is off: with it on, every DataFrame and
+  Column API call captures the Python call stack and makes about five
+  extra driver-to-JVM round trips to record it. A commit builds its
+  plan from hundreds of such calls, so this is per-commit fixed cost;
+  error messages lose only the Python line of the failing expression.
+- Parallel file listing starts at 1024 paths, not Spark's 32: the lake
+  reads explicit data-file lists from its manifests, and above the
+  threshold Spark spends a whole listing job (~0.4 s locally) on
+  stat-ing them before every read. On an object store, where a driver
+  stat is a remote call, pass a lower value through ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -47,6 +57,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "1024")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # INT96 timestamps carry no parquet min/max statistics (their
         # ordering is undefined by the spec); TIMESTAMP_MICROS restores

@@ -178,12 +178,14 @@ def test_delta_merge_writes_one_winner_per_key(spark, tmp_path):
 
 def test_replay_applies_segments_in_numeric_order(spark, tmp_path):
     """segment=10 replays after segment=2, not before: each commit's
-    lineage names its segment, in log order."""
+    lineage names its segments, in log order (four per commit, so a
+    name-sorted log would commit segment=10 in the first batch)."""
     log = str(tmp_path / "wal")
     write_changelog_segments(
         spark, LogSpec(n_events=240, n_hosts=4, seed=5), log,
-        n_segments=12)
-    table = replay(spark, log, str(tmp_path / "tbl"), n_buckets=2)
+        n_segments=12, files_per_segment=1)
+    table = replay(spark, log, str(tmp_path / "tbl"),
+                   segments_per_batch=4, n_buckets=2)
     segs = [s for e in table.lineage() for s in e.get("segments", [])]
     assert segs == [f"segment={i}" for i in range(12)]
 
