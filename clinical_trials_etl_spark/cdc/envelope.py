@@ -767,7 +767,11 @@ def compact_envelope_windows(source: LakeTable, out_dir: str,
     # another complete window — harmless to consumers (idempotent
     # fold) but it blocks the span from ever forming a run again, and
     # every late joiner replays it twice. Finish the interrupted
-    # delete here.
+    # delete here, and drop the temp output of a compaction that died
+    # before its rename.
+    for fn in os.listdir(out_dir) if os.path.isdir(out_dir) else []:
+        if fn.startswith(".compact-tmp-"):
+            shutil.rmtree(os.path.join(out_dir, fn), ignore_errors=True)
     all_wins = _list_complete_windows(out_dir)
     swept = 0
     for a, b, fn in all_wins:
@@ -840,10 +844,13 @@ def compact_envelope_windows(source: LakeTable, out_dir: str,
             lines.filter(bad).select("value"))
         a, b = run[0][0], run[-1][1]
         final = os.path.join(out_dir, f"window-{a:08d}-{b:08d}")
-        if os.path.exists(final):
+        if os.path.exists(os.path.join(final, "_SUCCESS")):
             # a prior wider-retry publish already covers this exact
             # span — its window supersedes the constituents anyway
             continue
+        # an unmarked directory of that name is a crashed publish:
+        # nothing reads it, so it gives way to the squashed window
+        shutil.rmtree(final, ignore_errors=True)
         tmp = os.path.join(out_dir, f".compact-tmp-{uuid.uuid4().hex}")
         # output file count left to AQE partition coalescing — the
         # winner set is O(live keys in span) and must come out in few

@@ -362,5 +362,5 @@ def run_stream(
 
 def lineage_report(table: LakeTable) -> list[dict]:
     """Per-commit lineage: epoch/segment -> merge stats, in commit
-    order (one sidecar entry per committed snapshot)."""
+    order (the entry each committed snapshot embeds)."""
     return [{"commit_index": i, **e} for i, e in enumerate(table.lineage())]

@@ -26,7 +26,8 @@ Scale notes (what is driver-side and why that is correct):
   ``LakeTable.STATS_DISTRIBUTED_MIN_FILES`` files and one distributed
   ``mapInPandas`` job above it — the same threshold and job shape as
   the manifest-stats collector, so a 10^5-file table never stalls the
-  driver on stat calls.
+  driver on stat calls. The threshold is a class attribute; set it on
+  ``LakeTable`` or on one table instance (object stores want ~100).
 - ``partitions`` is a Spark aggregation over ``files`` — never a
   second metadata pass.
 """
@@ -67,13 +68,6 @@ _CORE_LINEAGE_KEYS = {
 }
 
 
-def _iter_snapshots(table: LakeTable):
-    for fn in sorted(os.listdir(table.meta_dir)):
-        if fn.startswith("snap-") and fn.endswith(".json"):
-            with open(os.path.join(table.meta_dir, fn)) as f:
-                yield json.load(f)
-
-
 def snapshots_df(table: LakeTable) -> DataFrame:
     """One row per committed snapshot (Iceberg ``tbl.snapshots`` /
     Delta ``DESCRIBE HISTORY`` analog), with the commit's lineage
@@ -81,9 +75,9 @@ def snapshots_df(table: LakeTable) -> DataFrame:
     the raw epoch double rides alongside for arithmetic."""
     cur = table.current_version()
     rows = []
-    for snap in _iter_snapshots(table):
+    for snap in table._snapshots():
         v = snap["version"]
-        lin = table._lineage_entry(v) or {}
+        lin = snap.get("lineage") or {}
         touched = lin.get("touched_buckets")
         rows.append((
             v,
@@ -113,7 +107,7 @@ def history_df(table: LakeTable) -> DataFrame:
     a new version rather than moving a branch pointer), so ancestry
     is computed by the parent walk, not assumed."""
     ancestors: set[int] = set()
-    by_version = {s["version"]: s for s in _iter_snapshots(table)}
+    by_version = {s["version"]: s for s in table._snapshots()}
     v = table.current_version()
     while v is not None and v in by_version:
         ancestors.add(v)
@@ -294,9 +288,9 @@ def lineage_df(table: LakeTable) -> DataFrame:
     ``detail_json`` — the per-partition lineage surface
     (offset-range -> version -> row counts) queryable with SQL."""
     rows = []
-    for snap in _iter_snapshots(table):
+    for snap in table._snapshots():
         v = snap["version"]
-        e = table._lineage_entry(v)
+        e = snap.get("lineage")
         if e is None:
             continue
         touched = e.get("touched_buckets")

@@ -36,11 +36,15 @@ implemented Spark-first:
   arbitrary ids. Snapshot metadata therefore does NOT grow O(commits).
 - **Bounded snapshot metadata**: file entries live in immutable
   per-commit manifest files; the snapshot carries only a
-  bucket -> manifest pointer map (O(n_buckets), fixed) and per-commit
-  lineage goes to a sidecar (``_meta/lineage/``), so each commit writes
-  O(touched buckets) new metadata instead of rewriting the full file
-  list and the whole history. Bucket-pruned reads load only the
-  manifests of the buckets they touch.
+  bucket -> manifest pointer map (O(n_buckets), fixed) plus the
+  commit's own lineage entry (never the whole history), so each commit
+  writes O(touched buckets) new metadata. Bucket-pruned reads load
+  only the manifests of the buckets they touch.
+- **One commit path**: every operation after ``create`` commits through
+  ``_commit``, which builds the next snapshot from its base (version,
+  parent, timestamp, embedded lineage, exactly-once ledger, correction
+  fences), links it create-if-absent and, for the two sanctioned
+  concurrent-writer pairs, re-bases and retries a lost race.
 
 On a cluster with a real Iceberg catalog the same apply code path can
 emit ``MERGE INTO`` SQL instead (see ``cdc/apply.py``); this class is
@@ -127,11 +131,10 @@ def _fences_entry(parent: dict, add_lsn: int | None,
                   version: int) -> dict:
     """``correction_fences`` snapshot entry: ``[lsn, commit_version]``
     pairs carried forward from the parent, plus this commit's new
-    fence when it is a lake-side correction. Maintenance commits copy
-    the snapshot dict wholesale, so only the two merge constructors
-    need this. Bounded by the number of ``update_where`` calls ever
-    made — corrections are rare operator actions, not a per-batch
-    path."""
+    fence when it is a lake-side correction. ``LakeTable._commit``
+    builds every commit's entry through here. Bounded by the number of
+    ``update_where`` calls ever made — corrections are rare operator
+    actions, not a per-batch path."""
     fences = [list(p) for p in parent.get("correction_fences", [])]
     if add_lsn is not None:
         fences.append([int(add_lsn), int(version)])
@@ -139,9 +142,9 @@ def _fences_entry(parent: dict, add_lsn: int | None,
 
 
 # bounded optimistic-concurrency retries for the rebasing commit path
-# (compaction vs a live ingest stream); each retry re-reads the
-# current snapshot, so exhausting them means the table is committing
-# faster than a metadata rebase can keep up — rerun the compaction
+# (compaction vs a live ingest stream, and the reverse); each retry
+# re-reads the current snapshot, so exhausting them means the table is
+# committing faster than a metadata rebase can keep up — rerun the op
 _COMMIT_RETRIES = 5
 
 # column types whose parquet min/max stats the manifest records (the
@@ -344,7 +347,6 @@ class LakeTable:
             raise ValueError("key_bloom_bits must be a multiple of 64")
         table = cls(spark, root)
         os.makedirs(table.meta_dir, exist_ok=True)
-        os.makedirs(table.lineage_dir, exist_ok=True)
         os.makedirs(table.data_dir, exist_ok=True)
         snap = {
             "version": 0,
@@ -390,16 +392,6 @@ class LakeTable:
         os.replace(tmp, path)
         return path
 
-    def _manifest_path(self, version: int) -> str:
-        """Legacy shared-name manifest location — READ fallback only
-        (tables written before manifests went unique-path); no writer
-        targets it anymore."""
-        return os.path.join(self.meta_dir, f"manifest-{version:08d}.json")
-
-    @property
-    def lineage_dir(self) -> str:
-        return os.path.join(self.meta_dir, "lineage")
-
     def _write_snapshot(self, snap: dict) -> None:
         """Commit = atomically CREATE snap-<version>.json (write the
         full content to a temp file, then hard-link it into place —
@@ -434,6 +426,69 @@ class LakeTable:
         with open(cur_tmp, "w") as f:
             f.write(str(snap["version"]))
         os.replace(cur_tmp, os.path.join(self.meta_dir, "_current"))
+
+    def _next_snapshot(self, base: dict, changes: dict | None = None,
+                       batch_id: str | None = None,
+                       fence_lsn: int | None = None) -> dict:
+        """The snapshot that follows ``base``: ``base``'s state with
+        ``changes`` applied, the next version number, ``batch_id``
+        recorded in the exactly-once ledger and ``fence_lsn`` appended
+        to the correction fences. Carries no lineage entry — that is
+        the committer's to attach (``_commit``, or the WAP staging
+        record)."""
+        state = {**base, **(changes or {})}
+        version = base["version"] + 1
+        snap = {k: v for k, v in state.items()
+                if k not in ("lineage", "fork", "correction_fences")}
+        snap.update(
+            version=version,
+            parent=base["version"],
+            batch_hwm=dict(state["batch_hwm"]),
+            applied_recent=list(state["applied_recent"]),
+            **_fences_entry(state, fence_lsn, version),
+            committed_at=time.time(),
+        )
+        if batch_id is not None:
+            self._record_applied(snap, batch_id)
+        return snap
+
+    def _commit(self, base: dict, lineage: dict,
+                changes: dict | Callable[[dict], dict] | None = None,
+                batch_id: str | None = None,
+                fence_lsn: int | None = None,
+                rebase: Callable[[], dict] | None = None) -> dict | None:
+        """Commit the snapshot that follows ``base`` — the one commit
+        path of every operation after ``create``. ``changes`` (a dict,
+        or a function of the base when it depends on it) names what
+        this commit changes; everything else carries over from the
+        base. The snapshot embeds ``lineage``, the table's only copy
+        of it, and is linked create-if-absent by ``_write_snapshot``,
+        which then advances ``_current``.
+
+        A lost race raises CommitConflict unless ``rebase`` is given:
+        it validates that the winners left this commit's work valid
+        and returns the snapshot to re-build on (raising CommitConflict
+        when they did not), up to ``_COMMIT_RETRIES`` attempts. A
+        rebased commit records ``rebases`` in its lineage. Returns the
+        committed snapshot, or None when a rebase found ``batch_id``
+        already applied by the winner (nothing committed)."""
+        for attempt in range(_COMMIT_RETRIES):
+            delta = changes(base) if callable(changes) else changes
+            snap = self._next_snapshot(base, delta, batch_id, fence_lsn)
+            snap["lineage"] = (dict(lineage, rebases=attempt) if attempt
+                               else lineage)
+            try:
+                self._write_snapshot(snap)
+                return snap
+            except CommitConflict:
+                if rebase is None:
+                    raise
+            base = rebase()
+            if batch_id is not None and self.is_applied(batch_id, base):
+                return None
+        raise CommitConflict(
+            f"{lineage['type']} lost the commit race {_COMMIT_RETRIES} "
+            f"times in a row — rerun it")
 
     def current_version(self) -> int:
         with open(os.path.join(self.meta_dir, "_current")) as f:
@@ -476,14 +531,8 @@ class LakeTable:
         if hasattr(ts, "timestamp"):
             ts = ts.timestamp()
         ts = float(ts)
-        best = -1
-        for fn in os.listdir(self.meta_dir):
-            if not (fn.startswith("snap-") and fn.endswith(".json")):
-                continue
-            with open(os.path.join(self.meta_dir, fn)) as f:
-                snap = json.load(f)
-            if snap["committed_at"] <= ts and snap["version"] > best:
-                best = snap["version"]
+        best = max((s["version"] for s in self._snapshots()
+                    if s["committed_at"] <= ts), default=-1)
         if best < 0:
             raise ValueError(
                 f"no snapshot existed at ts={ts} (table created later)")
@@ -879,15 +928,11 @@ class LakeTable:
             **({"feed_opaque": True} if rolled_back else {}),
             **({"rebucketed": True} if rebucketed else {}),
         }
-        snap2 = dict(head_snap)
-        snap2["version"] = version
-        snap2["parent"] = cur
-        snap2["manifests"] = new_manifests
-        snap2["committed_at"] = time.time()
-        snap2.pop("fork", None)
-        snap2["lineage"] = lin
-        self._write_snapshot(snap2)  # CommitConflict on a lost race
-        self._append_lineage(version, lin)
+        # main's next state IS the branch head's; CommitConflict on a
+        # lost race
+        self._commit(self.snapshot(cur), lin, {
+            **head_snap, "manifests": new_manifests,
+            "correction_fences": head_snap.get("correction_fences", [])})
         self.drop_branch(name, force=True)
         return {"published": name, "version": version, "commits": head,
                 "net_files": sum(len(v) for v in net.values())}
@@ -905,12 +950,8 @@ class LakeTable:
             if not os.path.isdir(bt.meta_dir):
                 continue
             out |= bt._staged_file_paths()
-            for fn in os.listdir(bt.meta_dir):
-                if fn.startswith("snap-") and fn.endswith(".json"):
-                    with open(os.path.join(bt.meta_dir, fn)) as f:
-                        snap = json.load(f)
-                    for e in self.files(snap):
-                        out.add(e["path"])
+            out.update(e["path"] for snap in bt._snapshots()
+                       for e in self.files(snap))
         return out
 
     # --------------------------------------------- batch idempotence
@@ -942,61 +983,26 @@ class LakeTable:
 
     # ------------------------------------------------------- lineage
 
-    def _append_lineage(self, version: int, entry: dict) -> None:
-        """Per-commit lineage sidecar — O(1) per commit instead of
-        rewriting the whole history into every snapshot.
-
-        Ordering contract: callers write the SNAPSHOT first (the
-        atomic create-if-absent link that decides the commit race) and
-        the sidecar second. The authoritative copy of the entry rides
-        INSIDE the snapshot (``snap["lineage"]``), so a crash between
-        the two writes loses nothing and a lineage file can never
-        describe a version that a competing commit actually won — the
-        sidecar is a listing convenience, reconciled from snapshots by
-        ``_lineage_entry``."""
-        os.makedirs(self.lineage_dir, exist_ok=True)
-        path = os.path.join(self.lineage_dir, f"lin-{version:08d}.json")
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(entry, f, indent=1)
-        os.replace(tmp, path)
-
     def _lineage_entry(self, version: int) -> dict | None:
-        """The single lineage entry for a commit, or None (v1 CREATE
-        and snapshot-expiry write no entry). The snapshot's embedded
-        copy is authoritative (committed atomically with the version);
-        the sidecar covers tables written before embedding existed."""
-        snap_path = self._snap_path(version)
-        if os.path.exists(snap_path):
-            with open(snap_path) as f:
-                snap = json.load(f)
-            if "lineage" in snap:
-                return snap["lineage"]
-        path = os.path.join(self.lineage_dir, f"lin-{version:08d}.json")
-        if not os.path.exists(path):
-            return None
-        with open(path) as f:
-            return json.load(f)
+        """The single lineage entry for a commit, or None (version 0 —
+        ``create``/``create_branch`` — has none). ``_commit`` embeds
+        the entry in the snapshot it links, so it is committed
+        atomically with the version and is the only copy."""
+        return self.snapshot(version).get("lineage")
 
     def lineage(self) -> list[dict]:
-        """All lineage entries in commit order. Resolved per version
-        through ``_lineage_entry`` (snapshot-embedded copy first), so a
-        crash between a commit and its sidecar write cannot drop the
-        committed entry from the listing; sidecar-only entries (from
-        snapshots later removed by hand) still appear."""
-        versions: set[int] = set()
-        if os.path.isdir(self.lineage_dir):
-            for fn in os.listdir(self.lineage_dir):
-                if fn.startswith("lin-") and fn.endswith(".json"):
-                    versions.add(int(fn[4:-5]))
-        for fn in os.listdir(self.meta_dir):
-            if fn.startswith("snap-") and fn.endswith(".json"):
-                versions.add(int(fn[5:-5]))
+        """All lineage entries in commit order, read from the
+        snapshots that embed them (snapshot JSONs are never deleted —
+        retention removes data files only — so no entry is lost)."""
+        return [s["lineage"] for s in self._snapshots() if "lineage" in s]
+
+    def _snapshots(self) -> list[dict]:
+        """Every snapshot in the metadata dir, in version order."""
         out = []
-        for v in sorted(versions):
-            e = self._lineage_entry(v)
-            if e is not None:
-                out.append(e)
+        for fn in sorted(os.listdir(self.meta_dir)):
+            if fn.startswith("snap-") and fn.endswith(".json"):
+                with open(os.path.join(self.meta_dir, fn)) as f:
+                    out.append(json.load(f))
         return out
 
     # ---------------------------------------------------------- files
@@ -1075,22 +1081,16 @@ class LakeTable:
         """Commit a schema-only snapshot (add / rename / widen already
         validated by cdc/registry.py)."""
         snap = self.snapshot()
-        snap2 = dict(snap)
-        snap2["version"] = snap["version"] + 1
-        snap2["parent"] = snap["version"]
-        snap2["schema"] = {
-            "fields": new_fields,
-            "key": snap["schema"]["key"],
-            "registry_ver": (
-                registry_ver
-                if registry_ver is not None
-                else self.registry_version(snap)
-            ),
-        }
-        lin = {"type": "schema-evolution", "note": note}
-        snap2["lineage"] = lin
-        self._write_snapshot(snap2)
-        self._append_lineage(snap2["version"], lin)
+        self._commit(snap, {"type": "schema-evolution", "note": note}, {
+            "schema": {
+                "fields": new_fields,
+                "key": snap["schema"]["key"],
+                "registry_ver": (
+                    registry_ver
+                    if registry_ver is not None
+                    else self.registry_version(snap)
+                ),
+            }})
 
     # ------------------------------------------------------------ read
 
@@ -1546,8 +1546,7 @@ class LakeTable:
             if lin is None or lin.get("type") not in (
                     "merge", "fast_forward"):
                 continue  # maintenance/evolution: no logical change
-            with open(lin.get("commit_manifest")
-                      or self._manifest_path(v)) as f:
+            with open(lin["commit_manifest"]) as f:
                 man = json.load(f)
             entries = [e for group in man["files"].values() for e in group]
             if not entries:
@@ -1761,8 +1760,7 @@ class LakeTable:
             if lin is None or lin.get("type") not in (
                     "merge", "fast_forward"):
                 continue
-            with open(lin.get("commit_manifest")
-                      or self._manifest_path(v)) as f:
+            with open(lin["commit_manifest"]) as f:
                 man = json.load(f)
             entries = [e for group in man["files"].values()
                        for e in group]
@@ -2075,9 +2073,8 @@ class LakeTable:
         # rerun the compaction.
         consumed = {str(b): list(snap["manifests"].get(str(b), []))
                     for b in fat}
-        base = snap
-        for attempt in range(_COMMIT_RETRIES):
-            version = base["version"] + 1
+
+        def compacted(base: dict) -> dict:
             manifests = {b: list(v) for b, v in base["manifests"].items()}
             for b in fat:
                 sb = str(b)
@@ -2088,23 +2085,13 @@ class LakeTable:
                     manifests[sb] = rebased
                 else:
                     manifests.pop(sb, None)
-            snap2 = dict(base)
-            snap2["version"] = version
-            snap2["parent"] = base["version"]
-            snap2["manifests"] = manifests
-            snap2["committed_at"] = time.time()
-            snap2["lineage"] = lin
-            try:
-                self._write_snapshot(snap2)
-            except CommitConflict:
-                base = self._rebase_rewrite_base(snap, fat, consumed)
-                continue
-            self._append_lineage(version, lin)
-            return {"compacted_buckets": len(fat), "version": version,
-                    "rebases": attempt}
-        raise CommitConflict(
-            f"compaction lost the commit race {_COMMIT_RETRIES} times "
-            f"in a row — rerun it")
+            return {"manifests": manifests}
+
+        snap2 = self._commit(
+            snap, lin, compacted,
+            rebase=lambda: self._rebase_rewrite_base(snap, fat, consumed))
+        return {"compacted_buckets": len(fat), "version": snap2["version"],
+                "rebases": snap2["lineage"].get("rebases", 0)}
 
     def _rebase_rewrite_base(self, snap0: dict, fat: set[int],
                              consumed: dict[str, list[str]]) -> dict:
@@ -2184,38 +2171,21 @@ class LakeTable:
         new_files = self._collect_written_files(out_dir, phys)[0]
         self._attach_key_blooms(snap, new_files)
 
-        version = snap["version"] + 1
         by_bucket: dict[str, list[dict]] = {}
         for fmeta in new_files:
             by_bucket.setdefault(str(fmeta["bucket"]), []).append(fmeta)
-        manifest_path = self._write_manifest(version, by_bucket)
-        snap2 = dict(snap)
-        snap2["version"] = version
-        snap2["parent"] = snap["version"]
-        snap2["n_buckets"] = n_buckets
-        # the old layout's manifests are fully superseded
-        snap2["manifests"] = {b: [manifest_path] for b in by_bucket}
-        snap2["committed_at"] = time.time()
+        manifest_path = self._write_manifest(snap["version"] + 1, by_bucket)
         lin = {
             "type": "rebucket",
             "from": snap["n_buckets"],
             "to": n_buckets,
         }
-        snap2["lineage"] = lin
-        self._write_snapshot(snap2)
-        self._append_lineage(version, lin)
-        out = {"rebucketed": True, "version": version,
-               "n_buckets": n_buckets}
-        iceberg_table = os.environ.get("SPARK_GRAFT_ICEBERG_TABLE")
-        if iceberg_table:
-            from clinical_trials_etl_spark.lake import iceberg_sql
-
-            out["iceberg_sql"] = [
-                iceberg_sql.replace_partition_statement(
-                    iceberg_table, key, snap["n_buckets"], n_buckets
-                )
-            ]
-        return out
+        # the old layout's manifests are fully superseded
+        snap2 = self._commit(snap, lin, {
+            "n_buckets": n_buckets,
+            "manifests": {b: [manifest_path] for b in by_bucket}})
+        return {"rebucketed": True, "version": snap2["version"],
+                "n_buckets": n_buckets}
 
     def expire_snapshots(self, keep_last: int = 2,
                          older_than_s: float | None = None) -> dict:
@@ -2278,21 +2248,17 @@ class LakeTable:
         Iceberg snapshots-metadata analog): one row per EXISTING
         snapshot with its commit timestamp, parent, operation type and
         the commit's lineage detail (epoch, touched buckets, lsn
-        range, row counts — whatever that operation recorded).
-        Snapshots removed by retention simply don't appear; their
-        lineage sidecars remain available via ``lineage()``. Driver-
-        side metadata only — no Spark job. Rows carry the tags pinning
-        their version, if any."""
+        range, row counts — whatever that operation recorded), read
+        from the lineage entry the snapshot embeds. Retention deletes
+        data files, never snapshot JSONs, so every commit appears.
+        Driver-side metadata only — no Spark job. Rows carry the tags
+        pinning their version, if any."""
         by_version: dict[int, list[str]] = {}
         for name, v in self.tags().items():
             by_version.setdefault(v, []).append(name)
         out: list[dict] = []
-        for fn in sorted(os.listdir(self.meta_dir), reverse=True):
-            if not (fn.startswith("snap-") and fn.endswith(".json")):
-                continue
-            with open(os.path.join(self.meta_dir, fn)) as f:
-                snap = json.load(f)
-            lin = snap.get("lineage") or self._lineage_entry(snap["version"])
+        for snap in reversed(self._snapshots()):
+            lin = snap.get("lineage")
             out.append({
                 "version": snap["version"],
                 "parent": snap["parent"],
@@ -2342,15 +2308,13 @@ class LakeTable:
                 raise ValueError(
                     f"v{version} is no longer readable (files removed "
                     f"by expire_snapshots) — cannot roll back to it")
-        snap2 = dict(target)
-        snap2["version"] = cur + 1
-        snap2["parent"] = cur
-        snap2["committed_at"] = time.time()
-        lin = {"type": "rollback", "to": version}
-        snap2["lineage"] = lin  # replace the target's embedded entry
-        self._write_snapshot(snap2)
-        self._append_lineage(cur + 1, lin)
-        return {"rolled_back_to": version, "version": cur + 1}
+        # the whole state — schema, layout, files, ledger and fences —
+        # is the target's
+        snap2 = self._commit(
+            self.snapshot(cur), {"type": "rollback", "to": version},
+            {**target,
+             "correction_fences": target.get("correction_fences", [])})
+        return {"rolled_back_to": version, "version": snap2["version"]}
 
     def remove_orphans(self, older_than_s: float = 86400.0) -> dict:
         """Delete data files NO existing snapshot references (Iceberg
@@ -2376,13 +2340,8 @@ class LakeTable:
         self._require_main("remove_orphans")
         referenced: set[str] = (self._staged_file_paths()
                                 | self._branch_file_paths())
-        for fn in os.listdir(self.meta_dir):
-            if not (fn.startswith("snap-") and fn.endswith(".json")):
-                continue
-            with open(os.path.join(self.meta_dir, fn)) as f:
-                snap = json.load(f)
-            for e in self.files(snap):
-                referenced.add(e["path"])
+        referenced.update(e["path"] for snap in self._snapshots()
+                          for e in self.files(snap))
         cutoff = time.time() - older_than_s
         removed = 0
         for dirpath, _dirs, files in os.walk(self.data_dir, topdown=False):
@@ -2429,13 +2388,12 @@ class LakeTable:
     # 4096 files — fixed job-launch cost) while serial grows linearly
     # at ~0.19 ms/file, so the local crossover is ~10^4 files. The
     # default keeps micro-batch merges and mid-size compactions on the
-    # cheap serial path; deployments on object storage should set
-    # SPARK_GRAFT_STATS_DISTRIBUTED_MIN_FILES much lower (~100) —
-    # per-footer GET latency there is ~100x local, which is where a
-    # full-table rebucket at 10^5 files would otherwise stall the
-    # driver for minutes (VERDICT r4 #1).
-    STATS_DISTRIBUTED_MIN_FILES = int(
-        os.environ.get("SPARK_GRAFT_STATS_DISTRIBUTED_MIN_FILES", "8192"))
+    # cheap serial path; deployments on object storage should lower it
+    # (~100) on the class or on one table's instance — per-footer GET
+    # latency there is ~100x local, which is where a full-table
+    # rebucket at 10^5 files would otherwise stall the driver for
+    # minutes (VERDICT r4 #1).
+    STATS_DISTRIBUTED_MIN_FILES = 8192
 
     def _footer_stats_distributed(
         self, paths: list[str], stat_cols: set[str]
@@ -2768,7 +2726,7 @@ class LakeTable:
         if wap_id is None:
             manifest_path = self._write_manifest(version, by_bucket)
         else:
-            # staged manifest lives outside the numbered chain — the
+            # staged manifest lives outside the manifest chain — the
             # version number is provisional until publish, and
             # manifests are path-referenced everywhere, so the staged
             # path is first-class once the snapshot commits
@@ -2780,33 +2738,20 @@ class LakeTable:
                           indent=1)
             os.replace(tmp, manifest_path)
 
-        manifests = {b: list(v) for b, v in snap["manifests"].items()}
-        if mode == "cow":
-            # rewritten buckets: this manifest becomes the only layer
-            for b in touched:
-                manifests.pop(str(b), None)
-            for b in by_bucket:
-                manifests[b] = [manifest_path]
-        else:
-            # delta: append a layer per touched bucket, keep the base
-            for b in by_bucket:
-                manifests.setdefault(b, []).append(manifest_path)
+        def layered(base: dict) -> dict:
+            manifests = {b: list(v) for b, v in base["manifests"].items()}
+            if mode == "cow":
+                # rewritten buckets: this manifest becomes the only layer
+                for b in touched:
+                    manifests.pop(str(b), None)
+                for b in by_bucket:
+                    manifests[b] = [manifest_path]
+            else:
+                # delta: append a layer per touched bucket, keep the base
+                for b in by_bucket:
+                    manifests.setdefault(b, []).append(manifest_path)
+            return {"manifests": manifests}
 
-        snap2 = {
-            "version": version,
-            "parent": snap["version"],
-            "schema": snap["schema"],
-            "n_buckets": snap["n_buckets"],
-            **({"key_bloom_bits": snap["key_bloom_bits"]}
-               if "key_bloom_bits" in snap else {}),
-            "manifests": manifests,
-            "batch_hwm": dict(snap["batch_hwm"]),
-            "applied_recent": list(snap["applied_recent"]),
-            **_fences_entry(snap, add_correction_fence, version),
-            "committed_at": time.time(),
-        }
-        if batch_id is not None:
-            self._record_applied(snap2, batch_id)
         lin_entry = {
             "type": "merge",
             "batch_id": batch_id,
@@ -2824,7 +2769,8 @@ class LakeTable:
                 "wap_id": wap_id,
                 "base_version": snap["version"],
                 "batch_id": batch_id,
-                "snap": snap2,
+                "snap": self._next_snapshot(snap, layered(snap), batch_id,
+                                            add_correction_fence),
                 "lineage": lin_entry,
                 "staged_at": time.time(),
             })
@@ -2835,68 +2781,30 @@ class LakeTable:
                 "merged_rows": merged_rows,
                 "touched_buckets": len(touched),
             }
-        snap2["lineage"] = lin_entry
-        # Commit, rebasing a DELTA merge over sanctioned maintenance
-        # rivals (the other direction of compact()'s rebase — together
-        # they make ingest + out-of-band maintenance race-free in both
-        # orders): a delta layer is just "these events, reconcile by
-        # max-LSN at read", so appending it on top of a compaction /
-        # expiry / GC / evolution / rollback winner is exactly "apply
-        # the batch to the winner's state". A rival MERGE stays a hard
-        # conflict (two ingest writers violate the
-        # single-writer-per-checkpoint contract). COW merges never
-        # rebase: their winner decision was computed against the base
-        # state and may be stale.
-        base, rebases = snap, 0
-        for _ in range(_COMMIT_RETRIES):
-            try:
-                self._write_snapshot(snap2)
-            except CommitConflict:
-                if mode != "delta":
-                    raise
-                rebases += 1
-                base = self._rebase_delta_merge_base(snap)
-                if batch_id is not None and self.is_applied(batch_id, base):
-                    return {"skipped": True, "version": base["version"]}
-                version = base["version"] + 1
-                # the already-written unique-path manifest is REUSED —
-                # its file list is exactly this batch's layer; only
-                # the snapshot pointers move to the new version
-                manifests = {b: list(v)
-                             for b, v in base["manifests"].items()}
-                for b in by_bucket:
-                    manifests.setdefault(b, []).append(manifest_path)
-                snap2 = {
-                    "version": version,
-                    "parent": base["version"],
-                    "schema": base["schema"],
-                    "n_buckets": base["n_buckets"],
-                    **({"key_bloom_bits": base["key_bloom_bits"]}
-                       if "key_bloom_bits" in base else {}),
-                    "manifests": manifests,
-                    "batch_hwm": dict(base["batch_hwm"]),
-                    "applied_recent": list(base["applied_recent"]),
-                    **_fences_entry(base, add_correction_fence,
-                                    version),
-                    "committed_at": time.time(),
-                    # rebase observability (bench/ops): how many times
-                    # this commit re-read and re-pointed before landing
-                    "lineage": dict(lin_entry, rebases=rebases),
-                }
-                if batch_id is not None:
-                    self._record_applied(snap2, batch_id)
-                continue
-            self._append_lineage(snap2["version"], snap2["lineage"])
-            return {
-                "skipped": False,
-                "version": snap2["version"],
-                "merged_rows": merged_rows,
-                "touched_buckets": len(touched),
-                "rebases": rebases,
-            }
-        raise CommitConflict(
-            f"merge lost the commit race {_COMMIT_RETRIES} times in a "
-            f"row — retry the batch")
+        # A DELTA merge that loses the race to a sanctioned maintenance
+        # rival rebases (the other direction of compact()'s rebase —
+        # together they make ingest + out-of-band maintenance race-free
+        # in both orders): a delta layer is just "these events,
+        # reconcile by max-LSN at read", so appending the already-
+        # written manifest on top of a compaction / expiry / GC /
+        # evolution / rollback winner is exactly "apply the batch to
+        # the winner's state". A rival MERGE stays a hard conflict (two
+        # ingest writers violate the single-writer-per-checkpoint
+        # contract). COW merges never rebase: their winner decision was
+        # computed against the base state and may be stale.
+        snap2 = self._commit(
+            snap, lin_entry, layered, batch_id, add_correction_fence,
+            rebase=((lambda: self._rebase_delta_merge_base(snap))
+                    if mode == "delta" else None))
+        if snap2 is None:  # the winner already applied this batch
+            return {"skipped": True, "version": self.current_version()}
+        return {
+            "skipped": False,
+            "version": snap2["version"],
+            "merged_rows": merged_rows,
+            "touched_buckets": len(touched),
+            "rebases": snap2["lineage"].get("rebases", 0),
+        }
 
     def _rebase_delta_merge_base(self, snap0: dict) -> dict:
         """Validate that a delta merge staged against ``snap0`` can
@@ -3254,9 +3162,7 @@ class LakeTable:
         bucket rows; filtering on ``_lsn == fence`` isolates the
         corrected ones in both modes). Returns None when the commit's
         files were expired — the guard then raises conservatively."""
-        lin = self._lineage_entry(version) or {}
-        man_path = (lin.get("commit_manifest")
-                    or self._manifest_path(version))
+        man_path = self._lineage_entry(version)["commit_manifest"]
         if not os.path.exists(man_path):
             return None
         with open(man_path) as f:
@@ -3356,9 +3262,9 @@ class LakeTable:
         the table meanwhile applied through another path degrades to
         an abort (exactly-once holds across the WAP seam).
 
-        The staged manifest is ADOPTED into the numbered manifest
-        chain (hard-linked to ``manifest-<version>.json``) and every
-        snapshot pointer rewritten to the numbered path BEFORE the
+        The staged manifest is ADOPTED into the manifest chain
+        (hard-linked to a unique ``manifest-<version>-<id>.json``)
+        and every snapshot pointer rewritten to that path BEFORE the
         snapshot commits. Committed snapshots therefore never
         reference a ``staged/`` path — so a later re-use of the same
         ``wap_id`` (a recurring 'nightly-audit' id) re-stages into a
@@ -3379,8 +3285,7 @@ class LakeTable:
                 f"staged wap {wap_id!r} was audited against "
                 f"v{rec['base_version']} but the table is at v{cur} — "
                 f"abort and re-stage on the current state")
-        snap2 = rec["snap"]
-        version = snap2["version"]
+        staged = rec["snap"]
         staged_man = self._staged_manifest_path(wap_id)
         # adopt the staged manifest into the chain at a UNIQUE path
         # (hard link — the staged copy is removed after commit), so a
@@ -3388,21 +3293,20 @@ class LakeTable:
         # never clobber a rival's manifest
         man_path = os.path.join(
             self.meta_dir,
-            f"manifest-{version:08d}-{uuid.uuid4().hex[:12]}.json")
+            f"manifest-{cur + 1:08d}-{uuid.uuid4().hex[:12]}.json")
         os.link(staged_man, man_path)
-        snap2["manifests"] = {
-            b: [man_path if p == staged_man else p for p in lst]
-            for b, lst in snap2["manifests"].items()
-        }
-        snap2["committed_at"] = time.time()
-        lin = {**rec["lineage"], "wap_id": wap_id,
-               "commit_manifest": man_path}
-        snap2["lineage"] = lin
-        self._write_snapshot(snap2)
-        self._append_lineage(version, lin)
+        # the staged snapshot was built on this same base: its state
+        # (ledger and fences included) is the commit's
+        snap2 = self._commit(
+            self.snapshot(cur),
+            {**rec["lineage"], "wap_id": wap_id,
+             "commit_manifest": man_path},
+            dict(staged, manifests={
+                b: [man_path if p == staged_man else p for p in lst]
+                for b, lst in staged["manifests"].items()}))
         os.remove(self._staged_path(wap_id))
         try:
-            os.remove(staged_man)  # the numbered hard link remains
+            os.remove(staged_man)  # the adopted hard link remains
         except OSError:
             pass
         return {
@@ -3431,15 +3335,8 @@ class LakeTable:
             own = {e["path"] for group in man["files"].values()
                    for e in group}
             if own:
-                referenced: set[str] = set()
-                for fn in os.listdir(self.meta_dir):
-                    if not (fn.startswith("snap-")
-                            and fn.endswith(".json")):
-                        continue
-                    with open(os.path.join(self.meta_dir, fn)) as f:
-                        snap = json.load(f)
-                    for e in self.files(snap):
-                        referenced.add(e["path"])
+                referenced = {e["path"] for snap in self._snapshots()
+                              for e in self.files(snap)}
                 for p in own - referenced:
                     try:
                         os.remove(p)

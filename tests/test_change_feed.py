@@ -456,42 +456,6 @@ def test_window_feed_column_pruned(spark, tmp_path):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_feed_reads_legacy_numbered_manifest(spark, tmp_path):
-    """Backward compat: tables committed before manifests went
-    unique-path recorded no ``commit_manifest`` in lineage and kept
-    each merge's manifest at the numbered ``manifest-<version>.json``
-    location — the feed's read fallback must still serve them."""
-    import json as _json
-    import os as _os
-
-    t = LakeTable.create(spark, str(tmp_path / "legacy"), FIELDS,
-                         "url", n_buckets=2)
-    t.merge(_batch(spark, [("u1", "a", 1, "I"), ("u2", "b", 2, "I")]),
-            batch_id="e-1", mode="delta")
-    v = t.current_version()
-    lin = t._lineage_entry(v)
-    # rewrite the commit's metadata to the pre-unique-path shape
-    _os.link(lin["commit_manifest"], t._manifest_path(v))
-    snap_path = t._snap_path(v)
-    with open(snap_path) as f:
-        snap = _json.load(f)
-    snap["lineage"].pop("commit_manifest")
-    with open(snap_path, "w") as f:
-        _json.dump(snap, f)
-    side = _os.path.join(t.lineage_dir, f"lin-{v:08d}.json")
-    if _os.path.exists(side):
-        with open(side) as f:
-            entry = _json.load(f)
-        entry.pop("commit_manifest", None)
-        with open(side, "w") as f:
-            _json.dump(entry, f)
-
-    t2 = LakeTable(spark, t.root)  # fresh handle, no cached state
-    feed = t2.changes(v - 1, v)
-    rows = {r["url"]: r["_change_type"] for r in feed.collect()}
-    assert rows == {"u1": "upsert", "u2": "upsert"}
-
-
 # ------------------------------------------------ Debezium envelopes
 
 
@@ -1298,6 +1262,47 @@ def test_topic_windows_df_inspection(spark, tmp_path):
                           "bytes": w1["bytes"]
                           + rows["window-00000001-00000002"]["bytes"],
                           "high_water": 2, "low_water": 0}
+
+
+def test_compact_envelope_windows_replaces_crashed_window(spark, tmp_path):
+    """A crashed publish can leave an unmarked (no ``_SUCCESS``)
+    directory under exactly the name a run squashes into, and a
+    crashed compaction leaves its ``.compact-tmp-*`` output. Neither
+    may block compaction: the unmarked directory gives way to the
+    squashed window and the temp output is swept."""
+    import os
+
+    from clinical_trials_etl_spark.cdc.envelope import (
+        apply_envelopes,
+        compact_envelope_windows,
+        publish_envelope_window,
+    )
+
+    src = LakeTable.create(spark, str(tmp_path / "src"), FIELDS, "url",
+                           n_buckets=2)
+    env = str(tmp_path / "env")
+    src.merge(_batch(spark, [("u1", "a", 1, "I")]), batch_id="e-1")
+    publish_envelope_window(src, env)
+    src.merge(_batch(spark, [("u1", "a2", 5, "U"), ("u2", "b", 6, "I")]),
+              batch_id="e-2")
+    publish_envelope_window(src, env)
+    stale = os.path.join(env, "window-00000000-00000002")
+    os.makedirs(stale)
+    with open(os.path.join(stale, "part-00000-stale.txt"), "w") as f:
+        f.write("not an envelope\n")
+    os.makedirs(os.path.join(env, ".compact-tmp-crashed"))
+
+    res = compact_envelope_windows(src, env)
+    assert res["runs_compacted"] == 1 and res["windows_in"] == 2
+    assert sorted(os.listdir(env)) == ["window-00000000-00000002"]
+    assert os.path.exists(os.path.join(stale, "_SUCCESS"))
+    assert not os.path.exists(os.path.join(stale, "part-00000-stale.txt"))
+
+    rep = LakeTable.create(spark, str(tmp_path / "rep"), FIELDS, "url",
+                           n_buckets=2)
+    apply_envelopes(rep, env)
+    assert ({(r["url"], r["val"]) for r in rep.read().collect()}
+            == {("u1", "a2"), ("u2", "b")})
 
 
 def test_compact_envelope_windows_bridges_empty_and_sweeps_overlap(

@@ -2,7 +2,7 @@
 metadata, not O(history) — snapshot JSON size stays bounded as commits
 accumulate, untouched buckets keep their manifest entries (no file-list
 rewrite), batch idempotence uses the bounded hwm/recent scheme, and
-lineage accrues in per-commit sidecars."""
+each commit's lineage rides in its own snapshot."""
 
 from __future__ import annotations
 

@@ -211,9 +211,13 @@ def test_wap_duplicate_id_and_missing_id(spark, tmp_path):
     with pytest.raises(ValueError, match="invalid wap_id"):
         t.merge(_batch(spark, [("u4", "d", 6, "I")]), batch_id="e-3",
                 wap_id="../x")
-    # staging never dirtied the numbered chain
+    # staging never dirtied the committed chain
     assert t.current_version() == 1
-    assert not os.path.exists(t._manifest_path(2))
+    staged = t.staged_dir + os.sep
+    assert not any(
+        p.startswith(staged)
+        for v in range(t.current_version() + 1)
+        for paths in t.snapshot(v)["manifests"].values() for p in paths)
 
 
 def test_wap_id_reuse_cannot_corrupt_committed_state(spark, tmp_path):
@@ -254,17 +258,16 @@ def test_wap_id_reuse_cannot_corrupt_committed_state(spark, tmp_path):
     assert ("u4", "d") in _state(t)
 
 
-def test_lineage_survives_lost_sidecar(spark, tmp_path):
-    """Commit ordering: the snapshot (with its embedded lineage entry)
-    commits FIRST, the sidecar is written after — so a crash between
-    the two cannot lose the committed entry. Simulate the crash window
-    by deleting a merge commit's sidecar: lineage(), history() and the
-    change feed must still see the commit (round-4 ADVICE low: the old
-    sidecar-first order could misattribute a raced commit)."""
+def test_lineage_is_embedded_in_the_snapshot_only(spark, tmp_path):
+    """Each commit's lineage entry rides inside the snapshot it links
+    — committed atomically with the version, and the only copy. No
+    ``_meta/lineage`` sidecar is written, while lineage(), history()
+    and the change feed still see the commit."""
     t = _make(spark, tmp_path)
     t.merge(_batch(spark, [("u3", "c", 5, "I")]), batch_id="e-2")
     v = t.current_version()
-    os.remove(os.path.join(t.lineage_dir, f"lin-{v:08d}.json"))
+    assert not os.path.exists(os.path.join(t.meta_dir, "lineage"))
+    assert t.snapshot(v)["lineage"]["type"] == "merge"
     assert t._lineage_entry(v)["type"] == "merge"
     assert [e["type"] for e in t.lineage()].count("merge") == 2
     assert t.history()[0]["operation"] == "merge"
