@@ -133,8 +133,10 @@ def _fences_entry(parent: dict, add_lsn: int | None,
     pairs carried forward from the parent, plus this commit's new
     fence when it is a lake-side correction. ``LakeTable._commit``
     builds every commit's entry through here. Bounded by the number of
-    ``update_where`` calls ever made — corrections are rare operator
-    actions, not a per-batch path."""
+    ``update_where`` calls since the last
+    ``compact(drop_tombstones_below_lsn=...)`` above their fences,
+    which passes the kept subset in as the parent's — corrections are
+    rare operator actions, not a per-batch path."""
     fences = [list(p) for p in parent.get("correction_fences", [])]
     if add_lsn is not None:
         fences.append([int(add_lsn), int(version)])
@@ -990,6 +992,21 @@ class LakeTable:
         atomically with the version and is the only copy."""
         return self.snapshot(version).get("lineage")
 
+    def _commit_files(self, lin: dict) -> list[dict] | None:
+        """File entries a merge/fast_forward commit wrote, from its own
+        manifest — what the change feed diffs and the fence guard
+        semi-joins. None once the manifest or any of its files is
+        gone (``expire_snapshots``)."""
+        path = lin["commit_manifest"]
+        if not os.path.exists(path):
+            return None
+        with open(path) as f:
+            entries = [e for g in json.load(f)["files"].values()
+                       for e in g]
+        if any(not os.path.exists(e["path"]) for e in entries):
+            return None
+        return entries
+
     def lineage(self) -> list[dict]:
         """All lineage entries in commit order, read from the
         snapshots that embed them (snapshot JSONs are never deleted —
@@ -1043,6 +1060,21 @@ class LakeTable:
     def key_field(self, snap: dict | None = None) -> str:
         snap = snap or self.snapshot()
         return snap["schema"]["key"]
+
+    @staticmethod
+    def _field_subset(fields: list[dict], columns: list[str] | None,
+                      key: str | None = None) -> list[dict]:
+        """``fields`` restricted to ``columns`` (and ``key``, when
+        given), in schema order — the column-pruning check of reads,
+        the change feed and column-subset mirrors. Unknown names
+        raise."""
+        if columns is None:
+            return fields
+        wanted = set(columns) | ({key} if key is not None else set())
+        missing = wanted - {f["name"] for f in fields}
+        if missing:
+            raise ValueError(f"unknown columns: {sorted(missing)}")
+        return [f for f in fields if f["name"] in wanted]
 
     def _full_struct(self, fields: list[dict]) -> T.StructType:
         cols = [T.StructField(f["name"], _spark_type(f["type"])) for f in fields]
@@ -1110,12 +1142,7 @@ class LakeTable:
         payload into ONE struct, which blocks Catalyst from pruning
         through it — so the pruning must happen here, upstream of the
         reconciliation (plan-gated in tests/test_plans.py)."""
-        fields = self.fields(snap)
-        if columns is not None:
-            missing = set(columns) - {f["name"] for f in fields}
-            if missing:
-                raise ValueError(f"unknown columns: {sorted(missing)}")
-            fields = [f for f in fields if f["name"] in set(columns)]
+        fields = self._field_subset(self.fields(snap), columns)
         return self._read_entries(fields, self.files(snap, buckets))
 
     def _read_entries(
@@ -1255,12 +1282,7 @@ class LakeTable:
         # that side but the row filter still applies it
         lo_e = _stat_encode(lo) if lo is not None else None
         hi_e = _stat_encode(hi) if hi is not None else None
-        if columns is not None:
-            cols = list(dict.fromkeys([*columns, key]))
-            missing = set(cols) - {f["name"] for f in fields}
-            if missing:
-                raise ValueError(f"unknown columns: {sorted(missing)}")
-            fields = [f for f in fields if f["name"] in set(cols)]
+        fields = self._field_subset(fields, columns, key)
 
         by_bucket: dict[int, list[dict]] = {}
         for e in (self.files(snap, buckets)
@@ -1446,24 +1468,23 @@ class LakeTable:
         incrementally foldable; downstream consumers resync from a
         full read.
 
-        Cost model per merge commit in the range (the design-scale
-        story):
-
-        - the commit's own manifest lists exactly the files it wrote —
-          a delta-mode commit's layer files ARE the change rows
-          (O(batch) read); a COW commit's rewritten buckets carry
-          changed + carried-over rows and need a diff;
-        - the diff's pre-state is read COLUMN-PRUNED to
-          (key, lsn, deleted) over only the commit's touched buckets —
-          the pre-image html/text payloads never leave the parquet
-          scan. A row changed iff its (lsn, deleted) winner struct
-          strictly beats the pre-state's (lsn monotonicity of the
-          merge winner rule), so no payload compare is needed.
+        Each merge/fast_forward commit ``v`` in the range is diffed on
+        its own against the ``v - 1`` state and its rows carry
+        ``_commit_version = v`` (``changes_window`` runs the same diff
+        once over the whole range). The diff reads the commit's own
+        files — a delta-mode commit's layer files ARE the change rows
+        (O(batch)); a COW commit's rewritten buckets carry changed and
+        carried-over rows — and the pre-state's touched buckets
+        COLUMN-PRUNED to (key, lsn, deleted), so the pre-image
+        payloads never leave the parquet scan. A row changed iff its
+        (lsn, deleted) winner strictly beats the pre-state's (lsn
+        monotonicity of the merge winner rule), so no payload compare
+        is needed and carried-over rows drop out.
 
         ``columns`` prunes the feed to a field subset AT THE SCAN (the
         key always rides along) — same seam as ``read(columns=...)``
-        and for the same reason: the delta path's winner aggregation
-        blocks Catalyst from pruning through its payload struct.
+        and for the same reason: the winner aggregation blocks
+        Catalyst from pruning through its payload struct.
 
         ``net=False`` skips the pre-state diff for delta-mode commits
         and emits their layer rows as-is — the cheapest possible feed
@@ -1483,8 +1504,8 @@ class LakeTable:
         multi-commit window — the property incremental aggregate
         maintenance needs (cdc/ivm.py): sum(+post, -pre) over any
         window equals the aggregate delta between its endpoint
-        snapshots. Costs one wide pre-state read per commit (prune it
-        with ``columns`` — aggregates only need their grouping/value
+        snapshots. The pre-state read is then wide (prune it with
+        ``columns`` — aggregates only need their grouping/value
         fields). Requires ``net=True``.
 
         The feed is readable as far back as snapshot retention:
@@ -1494,6 +1515,68 @@ class LakeTable:
         re-poll full collections (trials_extractor/storage/
         mongodb_storage.py) — there is no incremental surface; this is
         the Spark-native replacement."""
+        return self._feed(from_version, to_version, columns, pre_images,
+                          net=net, per_commit=True)
+
+    def changes_window(
+        self,
+        from_version: int,
+        to_version: int | None = None,
+        columns: list[str] | None = None,
+        pre_images: bool = False,
+    ) -> DataFrame:
+        """The NET change feed of the whole window: ``changes()``'s
+        diff run ONCE over all the window's merge/fast_forward commits
+        against the ``from_version`` state, every row stamped
+        ``_commit_version = to_version``. The post side is the per-key
+        winners of those commits' own files, so a key's churn inside
+        the window collapses to its last write — and a tombstone a
+        later compaction erased still surfaces as the delete it was.
+
+        Because per-commit pre-images equal the previous commit's
+        post-images, intermediate images telescope away — the signed
+        per-group contributions of this feed are IDENTICAL to the
+        per-commit feed's (pinned in tests/test_change_feed.py), from
+        one plan arm instead of one per commit. This is the consumer a
+        refresh cadence wants (cdc/mirror.py, cdc/ivm.py); a
+        one-commit window is exactly ``changes()`` over that commit.
+        Consumers that need per-commit granularity keep using
+        ``changes()``.
+
+        Output schema and ``pre_images``/``columns`` semantics match
+        ``changes()``; a key whose end-state winner equals its
+        start-state winner emits nothing. A key inserted AND deleted
+        inside the window emits no pre/post image pair — in net mode
+        it surfaces as a single ``delete`` row (an idempotent no-op
+        for a consumer that never saw the key), so downstream folds
+        land on the same state either way. Raises on rollbacks in
+        range and on windows whose files were removed by
+        ``expire_snapshots`` (same contracts as ``changes()``)."""
+        return self._feed(from_version, to_version, columns, pre_images,
+                          net=True, per_commit=False)
+
+    def _feed(
+        self,
+        from_version: int,
+        to_version: int | None,
+        columns: list[str] | None,
+        pre_images: bool,
+        net: bool,
+        per_commit: bool,
+    ) -> DataFrame:
+        """The change feed's one diff. Walks the merge/fast_forward
+        commits in ``(from_version, to_version]`` (refusing rollbacks
+        and expired files) and diffs each commit against its
+        predecessor (``per_commit``) or all of them at once against
+        ``from_version``.
+
+        The diff of a commit set S over pre-state p: the post side is
+        the per-key winners of S's own files, the pre side the per-key
+        winners of p's buckets that S touched, and a key changed iff
+        its post winner strictly beats its pre winner (or it had no
+        pre row). A key's state after S is the max-(lsn, deleted)
+        winner of its row at p and the rows S wrote, so this is exact
+        for any S."""
         current = self.current_version()
         if to_version is None:
             to_version = current
@@ -1506,32 +1589,16 @@ class LakeTable:
                              "(raw layer rows have no pre-state)")
 
         to_snap = self.snapshot(to_version)
-        fields = self.fields(to_snap)
         key = self.key_field(to_snap)
-        if columns is not None:
-            # prune at the scan, same seam as read(columns=...): the
-            # delta path's winner aggregation blocks Catalyst pruning
-            wanted = set(columns) | {key}
-            missing = wanted - {f["name"] for f in fields}
-            if missing:
-                raise ValueError(f"unknown columns: {sorted(missing)}")
-            fields = [f for f in fields if f["name"] in wanted]
-        key_fld = [f for f in fields if f["name"] == key]
+        fields = self._field_subset(self.fields(to_snap), columns, key)
+        pre_fields = (fields if pre_images
+                      else [f for f in fields if f["name"] == key])
 
-        def _out(df: DataFrame, version: int) -> DataFrame:
-            return df.select(
-                *[F.col(f["name"]) for f in fields],
-                F.col(SYS_LSN).alias("_lsn"),
-                F.when(F.col(SYS_DELETED), F.lit("delete"))
-                .otherwise(F.lit("upsert")).alias("_change_type"),
-                F.lit(version).cast("long").alias("_commit_version"),
-            )
-
-        parts: list[DataFrame] = []
+        commits: list[tuple[int, dict, list[dict]]] = []
+        relayouts: list[int] = []
         for v in range(from_version + 1, to_version + 1):
-            lin = self._lineage_entry(v)
-            if lin is not None and (lin.get("type") == "rollback"
-                                    or lin.get("feed_opaque")):
+            lin = self._lineage_entry(v) or {}
+            if lin.get("type") == "rollback" or lin.get("feed_opaque"):
                 # a revert is not incrementally foldable (it can undo
                 # any number of prior commits at once) — fail fast
                 # rather than silently emit nothing for a commit that
@@ -1543,112 +1610,92 @@ class LakeTable:
                     f"change range {from_version}..{to_version} "
                     f"crosses a rollback at v{v} — resync downstream "
                     f"state from a full read instead")
-            if lin is None or lin.get("type") not in (
-                    "merge", "fast_forward"):
+            if lin.get("type") == "rebucket" or lin.get("rebucketed"):
+                # bucket numbers recorded from here on address other
+                # keys in any older state (a rebucket, or a
+                # fast_forward of a branch that rebucketed)
+                relayouts.append(v)
+            if lin.get("type") not in ("merge", "fast_forward"):
                 continue  # maintenance/evolution: no logical change
-            with open(lin["commit_manifest"]) as f:
-                man = json.load(f)
-            entries = [e for group in man["files"].values() for e in group]
-            if not entries:
-                continue
-            gone = sum(1 for e in entries if not os.path.exists(e["path"]))
-            if gone:
+            entries = self._commit_files(lin)
+            if entries is None:
                 raise ValueError(
-                    f"change feed for commit v{v} is no longer readable: "
-                    f"{gone} of its data files were removed by "
+                    f"change feed for commit v{v} is no longer "
+                    f"readable: its files were removed by "
                     f"expire_snapshots — start from a retained version")
-            new = self._read_entries(fields, entries)
+            if entries:
+                commits.append((v, lin, entries))
+
+        def diff(pre_version: int, group: list, version: int) -> list:
+            entries = [e for _v, _lin, es in group for e in es]
             all_delta = all(e.get("delta") for e in entries)
+            rows = self._read_entries(fields, entries)
+            post = rows
+            if len(group) > 1 or group[0][1]["type"] == "fast_forward":
+                # several commits' files (or a fast_forward's net
+                # manifest, mixing branch commits) may each hold a row
+                # for a key; a single merge writes one row per key
+                post = self._winner_per_key(rows, key)
+            ver = F.lit(version).cast("long").alias("_commit_version")
+            data = [F.col(f["name"]) for f in fields]
+
+            def net_rows(df: DataFrame) -> list[DataFrame]:
+                return [df.select(
+                    *data, F.col(SYS_LSN).alias("_lsn"),
+                    F.when(F.col(SYS_DELETED), F.lit("delete"))
+                    .otherwise(F.lit("upsert")).alias("_change_type"),
+                    ver)]
+
+            if all_delta and not net:
+                return net_rows(post)
+            touched: set[int] = set()
+            for _v, lin, es in group:
+                touched |= set(lin.get("touched_buckets")
+                               or {e["bucket"] for e in es})
+            # pruning the pre-state by bucket is unsound across a
+            # relayout inside the set
+            relaid = any(pre_version < r <= group[-1][0]
+                         for r in relayouts)
+            pre_entries = self.files(self.snapshot(pre_version),
+                                     None if relaid else touched)
+            if any(not os.path.exists(e["path"]) for e in pre_entries):
+                raise ValueError(
+                    f"pre-state v{pre_version} is no longer readable: "
+                    f"its files were removed by expire_snapshots — "
+                    f"start from a retained version")
+            pre = self._read_entries(pre_fields, pre_entries)
             if all_delta:
-                # layer rows are the change candidates; defensively
-                # collapse to one row per key (merge writes per-key
-                # winners, so this is a batch-sized no-op aggregation)
-                new = self._winner_per_key(new, key)
-                if not net:
-                    parts.append(_out(new, v))
-                    continue
-            elif lin.get("type") == "fast_forward":
-                # a fast_forward's net manifest can mix COW rewrites
-                # and delta layers from different branch commits — a
-                # key may appear in several files; collapse to its
-                # winner before the diff
-                new = self._winner_per_key(new, key)
-            # diff vs the pre-state winner of the touched buckets:
-            # strictly-greater (lsn, deleted) == the row changed
-            touched = set(
-                lin.get("touched_buckets")
-                or {e["bucket"] for e in entries})
-            # a fast_forward of a branch that REBUCKETED records its
-            # touched buckets in the NEW layout — pruning the OLD
-            # pre-state by them is unsound; read it unpruned
-            pre_entries = self.files(
-                self.snapshot(v - 1),
-                None if lin.get("rebucketed") else touched)
-
-            def _only_new_keys(pre: DataFrame) -> DataFrame:
-                """For a delta commit, the change candidates are its
-                O(batch) layer keys — semi-join the pre-state down to
-                them BEFORE the winner aggregation, so the agg input
-                shrinks from O(touched-bucket rows) to O(batch). AQE
-                broadcasts the small key side. A COW commit's rewritten
-                buckets carry every key they own, so the filter would
-                keep everything — skip it there."""
-                if not all_delta:
-                    return pre
-                return pre.join(new.select(key), key, "left_semi")
-
-            if pre_images:
-                # wide pre-state: the requested value columns ride
-                # along so pre-image rows can be emitted
-                pre_w = self._winner_per_key(
-                    _only_new_keys(self._read_entries(fields, pre_entries)),
-                    key,
-                ).select(
-                    F.col(key),
-                    *[F.col(f["name"]).alias(f"_pre_{f['name']}")
-                      for f in fields if f["name"] != key],
-                    F.col(SYS_LSN).alias("_pre_lsn"),
-                    F.col(SYS_DELETED).alias("_pre_del"),
-                )
-            else:
-                # slim pre-state: only (key, lsn, deleted) cross the
-                # scan — no payload compare is needed for the diff
-                pre_w = (
-                    _only_new_keys(self._read_entries(key_fld, pre_entries))
-                    .groupBy(key)
-                    .agg(F.max(F.struct(SYS_LSN, SYS_DELETED))
-                         .alias("_w"))
-                    .select(
-                        F.col(key),
-                        F.col(f"_w.{SYS_LSN}").alias("_pre_lsn"),
-                        F.col(f"_w.{SYS_DELETED}").alias("_pre_del"),
-                    )
-                )
-            beats_pre = (
+                # delta layers carry only the O(batch) candidate keys:
+                # semi-join the pre-state down to them BEFORE its
+                # winner aggregation (AQE broadcasts the small key
+                # side); COW rewrites carry every key of their
+                # buckets, where the filter would keep everything
+                pre = pre.join(rows.select(key), key, "left_semi")
+            if any(e.get("delta") for e in pre_entries):
+                pre = self._winner_per_key(pre, key)
+            pre = pre.select(
+                F.col(key),
+                *[F.col(f["name"]).alias(f"_pre_{f['name']}")
+                  for f in pre_fields if f["name"] != key],
+                F.col(SYS_LSN).alias("_pre_lsn"),
+                F.col(SYS_DELETED).alias("_pre_del"),
+            )
+            changed = post.join(pre, key, "left").where(
                 F.col("_pre_lsn").isNull()
                 | (F.struct(F.col(SYS_LSN), F.col(SYS_DELETED))
-                   > F.struct(F.col("_pre_lsn"), F.col("_pre_del")))
-            )
-            changed = new.join(pre_w, key, "left").where(beats_pre)
+                   > F.struct(F.col("_pre_lsn"), F.col("_pre_del"))))
             if not pre_images:
-                parts.append(
-                    _out(changed.drop("_pre_lsn", "_pre_del"), v))
-                continue
-            pre_live = (F.col("_pre_lsn").isNotNull()
-                        & ~F.col("_pre_del"))
-            ver = F.lit(v).cast("long").alias("_commit_version")
-            # post-side rows: the new live values
-            parts.append(
+                return net_rows(changed)
+            pre_live = F.col("_pre_lsn").isNotNull() & ~F.col("_pre_del")
+            return [
+                # post-side rows: the new live values
                 changed.where(~F.col(SYS_DELETED)).select(
-                    *[F.col(f["name"]) for f in fields],
-                    F.col(SYS_LSN).alias("_lsn"),
+                    *data, F.col(SYS_LSN).alias("_lsn"),
                     F.when(pre_live, F.lit("update_postimage"))
                     .otherwise(F.lit("insert")).alias("_change_type"),
-                    ver,
-                ))
-            # pre-side rows: the superseded live values (a tombstone
-            # for a key that was not live emits nothing)
-            parts.append(
+                    ver),
+                # pre-side rows: the superseded live values (a
+                # tombstone for a key that was not live emits nothing)
                 changed.where(pre_live).select(
                     F.col(key),
                     *[F.col(f"_pre_{f['name']}").alias(f["name"])
@@ -1657,9 +1704,14 @@ class LakeTable:
                     F.when(F.col(SYS_DELETED), F.lit("delete"))
                     .otherwise(F.lit("update_preimage"))
                     .alias("_change_type"),
-                    ver,
-                ))
+                    ver),
+            ]
 
+        if per_commit:
+            groups = [(c[0] - 1, [c], c[0]) for c in commits]
+        else:
+            groups = [(from_version, commits, to_version)] if commits else []
+        parts = [p for g in groups for p in diff(*g)]
         if not parts:
             schema = T.StructType(
                 [T.StructField(f["name"], _spark_type(f["type"]))
@@ -1673,176 +1725,6 @@ class LakeTable:
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
-
-    def changes_window(
-        self,
-        from_version: int,
-        to_version: int | None = None,
-        columns: list[str] | None = None,
-        pre_images: bool = False,
-    ) -> DataFrame:
-        """The NET change feed of the whole window in ONE two-sided
-        diff instead of ``changes()``'s per-commit loop: winner-per-key
-        at ``from_version`` vs winner-per-key at ``to_version``,
-        restricted to the keys the window's merge commits touched.
-
-        Because per-commit pre-images equal the previous commit's
-        post-images, intermediate images telescope away — the signed
-        per-group contributions of this feed are IDENTICAL to the
-        per-commit feed's (pinned in tests/test_change_feed.py), but a
-        K-commit window costs 2 touched-bucket reads + one candidate
-        read instead of K pre-state reads and K Spark-plan arms. This
-        is the consumer a refresh cadence wants (cdc/ivm.py refreshes
-        every K epochs; its per-refresh fixed cost was dominated by
-        the K feed arms — VERDICT r4 #7). Consumers that need
-        per-commit granularity (``_commit_version`` per change) keep
-        using ``changes()``; here every row carries
-        ``_commit_version = to_version``.
-
-        Output schema and ``pre_images``/``columns`` semantics match
-        ``changes()``; a key whose end-state winner equals its
-        start-state winner emits nothing. Intermediate churn (a key
-        inserted AND deleted inside the window) emits no pre/post
-        image pair — in net mode it surfaces as a single ``delete``
-        row (an idempotent no-op for a consumer that never saw the
-        key), so downstream folds land on the same state either way
-        (pinned in tests/test_change_feed.py). Raises on
-        rollbacks in range and on windows whose commit manifests lost
-        files to ``expire_snapshots`` (same contracts as
-        ``changes()``)."""
-        current = self.current_version()
-        if to_version is None:
-            to_version = current
-        if not (0 <= from_version <= to_version <= current):
-            raise ValueError(
-                f"invalid change range {from_version}..{to_version} "
-                f"(current version {current})")
-
-        to_snap = self.snapshot(to_version)
-        fields = self.fields(to_snap)
-        key = self.key_field(to_snap)
-        if columns is not None:
-            wanted = set(columns) | {key}
-            missing = wanted - {f["name"] for f in fields}
-            if missing:
-                raise ValueError(f"unknown columns: {sorted(missing)}")
-            fields = [f for f in fields if f["name"] in wanted]
-        key_fld = [f for f in fields if f["name"] == key]
-
-        empty_schema = T.StructType(
-            [T.StructField(f["name"], _spark_type(f["type"]))
-             for f in fields]
-            + [T.StructField("_lsn", T.LongType()),
-               T.StructField("_change_type", T.StringType()),
-               T.StructField("_commit_version", T.LongType())]
-        )
-
-        touched: set[int] = set()
-        cand_entries: list[dict] = []
-        stable_buckets = True
-        for v in range(from_version + 1, to_version + 1):
-            lin = self._lineage_entry(v)
-            if lin is not None and (lin.get("type") == "rollback"
-                                    or lin.get("feed_opaque")):
-                raise ValueError(
-                    f"change range {from_version}..{to_version} "
-                    f"crosses a rollback at v{v} — resync downstream "
-                    f"state from a full read instead")
-            if lin is not None and (lin.get("type") == "rebucket"
-                                    or lin.get("rebucketed")):
-                # bucket NUMBERS recorded by commits before the
-                # rebucket don't address the same keys afterwards —
-                # bucket pruning is unsound across the boundary, so
-                # read all buckets (candidate-key semi-joins still
-                # bound the diff); same for a fast_forward publishing
-                # a branch that rebucketed
-                stable_buckets = False
-            if lin is None or lin.get("type") not in (
-                    "merge", "fast_forward"):
-                continue
-            with open(lin["commit_manifest"]) as f:
-                man = json.load(f)
-            entries = [e for group in man["files"].values()
-                       for e in group]
-            gone = sum(1 for e in entries
-                       if not os.path.exists(e["path"]))
-            if gone:
-                raise ValueError(
-                    f"change feed for commit v{v} is no longer "
-                    f"readable: {gone} of its data files were removed "
-                    f"by expire_snapshots — start from a retained "
-                    f"version")
-            cand_entries += entries
-            touched |= set(
-                lin.get("touched_buckets")
-                or {e["bucket"] for e in entries})
-        if not cand_entries:
-            return self.spark.createDataFrame([], empty_schema)
-
-        buckets_arg = touched if stable_buckets else None
-        pre_entries = self.files(self.snapshot(from_version), buckets_arg)
-        gone = sum(1 for e in pre_entries
-                   if not os.path.exists(e["path"]))
-        if gone:
-            raise ValueError(
-                f"pre-state v{from_version} is no longer readable: "
-                f"{gone} files removed by expire_snapshots — start "
-                f"from a retained version")
-
-        # candidate keys: a key-only scan of the window commits' own
-        # files (O(sum of batch sizes) for delta commits; a COW
-        # commit's rewritten buckets contribute carried keys too —
-        # harmless supersets that diff to nothing)
-        cand_keys = self._read_entries(key_fld, cand_entries).select(key)
-        post_w = self._winner_per_key(
-            self._read_entries(fields, self.files(to_snap, buckets_arg))
-            .join(cand_keys, key, "left_semi"),
-            key,
-        )
-        pre_w = self._winner_per_key(
-            self._read_entries(fields, pre_entries)
-            .join(cand_keys, key, "left_semi"),
-            key,
-        ).select(
-            F.col(key),
-            *[F.col(f["name"]).alias(f"_pre_{f['name']}")
-              for f in fields if f["name"] != key],
-            F.col(SYS_LSN).alias("_pre_lsn"),
-            F.col(SYS_DELETED).alias("_pre_del"),
-        )
-        beats_pre = (
-            F.col("_pre_lsn").isNull()
-            | (F.struct(F.col(SYS_LSN), F.col(SYS_DELETED))
-               > F.struct(F.col("_pre_lsn"), F.col("_pre_del")))
-        )
-        changed = post_w.join(pre_w, key, "left").where(beats_pre)
-        ver = F.lit(to_version).cast("long").alias("_commit_version")
-        if not pre_images:
-            return changed.select(
-                *[F.col(f["name"]) for f in fields],
-                F.col(SYS_LSN).alias("_lsn"),
-                F.when(F.col(SYS_DELETED), F.lit("delete"))
-                .otherwise(F.lit("upsert")).alias("_change_type"),
-                ver,
-            )
-        pre_live = (F.col("_pre_lsn").isNotNull() & ~F.col("_pre_del"))
-        post = changed.where(~F.col(SYS_DELETED)).select(
-            *[F.col(f["name"]) for f in fields],
-            F.col(SYS_LSN).alias("_lsn"),
-            F.when(pre_live, F.lit("update_postimage"))
-            .otherwise(F.lit("insert")).alias("_change_type"),
-            ver,
-        )
-        pre = changed.where(pre_live).select(
-            F.col(key),
-            *[F.col(f"_pre_{f['name']}").alias(f["name"])
-              for f in fields if f["name"] != key],
-            F.col("_pre_lsn").alias("_lsn"),
-            F.when(F.col(SYS_DELETED), F.lit("delete"))
-            .otherwise(F.lit("update_preimage")).alias("_change_type"),
-            ver,
-        )
-        return post.unionByName(pre)
 
     # ----------------------------------------------------- maintenance
 
@@ -1906,7 +1788,9 @@ class LakeTable:
         future reconciliation. Live rows are NEVER dropped regardless
         of lsn. Buckets are pruned by manifest lsn stats (a bucket
         whose every file's min lsn is at/above the threshold holds no
-        droppable tombstone).
+        droppable tombstone). The same claim retires every
+        ``update_where`` correction fence below the threshold, so later
+        merges stop paying the fence guard's probe.
 
         Concurrency: compaction is the one op sanctioned to run beside
         the ingest stream. Losing the snapshot-commit race to
@@ -2085,7 +1969,14 @@ class LakeTable:
                     manifests[sb] = rebased
                 else:
                     manifests.pop(sb, None)
-            return {"manifests": manifests}
+            out = {"manifests": manifests}
+            if drop_tombstones_below_lsn is not None:
+                # the same watermark claim retires correction fences:
+                # no event below it can arrive to collide with one
+                out["correction_fences"] = [
+                    p for p in base.get("correction_fences", [])
+                    if p[0] >= int(drop_tombstones_below_lsn)]
+            return out
 
         snap2 = self._commit(
             snap, lin, compacted,
@@ -3162,14 +3053,8 @@ class LakeTable:
         bucket rows; filtering on ``_lsn == fence`` isolates the
         corrected ones in both modes). Returns None when the commit's
         files were expired — the guard then raises conservatively."""
-        man_path = self._lineage_entry(version)["commit_manifest"]
-        if not os.path.exists(man_path):
-            return None
-        with open(man_path) as f:
-            man = json.load(f)
-        entries = [e for g in man["files"].values() for e in g]
-        if not entries or any(not os.path.exists(e["path"])
-                              for e in entries):
+        entries = self._commit_files(self._lineage_entry(version))
+        if not entries:
             return None
         key = self.key_field()
         key_fld = [f for f in self.fields() if f["name"] == key]

@@ -13,6 +13,7 @@ trials_extractor/storage/mongodb_storage.py) — SURVEY.md §2.9.
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -326,10 +327,11 @@ def test_pre_images_telescope_across_any_window(table):
     aggregate maintenance (cdc/ivm.py) is built on. Holds because each
     commit's pre-image equals the previous commit's post-image."""
     cur = table.current_version()
+    live = {v: {r["url"] for r in table.read(version=v).collect()}
+            for v in range(cur + 1)}
     for a in range(cur):
         for b in range(a + 1, cur + 1):
-            live_a = {r["url"] for r in table.read(version=a).collect()}
-            live_b = {r["url"] for r in table.read(version=b).collect()}
+            live_a, live_b = live[a], live[b]
             net: dict[str, int] = {}
             for r in table.changes(a, b, pre_images=True).collect():
                 u = r["url"]
@@ -372,42 +374,78 @@ def test_pre_image_feed_column_pruned(spark, tmp_path):
 
 
 def test_window_feed_fold_and_signed_equivalence(table):
-    """changes_window: the one-pass two-sided diff must (a) fold a
-    version-``a`` state copy to the version-``b`` state for EVERY
-    window, and (b) carry signed pre/post contributions identical to
-    the telescoped per-commit feed — while never materializing
-    intermediate images (a key's churn inside the window emits at most
-    one pre/post pair)."""
+    """changes_window: the window diff must (a) fold a version-``a``
+    state copy to the version-``b`` state for EVERY window, (b) carry
+    signed pre/post contributions identical to the telescoped
+    per-commit feed — while never materializing intermediate images
+    (a key's churn inside the window emits at most one pre/post pair)
+    — and (c) over a one-commit window, equal ``changes()`` row for
+    row, net and with pre-images."""
     cur = table.current_version()
+    states = {v: {r["url"]: r["val"]
+                  for r in table.read(version=v).collect()}
+              for v in range(cur + 1)}
     for a in range(cur):
         for b in range(a + 1, cur + 1):
-            state = {r["url"]: r["val"]
-                     for r in table.read(version=a).collect()}
+            state = dict(states[a])
             win = table.changes_window(a, b).collect()
             for r in win:
                 if r["_change_type"] == "delete":
                     state.pop(r["url"], None)
                 else:
                     state[r["url"]] = r["val"]
-            want = {r["url"]: r["val"]
-                    for r in table.read(version=b).collect()}
-            assert state == want, (a, b)
+            assert state == states[b], (a, b)
             # at most one net row per key, all stamped to_version
             urls = [r["url"] for r in win]
             assert len(urls) == len(set(urls)), (a, b)
             assert all(r["_commit_version"] == b for r in win), (a, b)
 
             # signed pre/post equivalence vs the per-commit feed
+            win_pre = table.changes_window(a, b, pre_images=True).collect()
+            per_pre = table.changes(a, b, pre_images=True).collect()
             net: dict[str, int] = {}
-            for r in table.changes_window(a, b, pre_images=True).collect():
+            for r in win_pre:
                 u = r["url"]
                 net[u] = net.get(u, 0) + SIGN[r["_change_type"]]
             per: dict[str, int] = {}
-            for r in table.changes(a, b, pre_images=True).collect():
+            for r in per_pre:
                 u = r["url"]
                 per[u] = per.get(u, 0) + SIGN[r["_change_type"]]
             for u in set(net) | set(per):
                 assert net.get(u, 0) == per.get(u, 0), (a, b, u)
+
+            if b == a + 1:
+                # one commit: the window IS the per-commit diff
+                assert Counter(win) == Counter(
+                    table.changes(a, b).collect()), b
+                assert Counter(win_pre) == Counter(per_pre), b
+
+
+@pytest.mark.parametrize("mode", ["cow", "delta"])
+def test_window_feed_keeps_delete_of_erased_tombstone(spark, tmp_path,
+                                                      mode):
+    """A tombstone that a compaction inside the window erases
+    (``drop_tombstones_below_lsn``) still reaches the window feed as
+    the delete it was: folding the feed onto the start state gives the
+    end state."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), FIELDS, "url",
+                         n_buckets=2)
+    t.merge(_batch(spark, [(f"u{i}", f"v{i}", i + 1, "I")
+                           for i in range(4)]), batch_id="e-1")
+    v0 = t.current_version()
+    t.merge(_batch(spark, [("u0", None, 10, "D")]), batch_id="e-2",
+            mode=mode)
+    t.merge(_batch(spark, [("u1", "v1b", 11, "U")]), batch_id="e-3",
+            mode=mode)
+    t.compact(drop_tombstones_below_lsn=20)
+    state = {r["url"]: r["val"] for r in t.read(version=v0).collect()}
+    for r in t.changes_window(v0).collect():
+        if r["_change_type"] == "delete":
+            state.pop(r["url"], None)
+        else:
+            state[r["url"]] = r["val"]
+    assert state == {r["url"]: r["val"] for r in t.read().collect()}
+    assert state == {"u1": "v1b", "u2": "v2", "u3": "v3"}
 
 
 def test_window_feed_guards_match_per_commit(table):
@@ -426,10 +464,10 @@ def test_window_feed_rollback_fails_fast(spark, tmp_path):
 
 
 def test_window_feed_column_pruned(spark, tmp_path):
-    """The window diff's three reads — candidate keys, pre-state
-    winner, post-state winner — must all prune to columns=[...] at the
-    scan: a count maintained over html blobs never moves the blobs
-    even when the window spans several commits."""
+    """Both sides of the window diff — the window commits' own files
+    and the pre-state's touched buckets — must prune to columns=[...]
+    at the scan: a count maintained over html blobs never moves the
+    blobs even when the window spans several commits."""
     fields = FIELDS + [{"id": 3, "name": "html", "type": "binary"}]
     t = LakeTable.create(spark, str(tmp_path / "t"), fields, "url",
                          n_buckets=2)

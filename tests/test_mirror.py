@@ -97,6 +97,33 @@ def test_mirror_applies_deletes_and_lsn_semantics(spark, tmp_path):
     assert {r["url"] for r in m.read().collect()} == {"u2"}
 
 
+@pytest.mark.parametrize("mode", ["cow", "delta"])
+def test_mirror_sync_across_erased_tombstone(spark, tmp_path, mode):
+    """One sync window holding a delete whose tombstone a later
+    ``compact(drop_tombstones_below_lsn=...)`` erased: the mirror must
+    still drop the key."""
+    fields = [{"id": 1, "name": "url", "type": "string"},
+              {"id": 2, "name": "val", "type": "string"}]
+    src = LakeTable.create(spark, str(tmp_path / "s"), fields, "url",
+                           n_buckets=2)
+
+    def b(rows):
+        return spark.createDataFrame(
+            rows, "url string, val string, lsn long, op string")
+
+    src.merge(b([(f"u{i}", f"v{i}", i + 1, "I") for i in range(4)]),
+              batch_id="e-1")
+    m = create_mirror(spark, src, str(tmp_path / "m"))
+    sync_mirror(src, m)
+    src.merge(b([("u0", None, 10, "D")]), batch_id="e-2", mode=mode)
+    src.merge(b([("u1", "v1b", 11, "U")]), batch_id="e-3", mode=mode)
+    src.compact(drop_tombstones_below_lsn=20)
+    sync_mirror(src, m)
+    cols = ("url", "val")
+    assert _state(m, cols=cols) == _state(src, cols=cols)
+    assert set(_state(m, cols=cols)) == {"u1", "u2", "u3"}
+
+
 def test_delta_mode_mirror(spark, source, tmp_path):
     m = create_mirror(spark, source, str(tmp_path / "m"))
     sync_mirror(source, m, mode="delta")

@@ -278,6 +278,32 @@ def test_update_where_survives_compaction_and_rollback_drops_fence(
     assert _state(t)["u0"] == ("h0", 0)
 
 
+def test_tombstone_drop_compaction_retires_correction_fences(
+        spark, tmp_path, monkeypatch):
+    """``compact(drop_tombstones_below_lsn=X)`` asserts no event below
+    X can arrive — so no event can land on a fence below X either: the
+    compaction retires those fences (keeping the ones at or above X),
+    and once none is left merges stop running the fence guard."""
+    t = _make(spark, tmp_path, mode="delta")
+    t.update_where("url = 'u0'", {"val": "42"}, mode="delta")  # fence 7
+    t.update_where("url = 'u1'", {"val": "43"}, mode="delta")  # fence 8
+    t.compact(drop_tombstones_below_lsn=8)
+    assert [p[0] for p in t.snapshot()["correction_fences"]] == [8]
+    calls = []
+    guard = LakeTable._guard_correction_fences
+    monkeypatch.setattr(
+        LakeTable, "_guard_correction_fences",
+        lambda self, *a: calls.append(1) or guard(self, *a))
+    t.merge(_batch(spark, [("u2", "h0", 1, 20, "U")]), batch_id="e-2")
+    assert len(calls) == 1
+    t.compact(drop_tombstones_below_lsn=21)
+    assert "correction_fences" not in t.snapshot()
+    t.merge(_batch(spark, [("u3", "h1", 2, 30, "U")]), batch_id="e-3")
+    assert len(calls) == 1
+    assert _state(t)["u0"] == ("h0", 42)
+    assert _state(t)["u3"] == ("h1", 2)
+
+
 # ------------------------------------------------- fence-collision guard
 
 def _pages_batch(spark, rows):
