@@ -1532,6 +1532,10 @@ class LakeTable:
         winners of those commits' own files, so a key's churn inside
         the window collapses to its last write — and a tombstone a
         later compaction erased still surfaces as the delete it was.
+        A bucket that a COW merge in the window rewrote is read from
+        its newest rewrite (plus the layers after it) only: that
+        rewrite holds the bucket's whole state, so a long COW window
+        reads each touched bucket about once, not once per commit.
 
         Because per-commit pre-images equal the previous commit's
         post-images, intermediate images telescope away — the signed
@@ -1596,6 +1600,9 @@ class LakeTable:
 
         commits: list[tuple[int, dict, list[dict]]] = []
         relayouts: list[int] = []
+        # versions across which a later COW rewrite of a bucket does NOT
+        # stand for the earlier rows written there (see newest_files)
+        barriers: list[int] = []
         for v in range(from_version + 1, to_version + 1):
             lin = self._lineage_entry(v) or {}
             if lin.get("type") == "rollback" or lin.get("feed_opaque"):
@@ -1615,6 +1622,9 @@ class LakeTable:
                 # keys in any older state (a rebucket, or a
                 # fast_forward of a branch that rebucketed)
                 relayouts.append(v)
+            if (v in relayouts or lin.get("type") == "fast_forward"
+                    or "drop_tombstones_below_lsn" in lin):
+                barriers.append(v)
             if lin.get("type") not in ("merge", "fast_forward"):
                 continue  # maintenance/evolution: no logical change
             entries = self._commit_files(lin)
@@ -1626,15 +1636,52 @@ class LakeTable:
             if entries:
                 commits.append((v, lin, entries))
 
+        def newest_files(group: list) -> list:
+            """``group`` without the files a LATER COW merge in it
+            rewrote. A COW merge's files for its touched buckets are
+            those buckets' whole state, so they hold the winner of every
+            earlier row there and the post side reads each bucket's
+            newest rewrite once, not once per commit. Not across a
+            barrier: after a relayout the earlier bucket numbers
+            address other keys, and a compaction that erased tombstones
+            (directly, or on a published branch) leaves the later state
+            without a delete the earlier rows still show."""
+            covered: set[int] = set()
+            seg, out = None, []
+            for v, lin, es in reversed(group):
+                s = sum(b <= v for b in barriers)
+                if s != seg:
+                    covered, seg = set(), s
+                out.append((v, lin, [e for e in es
+                                     if e["bucket"] not in covered]))
+                if lin["type"] == "merge" and not any(
+                        e.get("delta") for e in es):
+                    covered |= set(lin["touched_buckets"])
+            return out[::-1]
+
         def diff(pre_version: int, group: list, version: int) -> list:
             entries = [e for _v, _lin, es in group for e in es]
             all_delta = all(e.get("delta") for e in entries)
             rows = self._read_entries(fields, entries)
+            # pruning the pre-state by bucket is unsound across a
+            # relayout inside the set
+            relaid = any(pre_version < r <= group[-1][0]
+                         for r in relayouts)
+            # a merge writes one row per key; two commits' files for one
+            # bucket (or for any buckets across a relayout), or a
+            # fast_forward's net manifest mixing branch commits, may
+            # each hold a row for a key
+            writers: dict[int, set[int]] = {}
+            for v, _lin, es in group:
+                for e in es:
+                    writers.setdefault(e["bucket"], set()).add(v)
+            one_writer = (len({v for v, _lin, es in group if es}) == 1
+                          or (not relaid
+                              and all(len(w) == 1
+                                      for w in writers.values())))
             post = rows
-            if len(group) > 1 or group[0][1]["type"] == "fast_forward":
-                # several commits' files (or a fast_forward's net
-                # manifest, mixing branch commits) may each hold a row
-                # for a key; a single merge writes one row per key
+            if not one_writer or any(lin["type"] == "fast_forward"
+                                     for _v, lin, es in group if es):
                 post = self._winner_per_key(rows, key)
             ver = F.lit(version).cast("long").alias("_commit_version")
             data = [F.col(f["name"]) for f in fields]
@@ -1652,10 +1699,6 @@ class LakeTable:
             for _v, lin, es in group:
                 touched |= set(lin.get("touched_buckets")
                                or {e["bucket"] for e in es})
-            # pruning the pre-state by bucket is unsound across a
-            # relayout inside the set
-            relaid = any(pre_version < r <= group[-1][0]
-                         for r in relayouts)
             pre_entries = self.files(self.snapshot(pre_version),
                                      None if relaid else touched)
             if any(not os.path.exists(e["path"]) for e in pre_entries):
@@ -1710,7 +1753,8 @@ class LakeTable:
         if per_commit:
             groups = [(c[0] - 1, [c], c[0]) for c in commits]
         else:
-            groups = [(from_version, commits, to_version)] if commits else []
+            groups = ([(from_version, newest_files(commits), to_version)]
+                      if commits else [])
         parts = [p for g in groups for p in diff(*g)]
         if not parts:
             schema = T.StructType(
@@ -1839,8 +1883,28 @@ class LakeTable:
                 st = (e.get("stats") or {}).get(SYS_LSN)
                 if st is None or int(st[0]) < thr:
                     fat.add(e["bucket"])
+
+        def retired(base: dict) -> dict:
+            # the same watermark claim retires correction fences: no
+            # event below it can arrive to collide with one
+            if drop_tombstones_below_lsn is None:
+                return {}
+            return {"correction_fences": [
+                p for p in base.get("correction_fences", [])
+                if p[0] >= int(drop_tombstones_below_lsn)]}
+
         if not fat:
-            return {"compacted_buckets": 0, "version": snap["version"]}
+            kept = retired(snap).get("correction_fences")
+            if kept is None or kept == snap.get("correction_fences", []):
+                return {"compacted_buckets": 0, "version": snap["version"]}
+            # no bucket to rewrite, but fences to retire
+            snap2 = self._commit(
+                snap, {"type": "compaction", "buckets": [],
+                       "drop_tombstones_below_lsn":
+                       int(drop_tombstones_below_lsn)},
+                retired, rebase=self.snapshot)
+            return {"compacted_buckets": 0, "version": snap2["version"],
+                    "rebases": snap2["lineage"].get("rebases", 0)}
 
         fields = self.fields(snap)
         # reconciled read: folding delta layers into the base applies
@@ -1969,14 +2033,7 @@ class LakeTable:
                     manifests[sb] = rebased
                 else:
                     manifests.pop(sb, None)
-            out = {"manifests": manifests}
-            if drop_tombstones_below_lsn is not None:
-                # the same watermark claim retires correction fences:
-                # no event below it can arrive to collide with one
-                out["correction_fences"] = [
-                    p for p in base.get("correction_fences", [])
-                    if p[0] >= int(drop_tombstones_below_lsn)]
-            return out
+            return {"manifests": manifests, **retired(base)}
 
         snap2 = self._commit(
             snap, lin, compacted,

@@ -289,6 +289,14 @@ def test_randomized_fold_equivalence(spark, tmp_path):
             else:
                 state[r["url"]] = r["val"]
         assert state == expected, f"fold from v{start} diverged"
+        state = {r["url"]: r["val"]
+                 for r in t.read(version=start).collect()}
+        for r in t.changes_window(start).collect():
+            if r["_change_type"] == "delete":
+                state.pop(r["url"], None)
+            else:
+                state[r["url"]] = r["val"]
+        assert state == expected, f"window fold from v{start} diverged"
 
 
 # ---------------------------------------------------------- pre-images
@@ -427,7 +435,8 @@ def test_window_feed_keeps_delete_of_erased_tombstone(spark, tmp_path,
     """A tombstone that a compaction inside the window erases
     (``drop_tombstones_below_lsn``) still reaches the window feed as
     the delete it was: folding the feed onto the start state gives the
-    end state."""
+    end state — also once a later COW merge has rewritten the bucket
+    without it."""
     t = LakeTable.create(spark, str(tmp_path / "t"), FIELDS, "url",
                          n_buckets=2)
     t.merge(_batch(spark, [(f"u{i}", f"v{i}", i + 1, "I")
@@ -438,14 +447,24 @@ def test_window_feed_keeps_delete_of_erased_tombstone(spark, tmp_path,
     t.merge(_batch(spark, [("u1", "v1b", 11, "U")]), batch_id="e-3",
             mode=mode)
     t.compact(drop_tombstones_below_lsn=20)
-    state = {r["url"]: r["val"] for r in t.read(version=v0).collect()}
-    for r in t.changes_window(v0).collect():
-        if r["_change_type"] == "delete":
-            state.pop(r["url"], None)
-        else:
-            state[r["url"]] = r["val"]
+
+    def folded():
+        state = {r["url"]: r["val"] for r in t.read(version=v0).collect()}
+        for r in t.changes_window(v0).collect():
+            if r["_change_type"] == "delete":
+                state.pop(r["url"], None)
+            else:
+                state[r["url"]] = r["val"]
+        return state
+
+    state = folded()
     assert state == {r["url"]: r["val"] for r in t.read().collect()}
     assert state == {"u1": "v1b", "u2": "v2", "u3": "v3"}
+    t.merge(_batch(spark, [(f"u{i}", f"w{i}", 20 + i, "U")
+                           for i in range(1, 4)]), batch_id="e-4",
+            mode="cow")
+    assert t.snapshot()["lineage"]["touched_buckets"] == [0, 1]
+    assert folded() == {"u1": "w1", "u2": "w2", "u3": "w3"}
 
 
 def test_window_feed_guards_match_per_commit(table):

@@ -302,6 +302,17 @@ def test_tombstone_drop_compaction_retires_correction_fences(
     assert len(calls) == 1
     assert _state(t)["u0"] == ("h0", 42)
     assert _state(t)["u3"] == ("h1", 2)
+    # every file already at/above the threshold: no bucket to rewrite,
+    # the fences below it still retire
+    t2 = _make(spark, tmp_path, name="t2", mode="delta")
+    t2.update_where("url = 'u0'", {"val": "42"}, mode="delta")  # fence 7
+    t2.merge(_batch(spark, [(f"u{i}", "h2", i, 20 + i, "U")
+                            for i in range(6)]), batch_id="e-2", mode="cow")
+    v = t2.current_version()
+    res = t2.compact(drop_tombstones_below_lsn=10)
+    assert (res["compacted_buckets"], res["version"]) == (0, v + 1)
+    assert "correction_fences" not in t2.snapshot()
+    assert t2.compact(drop_tombstones_below_lsn=10)["version"] == v + 1
 
 
 # ------------------------------------------------- fence-collision guard
