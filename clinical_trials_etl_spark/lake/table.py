@@ -88,6 +88,57 @@ def _spark_type(name: str) -> T.DataType:
     return _TYPES[name]
 
 
+_M64 = (1 << 64) - 1
+_XP1, _XP2, _XP3, _XP4, _XP5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5)
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return _rotl64((acc + lane * _XP2) & _M64, 31) * _XP1 & _M64
+
+
+def _xxhash64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of ``data`` as a signed long: Spark's ``xxhash64`` of one
+    string (seed 42) is this over its UTF-8 bytes. Lets a point lookup
+    route its key to a bucket without a Spark job;
+    tests/test_lake_metadata.py pins it to the JVM's result."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _XP1 + _XP2) & _M64, (seed + _XP2) & _M64,
+             seed & _M64, (seed - _XP1) & _M64]
+        while i <= n - 32:
+            for j in range(4):
+                v[j] = _xxh64_round(
+                    v[j], int.from_bytes(data[i:i + 8], "little"))
+                i += 8
+        h = (_rotl64(v[0], 1) + _rotl64(v[1], 7) + _rotl64(v[2], 12)
+             + _rotl64(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _xxh64_round(0, x)) * _XP1 + _XP4) & _M64
+    else:
+        h = (seed + _XP5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xxh64_round(0, int.from_bytes(data[i:i + 8], "little"))
+        h = (_rotl64(h, 27) * _XP1 + _XP4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i:i + 4], "little") * _XP1 & _M64
+        h = (_rotl64(h, 23) * _XP2 + _XP3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl64(h ^ (b * _XP5 & _M64), 11) * _XP1 & _M64
+    h = (h ^ (h >> 33)) * _XP2 & _M64
+    h = (h ^ (h >> 29)) * _XP3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
 class CommitConflict(Exception):
     """Another writer committed this snapshot version first. The table
     is single-writer by design (one streaming query per checkpoint —
@@ -1386,7 +1437,10 @@ class LakeTable:
         table): hashes the key to its single bucket, reads only that
         bucket's manifest + files — O(1) metadata and one file group
         touched regardless of table size (Iceberg bucket-partition
-        pruning analog).
+        pruning analog). A string key is hashed on the driver
+        (``_key_bucket``), so the lookup is one Spark job, the read;
+        other key types, and the bloom probes below, are evaluated by
+        Spark in one extra job.
 
         Within the bucket, the manifest's per-file key min/max stats
         skip stat-disjoint files (same machinery and same safety rule
@@ -1414,14 +1468,17 @@ class LakeTable:
                         if f["name"] == key)
         fid = next(f["id"] for f in self.fields(snap)
                    if f["name"] == key)
-        lit_k = F.lit(key_value).cast(_spark_type(key_type))
-        sel = [self.bucket_expr(lit_k).alias("b")] + (
-            [] if not m_bits else
-            [self._bloom_probe_expr(lit_k, j, m_bits).alias(f"p{j}")
-             for j in range(self._BLOOM_K)]
-        )
-        row = self.spark.range(1).select(*sel).collect()[0]
-        bucket = row["b"]
+        bucket = None if m_bits else self._key_bucket(
+            snap, key_type, key_value)
+        if bucket is None:
+            lit_k = F.lit(key_value).cast(_spark_type(key_type))
+            sel = [self.bucket_expr(lit_k).alias("b")] + (
+                [] if not m_bits else
+                [self._bloom_probe_expr(lit_k, j, m_bits).alias(f"p{j}")
+                 for j in range(self._BLOOM_K)]
+            )
+            row = self.spark.range(1).select(*sel).collect()[0]
+            bucket = row["b"]
         entries = None
         if m_bits:
             probes = [row[f"p{j}"] for j in range(self._BLOOM_K)]
@@ -2499,6 +2556,19 @@ class LakeTable:
     def bucket_expr(self, key_col) -> F.Column:
         n = self.snapshot()["n_buckets"]
         return F.pmod(F.xxhash64(key_col), F.lit(n)).cast("int")
+
+    @staticmethod
+    def _key_bucket(snap: dict, key_type: str, key_value) -> int | None:
+        """The bucket ``bucket_expr`` gives ``key_value``, computed on
+        the driver for a str value of a string key; None otherwise
+        (the caller asks Spark, which also applies the key's cast)."""
+        if key_type != "string" or type(key_value) is not str:
+            return None
+        try:
+            data = key_value.encode("utf-8")
+        except UnicodeEncodeError:
+            return None
+        return _xxhash64(data) % snap["n_buckets"]
 
     def merge(
         self,

@@ -104,6 +104,24 @@ def test_point_lookup_prunes_to_one_bucket(spark, tmp_path):
     assert len(pruned) < len(table.files(snap))
 
 
+def test_driver_key_bucket_matches_spark(spark):
+    """lookup() routes a string key on the driver; the bucket must be
+    bucket_expr's for every XXH64 input-length path (32-byte stripes,
+    8-byte words, a 4-byte word, single bytes)."""
+    from clinical_trials_etl_spark.lake.table import LakeTable
+
+    keys = ["", "é", "https://site3.example/page", "日本語のページ"] + [
+        "x" * n + "ü" for n in range(70)]
+    got = spark.createDataFrame([(k,) for k in keys], "k string").select(
+        F.pmod(F.xxhash64("k"), F.lit(13)).alias("b")).collect()
+    snap = {"n_buckets": 13}
+    assert [LakeTable._key_bucket(snap, "string", k) for k in keys] == [
+        r["b"] for r in got]
+    # a value that needs a cast, or another key type, goes to Spark
+    assert LakeTable._key_bucket(snap, "string", 5) is None
+    assert LakeTable._key_bucket(snap, "long", 5) is None
+
+
 def test_delta_commits_do_not_rewrite_base(spark, tmp_path):
     """Merge-on-read: a delta commit appends a layer and leaves the
     bucket's existing files untouched — O(batch) write cost (the
