@@ -19,8 +19,9 @@ Each query is forced with a noop-format write (full computation, no
 driver-side row transfer) so the timing measures the Spark plan, not
 collect() serialization.
 
-Scaling evidence (local[8] vs local[32]) is produced by
-``bench_scaling.py`` and recorded in BENCH/BASELINE.md.
+Scaling evidence (local[8] vs local[32]) is recorded in
+BENCH/BASELINE.md ("Round-5 scaling + suite runs"); perfbench's
+``cdc.scaling_eff`` measures it on the current engine.
 """
 
 from __future__ import annotations
@@ -115,6 +116,7 @@ def bench_cdc(spark, n_events: int) -> dict:
         LogSpec,
         write_changelog_segments,
     )
+    from clinical_trials_etl_spark.lake.table import LakeTable
 
     work = tempfile.mkdtemp(prefix="bench_cdc_")
     try:
@@ -134,7 +136,7 @@ def bench_cdc(spark, n_events: int) -> dict:
         t0 = time.perf_counter()
         dtable = replay(spark, log_dir, os.path.join(work, "table_mor"),
                         segments_per_batch=1, merge_mode="delta",
-                        compact_every=4)
+                        maintenance=[(4, LakeTable.compact)])
         dwall = time.perf_counter() - t0
         drows = dtable.read().count()
         assert drows == final_rows, (drows, final_rows)

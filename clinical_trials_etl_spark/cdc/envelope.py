@@ -370,7 +370,8 @@ def apply_envelopes(target: LakeTable, env_dir: str,
     keyed max-(lsn, deleted) rule makes the union-then-merge exactly
     equivalent to merging window-by-window, and a lagging consumer
     catches up paying ONE per-commit fixed cost instead of one per
-    window (measured 4x on an 8-window backlog, BENCH/exp_envelope.py
+    window (measured 4x on an 8-window backlog, BENCH/BASELINE.md
+    "envelope pipeline throughput"
     — the same fixed-cost floor the IVM window feed eliminated). Pass
     1 for per-window commit granularity (window-level lineage and
     time travel on the replica).

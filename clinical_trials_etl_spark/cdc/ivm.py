@@ -396,7 +396,8 @@ def refresh_agg_view(
             # untouched groups is pure waste — for a high-cardinality
             # multiset view (create_distinct_view) that is the
             # difference between O(changed groups) and O(bucket state)
-            # rows through the agg + merge (BENCH/exp_distinct_ivm.py)
+            # rows through the agg + merge (BENCH/BASELINE.md
+            # "Distinct-view maintenance")
             prev = (
                 view.read_raw(touched)
                 .where(~F.col("_deleted"))
@@ -679,11 +680,12 @@ def create_distinct_view(
     VIEW BUCKETS' state (the same seam as every agg view). For a
     high-cardinality distinct column with uniformly-spread changes,
     every bucket is touched and the refresh approaches O(state)
-    (measured: BENCH/exp_distinct_ivm.py) — still column-pruned and
-    never the base table, but not O(changes). The exact view is the
-    right tool when the distinct column is low-cardinality (small
-    state), changes are key-concentrated (bucket pruning bites), or
-    exactness under deletes is non-negotiable; for high-cardinality
+    (measured: BENCH/BASELINE.md "Distinct-view maintenance") — still
+    column-pruned and never the base table, but not O(changes). The
+    exact view is the right tool when the distinct column is
+    low-cardinality (small state), changes are key-concentrated
+    (bucket pruning bites), or exactness under deletes is
+    non-negotiable; for high-cardinality
     distinct at scale, the approx_distinct kind (O(1) sketch per
     group, insert windows O(changes)) is the design-scale path.
 

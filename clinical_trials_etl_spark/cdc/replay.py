@@ -14,7 +14,11 @@ from pyspark.sql import SparkSession, functions as F
 
 from clinical_trials_etl_spark.cdc.apply import apply_batch
 from clinical_trials_etl_spark.cdc.registry import PAGES_REGISTRY
-from clinical_trials_etl_spark.cdc.stream import TRANSPORT_SCHEMA
+from clinical_trials_etl_spark.cdc.stream import (
+    TRANSPORT_SCHEMA,
+    Maintenance,
+    run_maintenance,
+)
 from clinical_trials_etl_spark.lake.table import LakeTable
 
 
@@ -57,7 +61,7 @@ def replay(
     start_segment: int = 0,
     batch_prefix: str = "replay",
     merge_mode: str = "cow",
-    compact_every: int | None = None,
+    maintenance: Maintenance = (),
     key_bloom_bits: int | None = None,
     min_lsn: int | None = None,
     table: LakeTable | None = None,
@@ -74,10 +78,13 @@ def replay(
     ``segments_per_batch``: the id is keyed to the segment index, so a
     chunking change across a resume would alias ids.
 
-    ``merge_mode="delta"`` + ``compact_every=K``: merge-on-read batch
-    replay — the same O(batch)-per-commit regime run_stream offers,
-    for batch backfills (each epoch appends delta layers; every K
-    applied epochs the table folds them back into base files).
+    ``maintenance``: the same ordered ``(every, task)`` schedule
+    ``run_stream`` takes, counted in applied (not skipped)
+    micro-batches. ``merge_mode="delta"`` with
+    ``maintenance=[(K, LakeTable.compact)]`` is merge-on-read batch
+    replay — the O(batch)-per-commit regime run_stream offers, for
+    batch backfills (each batch appends delta layers; every K applied
+    batches the table folds them back into base files).
 
     ``min_lsn``: skip events at or below this log position — the
     snapshot-bootstrap handoff (``cdc/bootstrap.py``: the snapshot
@@ -113,6 +120,5 @@ def replay(
         )
         if not stats.get("skipped"):
             applied += 1
-            if compact_every and applied % compact_every == 0:
-                table.compact()
+            run_maintenance(table, maintenance, applied)
     return table

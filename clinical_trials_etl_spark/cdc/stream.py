@@ -19,8 +19,8 @@ kill/resume exactly-once (SURVEY.md §7 stage 4).
 from __future__ import annotations
 
 import json
-import os
 import threading
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
@@ -43,6 +43,9 @@ TRANSPORT_SCHEMA = T.StructType(
         T.StructField("segment", T.IntegerType()),
     ]
 )
+
+# run_stream / replay maintenance schedule: ordered (every, task) pairs
+Maintenance = Sequence[tuple[int, Callable[[LakeTable], object]]]
 
 
 class AuditRejected(Exception):
@@ -107,6 +110,15 @@ class MetricsListener(StreamingQueryListener):
         ).write.mode("overwrite").parquet(path)
 
 
+def run_maintenance(table: LakeTable, maintenance: Maintenance,
+                    applied: int) -> None:
+    """Run, in list order, the task of every ``(every, task)`` pair of
+    ``maintenance`` whose ``every`` divides ``applied``."""
+    for every, task in maintenance:
+        if applied % every == 0:
+            task(table)
+
+
 def run_stream(
     spark: SparkSession,
     log_dir: str,
@@ -116,21 +128,7 @@ def run_stream(
     metrics_path: str | None = None,
     registry: dict | None = None,
     merge_mode: str = "cow",
-    compact_every: int | None = None,
-    compact_sort_by: str | None = None,
-    compact_zorder_by: list[str] | None = None,
-    compact_rows_per_file: int | None = None,
-    rebucket_after: tuple[int, int] | None = None,
-    expire_every: int | None = None,
-    expire_keep: int = 2,
-    gc_orphans_every: int | None = None,
-    gc_orphans_older_than_s: float = 86400.0,
-    views: list[LakeTable] | None = None,
-    refresh_views_every: int | None = None,
-    envelope_dir: str | None = None,
-    publish_envelopes_every: int | None = None,
-    meta_views_name: str | None = None,
-    refresh_meta_views_every: int | None = None,
+    maintenance: Maintenance = (),
     fail_after_batches: int | None = None,
     audit=None,
     min_lsn: int | None = None,
@@ -138,65 +136,28 @@ def run_stream(
     """Process everything currently in ``log_dir`` through streaming
     micro-batches and stop (processAllAvailable). Safe to call again
     after a kill: the checkpoint resumes from committed offsets and the
-    lake table skips already-applied epochs.
+    lake table skips already-applied epochs. ``merge_mode="delta"``
+    appends O(batch) delta layers per epoch instead of rewriting the
+    touched buckets; pair it with a compaction in ``maintenance``.
 
-    ``merge_mode="delta"`` + ``compact_every=K``: merge-on-read
-    streaming — each epoch appends O(batch) delta layers, and every K
-    applied epochs the table folds layers back into base files
-    (LakeTable.compact). Compaction is itself an idempotent snapshot
-    commit, so a crash between apply and compact just defers the fold
-    to the next boundary.
-
-    Maintenance ops wired into the same applied-epoch cadence
-    (crash-safe for the same reason — each is an independent snapshot
-    commit, and a crash before it just defers it):
-
-    - ``rebucket_after=(n, new_buckets)``: after the n-th applied epoch
-      of THIS run, evolve the partitioning to ``new_buckets`` buckets
-      (LakeTable.rebucket). Applied at most once per run, and skipped
-      when the table already has that bucket count — so a killed and
-      resumed run does not re-rewrite.
-    - ``expire_every=K`` (+ ``expire_keep``): every K applied epochs,
-      drop data files only snapshots older than the retained window
-      reference (LakeTable.expire_snapshots) — the streaming analog of
-      a scheduled retention job; without it a long-running delta stream
-      accretes every superseded layer forever.
-
-    - ``gc_orphans_every=K`` (+ ``gc_orphans_older_than_s``): every K
-      applied epochs, reclaim data files stranded by crashes of
-      earlier runs (LakeTable.remove_orphans) — age-gated, so the
-      current run's freshly-written files are never touched.
-    - ``views`` (+ ``refresh_views_every=K``): every K applied epochs,
-      advance each materialized aggregate view (cdc/ivm.py) over the
-      table's pre/post-image feed — live analytics ride the stream at
-      O(changes) per refresh instead of a recompute per poll. A
-      refresh is itself an idempotent view commit keyed on the
-      consumed source version, so the crash story is identical to
-      compaction: a kill between table commit and view refresh just
-      defers the catch-up to the next boundary (or a manual
-      ``refresh_agg_view`` after the stream). Refreshes run before any
-      same-epoch snapshot expiry, and when combining with
-      ``expire_every`` the retention window must cover the refresh
-      cadence (``expire_keep`` snapshots >= versions between
-      refreshes) — the feed fails fast on expired ranges rather than
-      silently under-counting.
-    - ``envelope_dir`` (+ ``publish_envelopes_every=K``): every K
-      applied epochs, publish the feed window since the last publish
-      as Debezium-style JSON-Lines envelopes under
-      ``envelope_dir/window-<from>-<to>/`` (cdc/envelope.py) — the
-      ingest job doubles as the change-topic producer for downstream
-      non-lake consumers. The directory's ``_SUCCESS``-marked windows
-      ARE the durable offset, so a crash mid-publish is retried and a
-      resumed run continues from the last complete window. Runs
-      before snapshot expiry for the same reason view refreshes do.
-    - ``meta_views_name`` (+ ``refresh_meta_views_every=K``): every K
-      applied epochs, (re-)register the table's metadata tables as
-      ``<name>_snapshots / _files / _partitions / ...`` temp views
-      (lake/metadata.py) — a monitoring query in the same session
-      (``SELECT bucket, delta_files FROM <name>_partitions``) sees the
-      lake's live bookkeeping without touching the data. Runs AFTER
-      compaction/expiry in the same epoch so the views reflect that
-      epoch's maintenance; driver-side metadata reads only.
+    ``maintenance`` is the table's maintenance schedule, an ordered
+    list of ``(every, task)`` pairs (compaction, snapshot expiry,
+    orphan GC, view refreshes, envelope publishes, ...): after each
+    applied epoch (one the idempotent commit did not skip) every task
+    whose ``every`` divides this run's applied-epoch count runs as
+    ``task(table)``, in list order, before the ``fail_after_batches``
+    check. It is crash-safe because each task is its own idempotent
+    commit: a kill between an epoch's commit and its tasks only defers
+    them to the next boundary, and the epoch re-delivered on resume is
+    skipped and runs none. The order is the caller's, with two rules:
+    view refreshes (``cdc.ivm.refresh_agg_view``) and envelope
+    publishes (``cdc.envelope.publish_envelope_window``) go before
+    snapshot expiry, whose retention must cover the versions between
+    them (expiring first can drop feed versions they still need, and
+    the feed fails fast on expired ranges), and metadata views
+    (``lake.metadata.register_metadata_views``) go last, so they see
+    the epoch's other maintenance commits. Example:
+    ``[(2, LakeTable.compact), (8, lambda t: t.expire_snapshots())]``.
 
     ``audit``: per-epoch write-audit-publish gate,
     ``audit(candidate_df, stats) -> bool``. Each epoch's merge is
@@ -274,58 +235,7 @@ def run_stream(
                     f"resumed stream re-delivers this batch")
         if not stats.get("skipped"):
             applied["n"] += 1
-            if compact_every and applied["n"] % compact_every == 0:
-                # compact_sort_by: range-cluster the rewrite (e.g. on
-                # warc_ts) so the fold ALSO buys manifest-stats file
-                # skipping for windowed reads; compact_zorder_by:
-                # Morton-cluster it so EVERY listed dimension skips
-                # (time window AND url slice) — see LakeTable.compact
-                table.compact(sort_by=compact_sort_by,
-                              zorder_by=compact_zorder_by,
-                              rows_per_file=compact_rows_per_file)
-            if (
-                rebucket_after
-                and applied["n"] == rebucket_after[0]
-                and table.snapshot()["n_buckets"] != rebucket_after[1]
-            ):
-                table.rebucket(rebucket_after[1])
-            # views refresh BEFORE snapshot expiry: expiring first
-            # could drop feed versions a lagging view still needs
-            # (the feed fails fast on expired ranges)
-            if views and refresh_views_every and (
-                    applied["n"] % refresh_views_every == 0):
-                from clinical_trials_etl_spark.cdc.ivm import (
-                    refresh_agg_view,
-                )
-
-                for v in views:
-                    refresh_agg_view(table, v)
-            if envelope_dir and publish_envelopes_every and (
-                    applied["n"] % publish_envelopes_every == 0):
-                from clinical_trials_etl_spark.cdc.envelope import (
-                    publish_envelope_window,
-                )
-
-                publish_envelope_window(table, envelope_dir)
-            if expire_every and applied["n"] % expire_every == 0:
-                table.expire_snapshots(keep_last=expire_keep)
-            if gc_orphans_every and (
-                    applied["n"] % gc_orphans_every == 0):
-                # reclaim output stranded by crashes of EARLIER runs;
-                # the age gate keeps this run's in-flight files safe
-                table.remove_orphans(
-                    older_than_s=gc_orphans_older_than_s)
-            if meta_views_name and refresh_meta_views_every and (
-                    applied["n"] % refresh_meta_views_every == 0):
-                # last in the epoch so the views see this epoch's
-                # maintenance commits too; driver-side metadata only —
-                # I/O enrichment is skipped on the hot path
-                from clinical_trials_etl_spark.lake.metadata import (
-                    register_metadata_views,
-                )
-
-                register_metadata_views(table, meta_views_name,
-                                        with_io_stats=False)
+            run_maintenance(table, maintenance, applied["n"])
             if fail_after_batches and applied["n"] >= fail_after_batches:
                 raise RuntimeError(
                     f"injected crash after applied epoch {epoch_id} "

@@ -75,9 +75,9 @@ class LogSpec:
     # extraction kernel in benchmarks. 80 blocks ~ 2 KB of body HTML.
     html_pad_blocks: int = 0
     # first LSN of this log. A log meant to be applied AFTER another
-    # one (e.g. bench_mor's update drip over its base load) must start
-    # past the earlier log's LSN space, or the per-key max-LSN guard
-    # rejects its events as stale.
+    # one (e.g. perfbench drip_read's update drip over its base load)
+    # must start past the earlier log's LSN space, or the per-key
+    # max-LSN guard rejects its events as stale.
     lsn_offset: int = 0
 
 

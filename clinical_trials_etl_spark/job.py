@@ -166,7 +166,8 @@ def build_parser() -> argparse.ArgumentParser:
                         "spark-submit shapes as ingest and compaction")
     p.add_argument("--refresh-views-every", type=int, default=None,
                    help="(--stream) advance every --view each N "
-                        "applied epochs (default 4 when --view given)")
+                        "applied epochs (requires --view; default 4 "
+                        "when --view given)")
     p.add_argument("--compact-envelopes", action="store_true",
                    help="(--maintain, with --envelope-dir) topic log "
                         "compaction: squash adjacent published windows "
@@ -440,6 +441,40 @@ def main(argv: list[str] | None = None) -> dict:
                          "them after --maintain --fast-forward publishes "
                          "the branch")
 
+    def _stream_maintenance() -> list:
+        """--stream's maintenance schedule in the order run_stream
+        documents: compaction, then view refreshes, then envelope
+        publishes. A cadence flag without its target is a usage
+        error."""
+        if args.publish_envelopes_every and not args.envelope_dir:
+            raise SystemExit("--publish-envelopes-every requires "
+                             "--envelope-dir")
+        if args.refresh_views_every and not args.views:
+            raise SystemExit("--refresh-views-every requires --view")
+        schedule = []
+        if args.compact_every:
+            zorder = (args.compact_zorder_by.split(",")
+                      if args.compact_zorder_by else None)
+            schedule.append((args.compact_every, lambda t: t.compact(
+                sort_by=args.compact_sort_by, zorder_by=zorder,
+                rows_per_file=args.compact_rows_per_file)))
+        if args.views:
+            from clinical_trials_etl_spark.cdc.ivm import refresh_agg_view
+
+            views = [LakeTable(spark, r) for r in args.views]
+            schedule.append((args.refresh_views_every or 4, lambda t: [
+                refresh_agg_view(t, v) for v in views]))
+        if args.publish_envelopes_every:
+            from clinical_trials_etl_spark.cdc.envelope import (
+                publish_envelope_window,
+            )
+
+            schedule.append((args.publish_envelopes_every, lambda t:
+                             publish_envelope_window(t, args.envelope_dir)))
+        return schedule
+
+    maintenance = _stream_maintenance() if args.stream else None
+
     def _ingest_target(table: LakeTable) -> LakeTable:
         """Main, or the audit branch (created at the head if absent)."""
         if not args.branch:
@@ -492,17 +527,7 @@ def main(argv: list[str] | None = None) -> dict:
             max_files_per_trigger=args.max_files_per_trigger,
             metrics_path=args.metrics,
             merge_mode=args.merge_mode or "cow",
-            compact_every=args.compact_every,
-            compact_sort_by=args.compact_sort_by,
-            compact_zorder_by=(args.compact_zorder_by.split(",")
-                               if args.compact_zorder_by else None),
-            compact_rows_per_file=args.compact_rows_per_file,
-            envelope_dir=args.envelope_dir,
-            publish_envelopes_every=args.publish_envelopes_every,
-            views=([LakeTable(spark, r) for r in args.views]
-                   if args.views else None),
-            refresh_views_every=(
-                (args.refresh_views_every or 4) if args.views else None),
+            maintenance=maintenance,
             registry=registry,
             min_lsn=min_lsn,
         )
@@ -533,7 +558,8 @@ def main(argv: list[str] | None = None) -> dict:
         table = replay(spark, args.log_dir, args.table,
                        n_buckets=args.n_buckets,
                        merge_mode=args.merge_mode or "cow",
-                       compact_every=args.compact_every,
+                       maintenance=([(args.compact_every, LakeTable.compact)]
+                                    if args.compact_every else []),
                        key_bloom_bits=args.key_bloom_bits,
                        registry=registry, min_lsn=min_lsn,
                        batch_prefix=args.batch_prefix,

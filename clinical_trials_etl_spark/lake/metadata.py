@@ -338,11 +338,12 @@ def register_metadata_views(
     delta_files DESC``. The views capture the metadata AS OF
     registration (the rows were read driver-side when the DataFrame
     was built) — call this again after commits to refresh, e.g. on
-    the streaming maintenance cadence (``run_stream(meta_views_name=,
-    refresh_meta_views_every=)``), which passes
-    ``with_io_stats=False`` so the per-epoch refresh never pays file
-    I/O: manifest facts, counts, and layer signals stay live; byte/
-    record sums are null until a full registration."""
+    the streaming maintenance schedule, last in the list (``run_stream(
+    maintenance=[..., (k, lambda t: register_metadata_views(t, name,
+    with_io_stats=False))])``). ``with_io_stats=False`` keeps the
+    per-epoch refresh free of file I/O: manifest facts, counts, and
+    layer signals stay live; byte/record sums are null until a full
+    registration."""
     out = []
     for kind, fn in _KINDS.items():
         view = f"{name}_{kind}"

@@ -858,14 +858,18 @@ class LakeTable:
         The published commit's manifest is the NET file diff vs the
         fork base, so downstream incremental consumers (``changes``/
         ``changes_window``, mirrors, materialized views) fold the
-        branch's work as one O(branch-changes) commit. Two honest
+        branch's work as one O(branch-changes) commit. Three honest
         feed caveats travel in the lineage: a branch that REBUCKETED
         publishes with bucket pruning disabled for the feed's
-        pre-state read (bucket ids changed), and a branch whose
-        history contains a ROLLBACK publishes feed-opaque — a revert
-        can move keys to OLDER lsns, which a strictly-greater diff
-        cannot represent; consumers resync from a full read (the same
-        contract as a rollback directly on main).
+        pre-state read (bucket ids changed); a branch whose history
+        contains a ROLLBACK publishes feed-opaque — a revert can move
+        keys to OLDER lsns, which a strictly-greater diff cannot
+        represent; and a branch that ran a tombstone-dropping
+        compaction (``drop_tombstones_below_lsn``) publishes
+        feed-opaque too — the deletes it erased are in no published
+        file, so the net diff cannot emit them. Consumers of a
+        feed-opaque commit resync from a full read (the same contract
+        as a rollback directly on main).
 
         The branch is dropped after publishing (its chain was
         branch-local-numbered; the squashed commit carries a compact
@@ -925,11 +929,12 @@ class LakeTable:
         version = cur + 1
 
         branch_history: list[dict] = []
-        rolled_back = rebucketed = False
+        opaque = rebucketed = False
         for v in range(1, head + 1):
             lin = bt._lineage_entry(v) or {}
             t = lin.get("type")
-            rolled_back |= t == "rollback"
+            opaque |= (t == "rollback"
+                       or "drop_tombstones_below_lsn" in lin)
             rebucketed |= t == "rebucket"
             branch_history.append({"branch_version": v, "type": t})
         rebucketed |= head_snap["n_buckets"] != base_snap["n_buckets"]
@@ -978,7 +983,7 @@ class LakeTable:
             "touched_buckets": sorted(int(b) for b in net),
             **({"rebased_over": cur - base_version}
                if cur != base_version else {}),
-            **({"feed_opaque": True} if rolled_back else {}),
+            **({"feed_opaque": True} if opaque else {}),
             **({"rebucketed": True} if rebucketed else {}),
         }
         # main's next state IS the branch head's; CommitConflict on a
@@ -1668,12 +1673,14 @@ class LakeTable:
                 # rather than silently emit nothing for a commit that
                 # DID change logical state; consumers resync from a
                 # full read (cdc/mirror.py / cdc/ivm.py: recreate).
-                # Same for a fast_forward publishing a branch whose
-                # history contains a rollback (feed_opaque).
+                # Same for a fast_forward (feed_opaque) publishing a
+                # branch that rolled back or compacted tombstones away.
                 raise ValueError(
                     f"change range {from_version}..{to_version} "
-                    f"crosses a rollback at v{v} — resync downstream "
-                    f"state from a full read instead")
+                    f"crosses a rollback, or a branch publish with a "
+                    f"rollback or a tombstone-dropping compaction, at "
+                    f"v{v} — resync downstream state from a full read "
+                    f"instead")
             if lin.get("type") == "rebucket" or lin.get("rebucketed"):
                 # bucket numbers recorded from here on address other
                 # keys in any older state (a rebucket, or a

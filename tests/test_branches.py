@@ -232,6 +232,20 @@ def test_rollback_branch_publishes_feed_opaque(spark, tmp_path):
         with pytest.raises(ValueError, match="rollback"):
             fn(1, 2).collect()
 
+    # a branch compaction that erased a delete's tombstone: no published
+    # file holds the delete, so the feed must refuse rather than fold
+    # to a state that still has u1
+    t2 = _make(spark, tmp_path, "t2")
+    t2.create_branch("gc")
+    b2 = t2.branch("gc")
+    b2.merge(_batch(spark, [("u1", None, 10, "D")]), batch_id="e-2")
+    b2.compact(drop_tombstones_below_lsn=20)
+    t2.fast_forward("gc")
+    assert "u1" not in _state(t2)
+    for fn in (t2.changes, t2.changes_window):
+        with pytest.raises(ValueError, match="rollback"):
+            fn(1, 2).collect()
+
 
 def test_rebucketing_branch_feed_reads_unpruned(spark, tmp_path):
     t = _make(spark, tmp_path, n_buckets=2)

@@ -100,7 +100,8 @@ def test_partial_then_resume(spark, log_dir, expected, tmp_path):
 
 def test_two_phase_replay_needs_distinct_prefixes(spark, log_dir, tmp_path):
     """Two replay passes over DIFFERENT logs into the same table (a
-    base load then an update drip, as in bench_mor.py) both start at
+    base load then an update drip, as in BENCH/BASELINE.md's batch
+    merge-on-read measurement) both start at
     segment index 0, so a shared batch-id prefix would make
     ``is_applied`` skip the second pass's first batch. Distinct
     prefixes must apply every batch of both passes."""
@@ -266,10 +267,12 @@ def test_replay_delta_mode_converges_identically(
     spark, log_dir, expected, tmp_path
 ):
     """Batch replay through the merge-on-read path (replay(merge_mode=
-    'delta', compact_every)) must converge to the same fold state as
+    'delta', maintenance=[(k, compact)])) must converge to the same
+    fold state as
     COW replay — the backfill twin of the streaming delta test."""
     table = replay(spark, log_dir, str(tmp_path / "mor"),
-                   merge_mode="delta", compact_every=3)
+                   merge_mode="delta",
+                   maintenance=[(3, LakeTable.compact)])
     got = {r["url"]: r.asDict() for r in table.read().collect()}
     assert set(got) == set(expected)
     for url, want in expected.items():

@@ -377,6 +377,15 @@ def test_job_maintain_expires_envelope_topic(spark, tmp_path):
     with pytest.raises(SystemExit, match="envelope-dir"):
         main(["--table", root, "--maintain",
               "--expire-envelopes-to", "1"])
+    # a --stream cadence flag without its target is a usage error too,
+    # raised before any stream starts (nothing is checkpointed)
+    stream = ["--log-dir", log_dir, "--table", root, "--stream",
+              "--checkpoint", str(tmp_path / "ckpt")]
+    with pytest.raises(SystemExit, match="envelope-dir"):
+        main(stream + ["--publish-envelopes-every", "1"])
+    with pytest.raises(SystemExit, match="--view"):
+        main(stream + ["--refresh-views-every", "1"])
+    assert not os.path.exists(tmp_path / "ckpt")
 
 
 def test_job_maintain_row_ops(spark, tmp_path):

@@ -171,7 +171,7 @@ def test_meta_df_dispatch_and_views(spark, table):
 
 
 def test_meta_views_refresh_on_stream_cadence(spark, tmp_path):
-    """run_stream(meta_views_name=..., refresh_meta_views_every=1):
+    """register_metadata_views on run_stream's schedule, every epoch:
     after the stream drains, the session's temp views reflect the
     FINAL table state (every applied epoch re-registered them), with
     the manifest-only I/O columns null — the hot path never pays
@@ -189,7 +189,8 @@ def test_meta_views_refresh_on_stream_cadence(spark, tmp_path):
     t = create_pages_table(spark, str(tmp_path / "t"), n_buckets=4)
     run_stream(spark, log, t, str(tmp_path / "ckpt"),
                max_files_per_trigger=1, merge_mode="delta",
-               meta_views_name="live", refresh_meta_views_every=1)
+               maintenance=[(1, lambda tb: md.register_metadata_views(
+                   tb, "live", with_io_stats=False))])
     snaps = spark.sql(
         "SELECT MAX(version) AS v FROM live_snapshots").collect()[0]
     assert snaps["v"] == t.current_version()

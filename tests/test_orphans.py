@@ -124,6 +124,7 @@ def test_stream_gc_orphans_on_cadence(spark, tmp_path):
 
     run_stream(spark, log, t, str(tmp_path / "ckpt"),
                max_files_per_trigger=2,
-               gc_orphans_every=1, gc_orphans_older_than_s=3600)
+               maintenance=[(1, lambda tb: tb.remove_orphans(
+                   older_than_s=3600))])
     assert not os.path.exists(stray)
     assert t.read().count() > 0

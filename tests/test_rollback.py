@@ -155,14 +155,14 @@ def test_rollback_on_delta_layered_table(spark, tmp_path):
     log = str(tmp_path / "log")
     write_changelog_segments(spark, spec, log, n_segments=4)
     t = replay(spark, log, str(tmp_path / "t"), segments_per_batch=1,
-               merge_mode="delta", compact_every=2)
+               merge_mode="delta", maintenance=[(2, LakeTable.compact)])
     want = {r["url"]: r["text"] for r in t.read().collect()}
 
     merges = [i for i, e in enumerate(t.lineage(), start=1)
               if e["type"] == "merge"]
     t.rollback(merges[0])  # back to the first delta commit
     t2 = replay(spark, log, str(tmp_path / "t"), segments_per_batch=1,
-                merge_mode="delta", compact_every=2)
+                merge_mode="delta", maintenance=[(2, LakeTable.compact)])
     got = {r["url"]: r["text"] for r in t2.read().collect()}
     assert got == want
 

@@ -13,6 +13,7 @@ from clinical_trials_etl_spark.datagen.changelog import (
     write_changelog_segments,
 )
 from clinical_trials_etl_spark.datagen.reference_fold import fold_changelog
+from clinical_trials_etl_spark.lake.table import LakeTable
 
 SPEC = LogSpec(n_events=1200, n_hosts=8, paths_per_host=30, seed=7)
 
@@ -97,8 +98,9 @@ def test_stream_survives_mid_stream_rebucket_and_expiry(spark, tmp_path):
     write_changelog_segments(spark, spec1, log, n_segments=2)
     table = create_pages_table(spark, str(tmp_path / "tbl_rb"), n_buckets=4)
     ckpt = str(tmp_path / "ckpt_rb")
-    kw = dict(max_files_per_trigger=4, rebucket_after=(1, 16),
-              expire_every=2, expire_keep=2)
+    kw = dict(max_files_per_trigger=4, maintenance=[
+        (1, lambda t: t.rebucket(16)),
+        (2, lambda t: t.expire_snapshots(keep_last=2))])
 
     run_stream(spark, log, table, ckpt, **kw)  # first half, then "kill"
     assert table.snapshot()["n_buckets"] == 16  # evolved mid-stream
@@ -147,7 +149,8 @@ def test_stream_merge_on_read_with_compaction(spark, log_dir, tmp_path):
     table = create_pages_table(spark, str(tmp_path / "tbl_mor"), n_buckets=8)
     run_stream(
         spark, log_dir, table, str(tmp_path / "ckpt_mor"),
-        max_files_per_trigger=1, merge_mode="delta", compact_every=2,
+        max_files_per_trigger=1, merge_mode="delta",
+        maintenance=[(2, LakeTable.compact)],
     )
     want = _expected(spark, log_dir)
     got = {r["url"]: r["text"] for r in table.read().collect()}
@@ -159,7 +162,8 @@ def test_stream_merge_on_read_with_compaction(spark, log_dir, tmp_path):
     v = table.current_version()
     run_stream(
         spark, log_dir, table, str(tmp_path / "ckpt_mor"),
-        max_files_per_trigger=1, merge_mode="delta", compact_every=2,
+        max_files_per_trigger=1, merge_mode="delta",
+        maintenance=[(2, LakeTable.compact)],
     )
     assert table.current_version() == v
 
@@ -174,16 +178,29 @@ def test_stream_delta_mid_stream_kill_resumes_identically(
     re-delivers that epoch; the idempotent commit must no-op it, the
     deferred compactions must replay on the resumed cadence, and final
     state must be byte-identical to an uninterrupted delta stream AND
-    the fold."""
+    the fold. A recording task after the compaction pins the
+    maintenance schedule's contract: list order, applied epochs only,
+    none for the skipped re-delivery, the crash after the tasks."""
     table = create_pages_table(spark, str(tmp_path / "tbl_dk"), n_buckets=8)
     ckpt = str(tmp_path / "ckpt_dk")
-    kw = dict(max_files_per_trigger=1, merge_mode="delta", compact_every=2)
+    seen: list[tuple[int, str]] = []  # (merges so far, newest commit)
+
+    def record(t):
+        kinds = [e["type"] for e in t.lineage()]
+        seen.append((kinds.count("merge"), kinds[-1]))
+
+    kw = dict(max_files_per_trigger=1, merge_mode="delta",
+              maintenance=[(2, LakeTable.compact), (1, record)])
 
     with pytest.raises(Exception, match="injected crash"):
         run_stream(spark, log_dir, table, ckpt, fail_after_batches=3, **kw)
     kinds = [e["type"] for e in table.lineage()]
     assert kinds.count("merge") == 3  # 3 delta epochs landed pre-crash
     assert kinds.count("compaction") == 1  # boundary at 2 fired
+    # one record per applied epoch, after that epoch's compaction, and
+    # the crash after epoch 3's tasks
+    assert seen == [(1, "merge"), (2, "compaction"), (3, "merge")]
+    seen.clear()
     v_crash = table.current_version()
 
     # resume from the same checkpoint: the crashed epoch is re-delivered
@@ -198,6 +215,12 @@ def test_stream_delta_mid_stream_kill_resumes_identically(
     assert kinds.count("merge") == n_files, (kinds.count("merge"), n_files)
     assert kinds.count("compaction") >= 2  # cadence resumed post-crash
     assert table.current_version() > v_crash
+    # the re-delivered epoch 3 ran no task; the resumed run counts its
+    # own applied epochs, compacting on every second one
+    assert [m for m, _ in seen] == list(range(4, n_files + 1))
+    assert [k for _, k in seen] == [
+        "compaction" if i % 2 == 0 else "merge"
+        for i in range(1, len(seen) + 1)]
 
     want = _expected(spark, log_dir)
     got = {r["url"]: r for r in table.read().collect()}
@@ -252,8 +275,8 @@ def test_stream_maintains_agg_view_on_cadence(spark, log_dir, tmp_path):
 
     run_stream(
         spark, log_dir, table, str(tmp_path / "ckpt_ivm"),
-        max_files_per_trigger=1, views=[view, dview],
-        refresh_views_every=2,
+        max_files_per_trigger=1, maintenance=[
+            (2, lambda t: [refresh_agg_view(t, v) for v in (view, dview)])],
     )
     v = last_refreshed(view)
     assert v > 0, "the in-stream cadence never refreshed the view"
@@ -292,15 +315,15 @@ def test_stream_maintains_agg_view_on_cadence(spark, log_dir, tmp_path):
 
 def test_stream_sorted_compaction_enables_windowed_skipping(
         spark, log_dir, tmp_path):
-    """compact_sort_by on the streaming cadence: the in-stream fold
+    """A sorted compaction on the streaming schedule: the in-stream fold
     range-clusters each bucket, so a post-hoc time-window read plans
     strictly fewer files than the table holds — and still equals the
     plain filtered read exactly."""
     table = create_pages_table(spark, str(tmp_path / "tbl_sc"), n_buckets=8)
     run_stream(
         spark, log_dir, table, str(tmp_path / "ckpt_sc"),
-        max_files_per_trigger=1, merge_mode="delta", compact_every=2,
-        compact_sort_by="warc_ts", compact_rows_per_file=40,
+        max_files_per_trigger=1, merge_mode="delta", maintenance=[
+            (2, lambda t: t.compact(sort_by="warc_ts", rows_per_file=40))],
     )
     # make the final layout fully folded + clustered
     table.compact(sort_by="warc_ts", rows_per_file=40)
@@ -319,7 +342,7 @@ def test_stream_sorted_compaction_enables_windowed_skipping(
 
 def test_stream_zorder_compaction_prunes_both_dimensions(
         spark, log_dir, tmp_path):
-    """compact_zorder_by on the streaming cadence: the in-stream fold
+    """A Z-order compaction on the streaming schedule: the in-stream fold
     Morton-clusters each bucket on (warc_ts, url), so post-hoc window
     reads on EITHER dimension plan fewer files than the table holds —
     the two-access-pattern layout a sort order can't provide — and
@@ -330,8 +353,9 @@ def test_stream_zorder_compaction_prunes_both_dimensions(
     table = create_pages_table(spark, str(tmp_path / "tbl_zc"), n_buckets=2)
     run_stream(
         spark, log_dir, table, str(tmp_path / "ckpt_zc"),
-        max_files_per_trigger=1, merge_mode="delta", compact_every=2,
-        compact_zorder_by=["warc_ts", "url"], compact_rows_per_file=10,
+        max_files_per_trigger=1, merge_mode="delta", maintenance=[
+            (2, lambda t: t.compact(zorder_by=["warc_ts", "url"],
+                                    rows_per_file=10))],
     )
     # make the final layout fully folded + clustered
     table.compact(zorder_by=["warc_ts", "url"], rows_per_file=10)
@@ -448,7 +472,7 @@ def test_stream_publishes_envelope_windows(spark, log_dir, tmp_path):
     run_stream(
         spark, log_dir, table, str(tmp_path / "ckpt_env"),
         max_files_per_trigger=1,
-        envelope_dir=env, publish_envelopes_every=2,
+        maintenance=[(2, lambda t: publish_envelope_window(t, env))],
     )
     assert last_published(env) > 0, "the cadence never published"
 

@@ -145,8 +145,9 @@ def test_string_dimension_correct(spark, tmp_path):
 def test_string_dimension_shared_prefix_still_clusters(spark, tmp_path):
     """Web urls all open with the same bytes (``https://...``) — a
     fixed-position 6-byte rank window would see one constant value and
-    collapse the dimension (measured: zero url pruning in
-    BENCH/exp_zorder.py before the fix). The rank must skip the
+    collapse the dimension (measured: zero url pruning before the
+    fix, BENCH/BASELINE.md "Z-order clustered compaction"). The rank
+    must skip the
     dimension-wide common prefix of min/max (shared by every value in
     between — lexicographic invariant) so the discriminating bytes
     land in the window."""
