@@ -119,9 +119,11 @@ def build_parser() -> argparse.ArgumentParser:
                         "ops in one invocation, the update commits as "
                         "<ID>-u-1 and the delete as <ID>-d-1")
     p.add_argument("--envelope-dir", default=None,
-                   help="(--stream) publish Debezium-style JSON-Lines "
-                        "change envelopes under this directory on the "
-                        "applied-epoch cadence (cdc/envelope.py)")
+                   help="(--stream, with --publish-envelopes-every) "
+                        "publish Debezium-style JSON-Lines change "
+                        "envelopes under this directory "
+                        "(cdc/envelope.py); with --maintain or "
+                        "--describe, the topic to maintain or describe")
     p.add_argument("--publish-envelopes-every", type=int, default=None,
                    help="(--stream) publish an envelope window every N "
                         "applied epochs (requires --envelope-dir)")
@@ -441,23 +443,31 @@ def main(argv: list[str] | None = None) -> dict:
                          "them after --maintain --fast-forward publishes "
                          "the branch")
 
+    def _compact_schedule() -> list:
+        """--compact-every's fold, clustered as --compact-* ask, for
+        both --stream and batch replay."""
+        if not args.compact_every:
+            return []
+        zorder = (args.compact_zorder_by.split(",")
+                  if args.compact_zorder_by else None)
+        return [(args.compact_every, lambda t: t.compact(
+            sort_by=args.compact_sort_by, zorder_by=zorder,
+            rows_per_file=args.compact_rows_per_file))]
+
     def _stream_maintenance() -> list:
         """--stream's maintenance schedule in the order run_stream
         documents: compaction, then view refreshes, then envelope
-        publishes. A cadence flag without its target is a usage
-        error."""
+        publishes. A cadence flag without its target, or an envelope
+        directory without its cadence, is a usage error."""
         if args.publish_envelopes_every and not args.envelope_dir:
             raise SystemExit("--publish-envelopes-every requires "
                              "--envelope-dir")
+        if args.envelope_dir and not args.publish_envelopes_every:
+            raise SystemExit("--stream --envelope-dir requires "
+                             "--publish-envelopes-every")
         if args.refresh_views_every and not args.views:
             raise SystemExit("--refresh-views-every requires --view")
-        schedule = []
-        if args.compact_every:
-            zorder = (args.compact_zorder_by.split(",")
-                      if args.compact_zorder_by else None)
-            schedule.append((args.compact_every, lambda t: t.compact(
-                sort_by=args.compact_sort_by, zorder_by=zorder,
-                rows_per_file=args.compact_rows_per_file)))
+        schedule = _compact_schedule()
         if args.views:
             from clinical_trials_etl_spark.cdc.ivm import refresh_agg_view
 
@@ -558,8 +568,7 @@ def main(argv: list[str] | None = None) -> dict:
         table = replay(spark, args.log_dir, args.table,
                        n_buckets=args.n_buckets,
                        merge_mode=args.merge_mode or "cow",
-                       maintenance=([(args.compact_every, LakeTable.compact)]
-                                    if args.compact_every else []),
+                       maintenance=_compact_schedule(),
                        key_bloom_bits=args.key_bloom_bits,
                        registry=registry, min_lsn=min_lsn,
                        batch_prefix=args.batch_prefix,

@@ -21,8 +21,9 @@ Scale notes (what is driver-side and why that is correct):
   already loads per query; snapshot JSONs are O(n_buckets) each.
 - ``files`` parses O(manifests) JSON driver-side (identical cost to
   ``LakeTable.files()``, i.e. to planning ONE read), emitting pure
-  manifest facts. The optional per-file I/O enrichment (size bytes +
-  footer row counts) is serial under
+  manifest facts, one row per (file, bucket). The optional per-file
+  I/O enrichment (size bytes + footer row counts, stat'ed once per
+  file and split across a delta layer's buckets) is serial under
   ``LakeTable.STATS_DISTRIBUTED_MIN_FILES`` files and one distributed
   ``mapInPandas`` job above it — the same threshold and job shape as
   the manifest-stats collector, so a 10^5-file table never stalls the
@@ -127,38 +128,48 @@ def history_df(table: LakeTable) -> DataFrame:
 
 
 def _file_rows(table: LakeTable, snap: dict) -> list[tuple]:
-    """Manifest facts only — no file I/O. Layer index is the position
-    in the bucket's manifest list (0 = base, >0 = merge-on-read delta
-    layers); stats keys are remapped from physical ``f_<id>`` names to
-    logical column names so the table is queryable without knowing the
-    storage layout."""
+    """Manifest facts only — no file I/O. One row per (file, bucket)
+    from ``LakeTable.file_layers``: a delta layer file holding several
+    buckets has a row under each. Stats keys are remapped from
+    physical ``f_<id>`` names to logical column names so the table is
+    queryable without knowing the storage layout. The last element is
+    the bucket's ``row_span`` of the file, which ``files_df`` splits
+    the file's I/O facts by."""
     phys_to_name = {
         f"f_{f['id']}": f["name"] for f in snap["schema"]["fields"]
     }
     phys_to_name[SYS_LSN] = SYS_LSN
-    loaded: dict[str, dict] = {}
     rows: list[tuple] = []
-    for b_str, man_paths in sorted(
-            snap["manifests"].items(), key=lambda kv: int(kv[0])):
-        for layer, man_path in enumerate(man_paths):
-            if man_path not in loaded:
-                with open(man_path) as f:
-                    loaded[man_path] = json.load(f)
-            for e in loaded[man_path]["files"].get(b_str, []):
-                stats = {
-                    phys_to_name.get(k, k): v
-                    for k, v in (e.get("stats") or {}).items()
-                }
-                rows.append((
-                    snap["version"],
-                    int(b_str),
-                    layer,
-                    bool(e.get("delta")),
-                    e["path"],
-                    "key_bloom" in e,
-                    json.dumps(stats, sort_keys=True),
-                ))
+    for e in table.file_layers(snap):
+        stats = {
+            phys_to_name.get(k, k): v
+            for k, v in (e.get("stats") or {}).items()
+        }
+        rows.append((
+            snap["version"],
+            e["bucket"],
+            e["layer"],
+            bool(e.get("delta")),
+            e["path"],
+            "key_bloom" in e,
+            json.dumps(stats, sort_keys=True),
+            e["row_span"],
+        ))
     return rows
+
+
+def _bucket_share(io: tuple[int, int],
+                  span: tuple[int, int] | None) -> tuple[int, int]:
+    """A file's (size bytes, record count) attributed to one of its
+    buckets: all of it for a one-bucket file; for a file shared by
+    several, the rows of the bucket's ``[lo, hi)`` span and their
+    share of the bytes, split so that the spans' shares sum to the
+    file's size."""
+    size, n = io
+    if span is None or size < 0 or n <= 0:
+        return io
+    lo, hi = span
+    return size * hi // n - size * lo // n, hi - lo
 
 
 def _io_stats_serial(paths: list[str]) -> dict[str, tuple[int, int]]:
@@ -214,25 +225,30 @@ def files_df(
     version: int | str | None = None,
     with_io_stats: bool = True,
 ) -> DataFrame:
-    """One row per live data file of a snapshot (Iceberg ``tbl.files``
-    analog): bucket, merge-on-read layer index, delta flag, manifest
-    min/max stats (logical column names, JSON), bloom presence, and —
-    unless ``with_io_stats=False`` — size bytes + footer row count.
-    ``version`` accepts an int, a tag name, or None for current.
-    Expired-but-still-referenced paths report -1 for both I/O facts
-    instead of failing the whole listing."""
+    """One row per live data file and bucket of a snapshot (Iceberg
+    ``tbl.files`` analog): bucket, merge-on-read layer index, delta
+    flag, manifest min/max stats (logical column names, JSON), bloom
+    presence, and — unless ``with_io_stats=False`` — size bytes +
+    footer row count. A delta layer file holding several buckets has a
+    row under each: its record count there is the bucket's (from the
+    manifest) and its bytes the bucket's row share, so sums over
+    buckets count each file once. ``version`` accepts an
+    int, a tag name, or None for current. Expired-but-still-referenced
+    paths report -1 for both I/O facts instead of failing the whole
+    listing."""
     snap = table.snapshot(version)
     rows = _file_rows(table, snap)
     if not with_io_stats:
         return table.spark.createDataFrame(
-            [r + (None, None) for r in rows], _FILES_SCHEMA)
-    paths = [r[4] for r in rows]
+            [r[:-1] + (None, None) for r in rows], _FILES_SCHEMA)
+    paths = list(dict.fromkeys(r[4] for r in rows))
     if len(paths) >= table.STATS_DISTRIBUTED_MIN_FILES:
         io = _io_stats_distributed(table, paths)
     else:
         io = _io_stats_serial(paths)
     return table.spark.createDataFrame(
-        [r + io[r[4]] for r in rows], _FILES_SCHEMA)
+        [r[:-1] + _bucket_share(io[r[4]], r[-1]) for r in rows],
+        _FILES_SCHEMA)
 
 
 def partitions_df(
@@ -241,7 +257,9 @@ def partitions_df(
     with_io_stats: bool = True,
 ) -> DataFrame:
     """Per-bucket rollup (Iceberg ``tbl.partitions`` analog): file and
-    delta-layer counts, total bytes/records. A bucket whose
+    delta-layer counts (a delta layer file counts in each bucket it
+    holds), total bytes/records (its share there — the sums over
+    buckets are the table's stored bytes and rows). A bucket whose
     ``delta_layers`` keeps growing is the compaction backlog signal;
     a bucket whose ``total_bytes`` dwarfs the median is the skew
     signal. One Spark aggregation over ``files_df`` — no extra

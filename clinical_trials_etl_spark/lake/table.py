@@ -19,7 +19,10 @@ implemented Spark-first:
   MERGE rewrites only the buckets the source batch touches and re-links
   unchanged files — copy-on-write with partition pruning, which is what
   keeps a 10^10-row table mergeable: work is O(touched buckets), not
-  O(table).
+  O(table). A merge-on-read (delta) commit instead appends a layer
+  that keeps ``_bucket`` as a column — one file for a micro-batch —
+  and each bucket a layer file holds lists it; readers filter it on
+  ``_bucket``.
 - **LSN-guarded MERGE**: upsert keeps the max-``lsn`` row per key;
   deletes become tombstones that *retain* their lsn so a late (lower-lsn)
   update arriving after a delete cannot resurrect the row — the
@@ -276,6 +279,72 @@ def _parquet_footer(path: str, stat_cols: set[str]) -> tuple[int, dict]:
     return md.num_rows, stats
 
 
+def _bucket_rows(path: str) -> dict[str, int]:
+    """Row count per bucket of a file that stores ``_bucket`` as a
+    column (a delta layer): one driver-side read of that int column,
+    O(batch) like the layer itself."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    col = pq.read_table(path, columns=[SYS_BUCKET])[SYS_BUCKET]
+    counts = pc.value_counts(col.combine_chunks()).to_pylist()
+    return {str(c["values"]): c["counts"]
+            for c in sorted(counts, key=lambda c: c["values"])}
+
+
+def _manifest_doc(version: int, by_bucket: dict[str, list[dict]]) -> dict:
+    """A manifest's JSON body. A file that holds one bucket is listed
+    under it in ``files``. A file that holds several (a delta layer,
+    marked by its ``bucket_rows``) is recorded ONCE in ``shared``: its
+    path, schema, stats and row count per bucket, the key bloom of
+    each bucket, and — when this manifest lists it under only some of
+    its buckets (a branch publish's net diff) — those ``buckets``."""
+    files: dict[str, list[dict]] = {}
+    shared: dict[str, dict] = {}
+    for b, es in by_bucket.items():
+        for e in es:
+            if "bucket_rows" not in e:
+                files.setdefault(b, []).append(e)
+                continue
+            rec = shared.setdefault(e["path"], {
+                **{k: v for k, v in e.items()
+                   if k not in ("bucket", "key_bloom")},
+                "buckets": [], "key_blooms": {}})
+            rec["buckets"].append(b)
+            if "key_bloom" in e:
+                rec["key_blooms"][b] = e["key_bloom"]
+    for rec in shared.values():
+        if set(rec["buckets"]) == set(rec["bucket_rows"]):
+            del rec["buckets"]
+        if not rec["key_blooms"]:
+            del rec["key_blooms"]
+    doc = {"version": version, "files": files}
+    if shared:
+        doc["shared"] = list(shared.values())
+    return doc
+
+
+def _manifest_entries(doc: dict, bucket: str | None = None) -> list[dict]:
+    """The ``files()`` entries of one manifest body — one per (file,
+    bucket), all buckets or only ``bucket``. A shared file's entries
+    carry its ``bucket_rows``, which tells readers to filter its rows
+    on ``_bucket``."""
+    out = [e for b, es in doc["files"].items() if bucket in (None, b)
+           for e in es]
+    for rec in doc.get("shared", []):
+        blooms = rec.get("key_blooms", {})
+        for b in rec.get("buckets", rec["bucket_rows"]):
+            if bucket not in (None, b):
+                continue
+            e = {k: v for k, v in rec.items()
+                 if k not in ("buckets", "key_blooms")}
+            e["bucket"] = int(b)
+            if b in blooms:
+                e["key_bloom"] = blooms[b]
+            out.append(e)
+    return out
+
+
 # string rank uses a 6-byte (48-bit) big-endian window so the value
 # stays exactly representable in a double's 53-bit mantissa — a wider
 # window would silently stop being order-preserving at the low bits
@@ -386,8 +455,9 @@ class LakeTable:
     ) -> "LakeTable":
         """fields: [{"id": int, "name": str, "type": str}, ...]
 
-        ``key_bloom_bits``: record a per-file key bloom filter of this
-        many bits in the manifest at every write (see
+        ``key_bloom_bits``: record a per-file (per file and bucket for
+        a delta layer) key bloom filter of this many bits in the
+        manifest at every write (see
         ``_attach_key_blooms``). Point lookups then skip bloom-missing
         files — including DELTA LAYERS, which min/max stats must not
         skip — so a lookup on a layer-accreting streaming table stays
@@ -441,7 +511,7 @@ class LakeTable:
             f"manifest-{version:08d}-{uuid.uuid4().hex[:12]}.json")
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"version": version, "files": by_bucket}, f, indent=1)
+            json.dump(_manifest_doc(version, by_bucket), f, indent=1)
         os.replace(tmp, path)
         return path
 
@@ -993,7 +1063,8 @@ class LakeTable:
             "correction_fences": head_snap.get("correction_fences", [])})
         self.drop_branch(name, force=True)
         return {"published": name, "version": version, "commits": head,
-                "net_files": sum(len(v) for v in net.values())}
+                "net_files": len({e["path"] for es in net.values()
+                                  for e in es})}
 
     def _branch_file_paths(self) -> set[str]:
         """Data files referenced by ANY snapshot of ANY branch
@@ -1057,8 +1128,7 @@ class LakeTable:
         if not os.path.exists(path):
             return None
         with open(path) as f:
-            entries = [e for g in json.load(f)["files"].values()
-                       for e in g]
+            entries = _manifest_entries(json.load(f))
         if any(not os.path.exists(e["path"]) for e in entries):
             return None
         return entries
@@ -1083,10 +1153,38 @@ class LakeTable:
     def files(self, snap: dict | None = None,
               buckets: set[int] | None = None) -> list[dict]:
         """File entries for the given buckets (all if None), resolved
-        through the per-commit manifests. A bucket maps to an ordered
-        LIST of manifest paths — one layer per merge-on-read delta
-        commit since its last base rewrite. Bucket pruning prunes the
+        through the per-commit manifests: one entry per (file, bucket).
+        A bucket maps to an ordered LIST of manifest paths — one layer
+        per merge-on-read delta commit since its last base rewrite.
+        A delta layer file holds several buckets, so its path appears
+        under each of them (the entries carry the file's
+        ``bucket_rows``); ``_read_entries`` reads such a path once and
+        keeps only the entries' buckets. Bucket pruning prunes the
         metadata reads too: only manifests owning wanted buckets load."""
+        return [e for _layer, e in self._layered_files(snap, buckets)]
+
+    def file_layers(self, snap: dict | None = None) -> list[dict]:
+        """Every ``files()`` entry of a snapshot with its place in the
+        layout, for the metadata tables: ``layer`` is its position in
+        its bucket's manifest list (0 = base, >0 = merge-on-read delta
+        layers), and ``row_span`` is the bucket's ``[lo, hi)`` range of
+        the file's rows where the file holds several buckets (None
+        where it holds only this one, i.e. all its rows)."""
+        out = []
+        for layer, e in self._layered_files(snap, None):
+            span = None
+            lo = 0
+            for b, n in e.get("bucket_rows", {}).items():
+                if int(b) == e["bucket"]:
+                    span = (lo, lo + n)
+                    break
+                lo += n
+            out.append({**e, "layer": layer, "row_span": span})
+        return out
+
+    def _layered_files(self, snap: dict | None,
+                       buckets: set[int] | None) -> list[tuple[int, dict]]:
+        """``files()`` as (layer index, entry) pairs."""
         snap = snap or self.snapshot()
         manifests = snap["manifests"]
         wanted = (
@@ -1101,11 +1199,9 @@ class LakeTable:
         for path in sorted(paths_needed):
             with open(path) as f:
                 loaded[path] = json.load(f)
-        out: list[dict] = []
-        for b in sorted(wanted, key=int):
-            for path in manifests[b]:
-                out.extend(loaded[path]["files"].get(b, []))
-        return out
+        return [(layer, e) for b in sorted(wanted, key=int)
+                for layer, path in enumerate(manifests[b])
+                for e in _manifest_entries(loaded[path], b)]
 
     # ---------------------------------------------------------- schema
 
@@ -1207,19 +1303,51 @@ class LakeTable:
         """Read an explicit file-entry list, projecting each
         phys-signature group onto ``fields`` by field-id (the shared
         body of snapshot reads and the change-feed's per-commit
-        manifest reads)."""
+        manifest reads).
+
+        Each path is read once, one scan per physical signature. A
+        shared file (a delta layer holding several buckets) asked for
+        only some of them yields only those buckets' rows: the scan
+        keeps rows whose ``_bucket`` is null (a one-bucket file stores
+        none) or in the union of the shared files' asked buckets, which
+        is exact when each is asked for all its buckets inside that
+        union (a bucket-pruned read). A file asked for fewer (the
+        feed's newest-rewrite pruning) gets a scan of its own."""
         out_struct = self._full_struct(fields)
         if not files:
             return self.spark.createDataFrame([], out_struct)
 
-        by_sig: dict[str, list[dict]] = {}
+        wanted: dict[str, tuple[dict, set[int]]] = {}
         for f in files:
-            by_sig.setdefault(json.dumps(f["phys"], sort_keys=True), []).append(f)
+            wanted.setdefault(f["path"], (f, set()))[1].add(f["bucket"])
+        held = {p: {int(b) for b in f["bucket_rows"]}
+                for p, (f, bs) in wanted.items() if "bucket_rows" in f}
+        union = sorted({b for p in held for b in wanted[p][1]})
+        groups: dict[tuple, list[str]] = {}
+        partial: set[str] = set()  # signatures whose scan filters
+        for path, (f, bs) in wanted.items():
+            sig = json.dumps(f["phys"], sort_keys=True)
+            sel = None
+            if path in held and bs != held[path]:
+                if bs == held[path] & set(union):
+                    partial.add(sig)
+                else:
+                    sel = tuple(sorted(bs))
+            groups.setdefault((sig, sel), []).append(path)
 
         parts = []
-        for sig, group in by_sig.items():
+        for (sig, sel), paths in groups.items():
             phys = json.loads(sig)  # {"f_<id>": type, ...}
-            paths = [g["path"] for g in group]
+            # the bucket list is an array literal, which generated code
+            # references rather than inlines (an IN over int literals
+            # compiles a new class for each bucket set a read asks for)
+            keep = None
+            if sel is not None:
+                keep = F.array_contains(F.array(*map(F.lit, sel)),
+                                        F.col(SYS_BUCKET))
+            elif sig in partial:
+                keep = F.col(SYS_BUCKET).isNull() | F.array_contains(
+                    F.array(*map(F.lit, union)), F.col(SYS_BUCKET))
             # explicit schema from the snapshot's recorded physical
             # signature: skips Spark's eager footer-based inference at
             # DataFrame creation (a driver-side read per call that
@@ -1230,8 +1358,12 @@ class LakeTable:
                  for n, t in sorted(phys.items())]
                 + [T.StructField(SYS_LSN, T.LongType()),
                    T.StructField(SYS_DELETED, T.BooleanType())]
+                + ([] if keep is None
+                   else [T.StructField(SYS_BUCKET, T.IntegerType())])
             )
             df = self.spark.read.schema(phys_struct).parquet(*paths)
+            if keep is not None:
+                df = df.filter(keep)
             proj = []
             for fld in fields:
                 phys_name = f"f_{fld['id']}"
@@ -1847,8 +1979,9 @@ class LakeTable:
         is unchanged (tombstones retained — compaction must not lose
         the delete guard); only file layout and metadata shrink.
         Needed at design scale: each ``mode="delta"`` streaming commit
-        adds a delta layer per touched bucket, so buckets accrete
-        O(commits-since-compaction) small files whose read-side
+        adds a delta layer to every bucket it touches (one file shared
+        by those buckets), so buckets accrete
+        O(commits-since-compaction) small layers whose read-side
         reconciliation would otherwise dominate scan costs — compaction
         is the amortized half of the merge-on-read bargain.
 
@@ -2447,26 +2580,34 @@ class LakeTable:
     def _collect_written_files(
         self, out_dir: str, phys: dict
     ) -> tuple[list[dict], int]:
-        """Enumerate bucket-partitioned parquet output -> (file entries,
-        total rows). Row counts AND per-file min/max column stats come
-        from parquet footers (metadata only — never a data read), the
-        Iceberg manifest-stats analog that ``read(between=...)`` skips
-        files with. Small outputs (micro-batch merges) read footers
-        driver-side; large outputs (full-table compact/rebucket) fan
-        the footer reads out as one distributed job — see
+        """Enumerate a write's parquet output -> (file entries, total
+        rows), in either layout: bucket-partitioned (``_bucket=<b>/``
+        directories, one bucket per file) or delta-layer files at the
+        top of ``out_dir`` holding ``_bucket`` as a column, each of
+        which gets one entry per bucket it holds and its
+        ``bucket_rows``.
+        Row counts AND per-file min/max column stats come from parquet
+        footers (metadata only), the Iceberg manifest-stats analog that
+        ``read(between=...)`` skips files with; a delta layer's
+        per-bucket counts come from reading its ``_bucket`` column.
+        Small outputs (micro-batch merges) read footers driver-side;
+        large outputs (full-table compact/rebucket) fan the footer
+        reads out as one distributed job — see
         ``STATS_DISTRIBUTED_MIN_FILES``."""
         stat_cols = {
             n for n, t in phys.items() if t in _STAT_TYPES
         } | {SYS_LSN}
-        located: list[tuple[str, int]] = []
-        for bucket_dir in sorted(os.listdir(out_dir)):
-            if not bucket_dir.startswith(f"{SYS_BUCKET}="):
+        located: list[tuple[str, int | None]] = []
+        for name in sorted(os.listdir(out_dir)):
+            if name.endswith(".parquet"):
+                located.append((os.path.join(out_dir, name), None))
+            if not name.startswith(f"{SYS_BUCKET}="):
                 continue
-            bucket = int(bucket_dir.split("=")[1])
-            for fn in sorted(os.listdir(os.path.join(out_dir, bucket_dir))):
+            bucket = int(name.split("=")[1])
+            for fn in sorted(os.listdir(os.path.join(out_dir, name))):
                 if fn.endswith(".parquet"):
                     located.append(
-                        (os.path.join(out_dir, bucket_dir, fn), bucket))
+                        (os.path.join(out_dir, name, fn), bucket))
         if len(located) >= self.STATS_DISTRIBUTED_MIN_FILES:
             footers = self._footer_stats_distributed(
                 [p for p, _b in located], stat_cols)
@@ -2478,10 +2619,14 @@ class LakeTable:
         for path, bucket in located:
             n_rows, stats = footers[path]
             total_rows += n_rows
-            new_files.append(
-                {"path": path, "bucket": bucket, "phys": phys,
-                 "stats": stats}
-            )
+            if bucket is not None:
+                new_files.append({"path": path, "bucket": bucket,
+                                  "phys": phys, "stats": stats})
+                continue
+            held = _bucket_rows(path) if n_rows else {}
+            new_files += [{"path": path, "bucket": int(b), "phys": phys,
+                           "stats": stats, "bucket_rows": held}
+                          for b in held]
         return new_files, total_rows
 
     _BLOOM_K = 4  # probes per key; fpp ~ (1 - e^(-K*n/m))^K
@@ -2498,13 +2643,15 @@ class LakeTable:
 
     def _attach_key_blooms(self, snap: dict,
                            new_files: list[dict]) -> None:
-        """Record a per-file bloom filter over the key column in each
-        manifest entry (Parquet/Iceberg bloom-filter analog, held at
-        the manifest so skipping needs no file I/O at all). ONE narrow
-        distributed job over the just-written files' key column —
-        O(batch) work reading a single column, never a driver-side
-        data read. Files whose bloom cannot be computed simply get no
-        entry (absent bloom == never skipped)."""
+        """Record a bloom filter over the key column in each manifest
+        entry (Parquet/Iceberg bloom-filter analog, held at the
+        manifest so skipping needs no file I/O at all): one per file,
+        and one per (file, bucket) for a delta layer holding several
+        buckets, so a lookup skips a layer that lacks its key in its
+        bucket. ONE narrow distributed job over the just-written files'
+        key column — O(batch) work reading a single column, never a
+        driver-side data read. Files whose bloom cannot be computed
+        simply get no entry (absent bloom == never skipped)."""
         m_bits = snap.get("key_bloom_bits")
         if not m_bits or not new_files:
             return
@@ -2515,12 +2662,18 @@ class LakeTable:
         if key_type is None:
             return
         n_words = m_bits // 64
-        schema = T.StructType([T.StructField(phys_key,
-                                             _spark_type(key_type))])
+        # the files of one write share one layout
+        shared = "bucket_rows" in new_files[0]
+        schema = T.StructType(
+            [T.StructField(phys_key, _spark_type(key_type))]
+            + ([T.StructField(SYS_BUCKET, T.IntegerType())]
+               if shared else []))
         df = (
             self.spark.read.schema(schema)
-            .parquet(*[e["path"] for e in new_files])
+            .parquet(*dict.fromkeys(e["path"] for e in new_files))
             .select(F.input_file_name().alias("_f"),
+                    (F.col(SYS_BUCKET) if shared else F.lit(None)
+                     .cast("int")).alias("_b"),
                     F.col(phys_key).alias("_k"))
         )
         for j in range(self._BLOOM_K):
@@ -2542,13 +2695,14 @@ class LakeTable:
         # symlinked table root or mount alias — an unmatched join here
         # would silently disable the feature (no bloom == never skip)
         blooms = {
-            os.path.realpath(unquote(urlparse(r["_f"]).path)):
+            (os.path.realpath(unquote(urlparse(r["_f"]).path)), r["_b"]):
                 [r[f"w{w}"] for w in range(n_words)]
-            for r in df.groupBy("_f").agg(*aggs).collect()
+            for r in df.groupBy("_f", "_b").agg(*aggs).collect()
         }
         matched = 0
         for e in new_files:
-            words = blooms.get(os.path.realpath(e["path"]))
+            words = blooms.get((os.path.realpath(e["path"]),
+                                e["bucket"] if shared else None))
             if words is not None:
                 e["key_bloom"] = words
                 matched += 1
@@ -2607,17 +2761,25 @@ class LakeTable:
         - ``"cow"`` (copy-on-write): one max_by winner aggregation over
           target(touched buckets) ∪ source, then ``fill``, then the
           bucket-clustering exchange; the touched buckets are rewritten
-          as fresh base files. Map-side partial aggregation collapses
-          duplicate deliveries and hot keys before the shuffle. Reads
-          stay reconciliation-free; each commit rewrites whole buckets.
+          as fresh base files, one per bucket. Map-side partial
+          aggregation collapses duplicate deliveries and hot keys
+          before the shuffle. Reads stay reconciliation-free; each
+          commit rewrites whole buckets.
         - ``"delta"`` (merge-on-read): the source's per-key winners are
-          appended as delta files per touched bucket WITHOUT reading or
-          rewriting the base — O(batch) write cost instead of
-          O(touched bucket size). Reads reconcile layers with the same
-          winner rule; ``compact()`` folds layers back into base files.
-          This is the write-amplification fix at design scale: a
-          1k-row micro-batch must not rewrite a 10^8-row bucket
-          (Iceberg MOR / position-delete analog, expressed as
+          appended as a delta layer WITHOUT reading or rewriting
+          the base — O(batch) write cost instead of O(touched bucket
+          size). The layer keeps ``_bucket`` as a column instead of
+          one file per touched bucket: each file is listed under every
+          bucket it holds with a row count per bucket, and readers
+          filter it on ``_bucket``. So the winner aggregation's key
+          exchange is the commit's only shuffle, and the write runs at
+          that exchange's AQE-coalesced parallelism: a micro-batch
+          writes one data file, a large batch a few, each shared by
+          many buckets. Reads reconcile layers with the same
+          winner rule; ``compact()`` folds layers back into one base
+          file per bucket. This is the write-amplification fix at design
+          scale: a 1k-row micro-batch must not rewrite a 10^8-row
+          bucket (Iceberg MOR / position-delete analog, expressed as
           LSN-versioned row layers).
 
         ``touched_hint``: the exact set of buckets the source touches,
@@ -2722,15 +2884,24 @@ class LakeTable:
             F.col(SYS_DELETED),
             F.col(SYS_BUCKET),
         )
-        # one bucket-clustering exchange before the write (one file per
-        # touched bucket; an unclustered dynamic-partition write was
-        # measured 1.5-2x slower end-to-end — it fans each task across
-        # every bucket dir, exploding file counts and writer overhead).
-        # With the winner aggregation's key exchange these are the
-        # commit's only two shuffles, in both modes.
-        write_df = write_df.repartition(
-            max(len(touched), 1), F.col(SYS_BUCKET))
-        write_df.write.mode("overwrite").partitionBy(SYS_BUCKET).parquet(out_dir)
+        if mode == "delta":
+            # a delta layer keeps _bucket as a column and is written
+            # straight off the winner aggregation's key exchange — the
+            # commit's only shuffle. AQE coalesces a micro-batch's
+            # exchange to one partition, so a small commit writes one
+            # file; a large batch keeps its write parallelism and
+            # writes a few files, each holding many buckets
+            write_df.write.mode("overwrite").parquet(out_dir)
+        else:
+            # a COW commit rewrites whole buckets: one bucket-clustering
+            # exchange, one base file per touched bucket (an unclustered
+            # dynamic-partition write was measured 1.5-2x slower
+            # end-to-end — it fans each task across every bucket dir).
+            # With the winner aggregation's key exchange these are the
+            # commit's two shuffles.
+            write_df.repartition(max(len(touched), 1), F.col(SYS_BUCKET)) \
+                .write.mode("overwrite").partitionBy(SYS_BUCKET) \
+                .parquet(out_dir)
 
         new_files, merged_rows = self._collect_written_files(out_dir, phys)
         self._attach_key_blooms(snap, new_files)
@@ -2759,8 +2930,7 @@ class LakeTable:
             os.makedirs(self.staged_dir, exist_ok=True)
             tmp = manifest_path + f".tmp-{uuid.uuid4().hex}"
             with open(tmp, "w") as f:
-                json.dump({"version": version, "files": by_bucket}, f,
-                          indent=1)
+                json.dump(_manifest_doc(version, by_bucket), f, indent=1)
             os.replace(tmp, manifest_path)
 
         def layered(base: dict) -> dict:
@@ -3351,8 +3521,7 @@ class LakeTable:
         if not keep_files and os.path.exists(staged_man):
             with open(staged_man) as f:
                 man = json.load(f)
-            own = {e["path"] for group in man["files"].values()
-                   for e in group}
+            own = {e["path"] for e in _manifest_entries(man)}
             if own:
                 referenced = {e["path"] for snap in self._snapshots()
                               for e in self.files(snap)}

@@ -503,3 +503,37 @@ def test_job_expire_older_than_alone_not_ignored(spark, tmp_path):
     res = main(["--table", root, "--maintain",
                 "--expire-older-than", "3600"])
     assert "expire" in res
+
+
+def test_job_replay_compaction_honours_cluster_flags(spark, tmp_path):
+    """Batch replay's --compact-every fold clusters as --compact-sort-by
+    / --compact-rows-per-file ask, as it does under --stream."""
+    from clinical_trials_etl_spark.lake.table import LakeTable
+
+    log_dir = str(tmp_path / "log_cl")
+    write_changelog_segments(spark, SPEC, log_dir, n_segments=2)
+    root = str(tmp_path / "t_cl")
+    main(["--log-dir", log_dir, "--table", root, "--n-buckets", "4",
+          "--merge-mode", "delta", "--compact-every", "1",
+          "--compact-sort-by", "warc_ts",
+          "--compact-rows-per-file", "40"])
+    t = LakeTable(spark, root)
+    folds = [lin for lin in t.lineage() if lin["type"] == "compaction"]
+    assert folds and all(lin.get("sort_by") == ["warc_ts"]
+                         for lin in folds)
+    per_bucket = {}
+    for e in t.files():
+        per_bucket[e["bucket"]] = per_bucket.get(e["bucket"], 0) + 1
+    assert max(per_bucket.values()) > 1  # rows_per_file split buckets
+
+
+def test_job_stream_envelope_dir_needs_cadence(spark, tmp_path):
+    """--stream --envelope-dir without --publish-envelopes-every would
+    publish nothing: a usage error, like the reverse case."""
+    import pytest
+
+    with pytest.raises(SystemExit, match="publish-envelopes-every"):
+        main(["--log-dir", str(tmp_path / "log"),
+              "--table", str(tmp_path / "t"),
+              "--checkpoint", str(tmp_path / "ckpt"), "--stream",
+              "--envelope-dir", str(tmp_path / "env")])

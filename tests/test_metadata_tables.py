@@ -74,8 +74,9 @@ def test_files_df_against_direct_parquet_read(spark, table):
         e["path"] for e in table.files()
     }
     # record_count is a real footer fact: the sum must equal a direct
-    # Spark read over the same physical files
-    direct = spark.read.parquet(*[r["path"] for r in rows]).count()
+    # Spark read over the same physical files (a delta layer file has
+    # a row under each of its buckets, and is read once)
+    direct = spark.read.parquet(*{r["path"] for r in rows}).count()
     assert sum(r["record_count"] for r in rows) == direct
     assert all(r["size_bytes"] > 0 for r in rows)
     # the delta commit shows up as layer>0 files flagged is_delta

@@ -250,3 +250,80 @@ def test_mor_read_columns_prunes_the_parquet_scan(spark, tmp_path):
     a = sorted(tuple(r) for r in table.read(columns=["url", "language"]).collect())
     b = sorted(tuple(r) for r in table.read().select("url", "language").collect())
     assert a == b and a
+
+
+_KV = [{"id": 1, "name": "url", "type": "string"},
+       {"id": 2, "name": "val", "type": "string"}]
+
+
+def _kv_batch(spark, n: int, lsn0: int):
+    return spark.createDataFrame(
+        [(f"u{i}", f"v{lsn0 + i}", lsn0 + i, "I") for i in range(n)],
+        "url string, val string, lsn long, op string")
+
+
+def test_delta_merge_writes_one_layer_file_in_two_jobs(spark, tmp_path):
+    """Job budget of a small delta commit: the winner aggregation's key
+    exchange and the write — 2 Spark jobs — and, as AQE coalesces the
+    small exchange to one partition, ONE parquet file for every bucket
+    the batch touches, listed under each of them."""
+    import os
+
+    from clinical_trials_etl_spark.lake.table import LakeTable
+    from tests.spark_jobs import count_jobs
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), _KV, "url",
+                         n_buckets=16)
+    src = _kv_batch(spark, 64, 1)
+    touched = {r[0] for r in src.select(
+        t.bucket_expr(F.col("url"))).distinct().collect()}
+    assert len(touched) >= 8
+    with count_jobs(spark) as jobs:
+        t.merge(src, batch_id="d-1", mode="delta", touched_hint=touched)
+    assert jobs["jobs"] == 2
+
+    snap = t.snapshot()
+    lin = snap["lineage"]
+    entries = t._commit_files(lin)
+    (path,) = {e["path"] for e in entries}
+    out_dir = os.path.dirname(path)
+    assert [f for f in os.listdir(out_dir) if f.endswith(".parquet")] \
+        == [os.path.basename(path)]
+    assert sorted(e["bucket"] for e in entries) == sorted(touched)
+    assert all(snap["manifests"][str(b)] == [lin["commit_manifest"]]
+               for b in touched)
+
+
+def test_full_read_plans_each_layer_path_once(spark, tmp_path):
+    """A delta layer file is listed under every bucket it holds; a full
+    read must still scan it once (a path planned twice reads its rows
+    twice)."""
+    import re
+
+    from clinical_trials_etl_spark.lake.table import LakeTable
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), _KV, "url",
+                         n_buckets=16)
+    for k in range(3):
+        t.merge(_kv_batch(spark, 48, 100 * k), batch_id=f"d-{k}",
+                mode="delta")
+    df = t.read()
+    planned = sum(int(n) for n in re.findall(
+        r"InMemoryFileIndex\((\d+) paths?\)", _plan(df)))
+    assert planned == len(set(df.inputFiles())) == 3
+    assert df.count() == 48
+
+
+def test_string_key_lookup_runs_one_job(spark, tmp_path):
+    """Job budget of a point lookup on a string key: the key is hashed
+    on the driver, so the bucket read is the only Spark job."""
+    from clinical_trials_etl_spark.lake.table import LakeTable
+    from tests.spark_jobs import count_jobs
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), _KV, "url",
+                         n_buckets=16)
+    t.merge(_kv_batch(spark, 48, 1), batch_id="c-1")
+    with count_jobs(spark) as jobs:
+        rows = t.lookup("u7").collect()
+    assert jobs["jobs"] == 1
+    assert [r["val"] for r in rows] == ["v8"]
