@@ -12,16 +12,20 @@ This is the engine's spine (SURVEY.md §7 stage 3; north rule):
   3. **Max-LSN MERGE** into the bucket-pruned lake table
      (lake/table.py): ``LakeTable.merge`` owns the per-key
      max-(lsn, deleted) winner decision in both merge modes — one
-     aggregation (``LakeTable._winner_per_key``) whose map-side partial
-     aggregation collapses duplicate deliveries and hot keys before
-     its shuffle.
+     aggregation (``LakeTable._winner_per_key``) whose partial
+     aggregation collapses duplicate deliveries and hot keys. A COW
+     commit runs ONE exchange, on ``_bucket``, with the aggregation
+     on top of it (partial aggregation after the exchange); a delta
+     commit's one exchange is the aggregation's key exchange, with
+     partial aggregation map-side before it.
      This replaces the reference's last-write-wins race
      (mongodb_storage.py:229-231) with deterministic max-LSN
      semantics; deletes tombstone.
   4. **Extract text** from html via the Arrow kernel (byte-identity
-     invariant) as the merge's ``fill`` hook — after the winner
-     shuffle, so it runs at shuffle parallelism and only on winning
-     live batch rows.
+     invariant) as the merge's ``fill`` hook — in the tasks after the
+     commit's one exchange, whose count AQE sets from the shuffle
+     partitions (not the scan's file count, nor one task per bucket),
+     and only on winning live batch rows.
 
 Re-running the same (batch_id, rows) is a no-op end-to-end — the
 exactly-once contract foreachBatch needs.
@@ -89,12 +93,12 @@ def normalize_batch(
     """Transport (union schema) -> evolved table columns + (lsn, op).
 
     ``text`` is emitted as a null placeholder here and filled in by
-    :func:`fill_text_post_winner` AFTER the merge's winner shuffle —
-    so the Arrow HTML kernel (the expensive step) runs (a) with the
-    shuffle's full parallelism instead of the scan's file-level
-    parallelism (a WAL segment can be a single file = a single task),
-    and (b) only on winning rows, never on superseded duplicate
-    deliveries.
+    :func:`fill_text_post_winner` AFTER the merge's winner decision,
+    in the tasks after its one exchange — so the Arrow HTML kernel
+    (the expensive step) runs (a) in the exchange's AQE-coalesced
+    tasks instead of at the scan's file-level parallelism (a WAL
+    segment can be a single file = a single task), and (b) only on
+    winning rows, never on superseded duplicate deliveries.
 
     Renamed columns fold by FIELD ID via the registry: a record written
     before a rename carries the old name, after it the new one — all
@@ -133,7 +137,9 @@ def fill_text_post_winner(df: DataFrame) -> DataFrame:
     """Fill ``text`` on the MERGE winner rows (both merge modes): COW
     target winners arrive with text already extracted at their original
     apply; batch winners carry the null placeholder and get the Arrow
-    kernel here — after the one winner shuffle, at shuffle parallelism,
+    kernel here — after the winner aggregation, in the tasks after the
+    commit's one exchange (``_bucket`` in cow, the key in delta; AQE
+    coalesces them, since every Python UDF task pays a fixed cost),
     and never on superseded duplicate deliveries. The kernel is
     deterministic, so a (url, lsn) redelivery tie resolving to either
     side yields byte-identical text."""
@@ -211,9 +217,9 @@ def apply_batch(
     ops = evolve_for_batch(table, batch, registry, max_ver=meta["_mx"])
     fields = table.fields()
     normalized = normalize_batch(batch, fields, registry)
-    # the batch reaches merge unshuffled: merge's winner aggregation
-    # is its one key shuffle (duplicates collapse map-side), and
-    # extraction runs post-winner via fill
+    # the batch reaches merge unshuffled: merge runs the commit's one
+    # exchange and the winner aggregation, and extraction runs
+    # post-winner via fill
     stats = table.merge(
         normalized,
         lsn_col="lsn",

@@ -378,7 +378,7 @@ def _zorder_str_rank_value(s: str, offset: int) -> float:
     return float(int.from_bytes(window, "big"))
 
 
-def _zorder_rank_expr(phys_name: str, dtype: str, str_offset: int = 0):
+def _zorder_rank_expr(name: str, dtype: str, str_offset: int = 0):
     """Order-preserving DOUBLE projection of an orderable column, the
     per-dimension input to the Z-order (Morton) key. Strings map to a
     UTF-8 6-byte big-endian window starting after the dimension's
@@ -386,7 +386,7 @@ def _zorder_rank_expr(phys_name: str, dtype: str, str_offset: int = 0):
     global min/max — lexicographic order of the windows preserved);
     timestamps/dates to epoch seconds; numerics cast. Pure JVM
     expressions — no Python in the rewrite path."""
-    c = F.col(phys_name)
+    c = F.col(name)
     if dtype == "string":
         hexpad = F.rpad(
             F.hex(F.substring(c.cast("binary"), str_offset + 1,
@@ -1278,25 +1278,6 @@ class LakeTable:
 
     # ------------------------------------------------------------ read
 
-    def _read_files(
-        self,
-        snap: dict,
-        buckets: set[int] | None,
-        columns: list[str] | None = None,
-    ) -> DataFrame:
-        """Read snapshot files (grouped by their write-time physical
-        schema so widened columns coexist), project to the *current*
-        schema by field-id, cast as needed.
-
-        ``columns``: restrict the projection to these data fields (the
-        system columns always ride along). This is the column-pruning
-        seam for merge-on-read reads: the winner aggregation packs its
-        payload into ONE struct, which blocks Catalyst from pruning
-        through it — so the pruning must happen here, upstream of the
-        reconciliation (plan-gated in tests/test_plans.py)."""
-        fields = self._field_subset(self.fields(snap), columns)
-        return self._read_entries(fields, self.files(snap, buckets))
-
     def _read_entries(
         self, fields: list[dict], files: list[dict]
     ) -> DataFrame:
@@ -1385,26 +1366,56 @@ class LakeTable:
         return out
 
     @staticmethod
-    def _winner_per_key(df: DataFrame, key: str) -> DataFrame:
+    def _winner_per_key(df: DataFrame, key: str,
+                        *prefix: str) -> DataFrame:
         """Max-(lsn, deleted) row per key — THE winner rule: merge-on-
         read reconciliation, and merge()'s decision in both modes. One
         algebraic max_by aggregation, not a row_number window: its
-        map-side partial aggregation collapses duplicate deliveries and
-        hot keys to one row per map partition before the shuffle,
-        where a window would sort a whole hot partition on one task.
-        The key rides as the grouping column, outside the payload;
-        the output keeps ``df``'s column order."""
-        payload = F.struct(*[F.col(c) for c in df.columns if c != key])
+        partial aggregation collapses duplicate deliveries and hot keys
+        to one row per partition before the final one, where a window
+        would sort a whole hot partition on one task. Grouped by the
+        key alone, the partial aggregation runs map-side, before the
+        key exchange; ``prefix`` puts grouping columns ahead of the key
+        (``_bucket`` in ``_bucket_winners``), so an exchange on the
+        prefix already clusters the aggregation and both phases run
+        after it. The grouping columns ride outside the payload; the
+        output keeps ``df``'s column order."""
+        by = [*prefix, key]
+        payload = F.struct(*[F.col(c) for c in df.columns if c not in by])
         return (
-            df.groupBy(key)
+            df.groupBy(*by)
             .agg(
                 F.max_by(
                     payload, F.struct(F.col(SYS_LSN), F.col(SYS_DELETED))
                 ).alias("_w")
             )
-            .select(*[F.col(c if c == key else f"_w.{c}")
+            .select(*[F.col(c if c in by else f"_w.{c}")
                       for c in df.columns])
         )
+
+    def _bucket_winners(self, df: DataFrame, key: str,
+                        reconcile: bool) -> DataFrame:
+        """The one plan of the bucket rewrites (COW merge, ``compact``,
+        ``rebucket``): ``df`` — unreconciled rows with ``_bucket`` —
+        goes through ONE exchange, hash-partitioned on ``_bucket``,
+        and, where ``reconcile`` (a COW merge always; a rewrite only
+        over delta layers), the winner aggregation grouped by
+        (``_bucket``, key) runs on top of it with no exchange of its
+        own. Max over (lsn, deleted) is associative, so aggregating
+        base, layers and batch in one pass equals reconciling the
+        layers first. Hash partitioning never splits a bucket, so the
+        ``partitionBy(_bucket)`` write stays one file per bucket.
+
+        The exchange is sized by column, not by the bucket count:
+        ``spark.sql.shuffle.partitions`` with AQE coalescing sets the
+        tasks after it, where the Arrow ``fill`` kernel runs, and each
+        Python UDF task pays a fixed cost (~0.3 CPU-s on a 4-core VM):
+        sized at one task per bucket, a 16-bucket COW commit ran
+        ``fill`` in 16 tasks instead of <=4 and took about twice the
+        commit CPU."""
+        df = df.repartition(F.col(SYS_BUCKET))
+        return self._winner_per_key(df, key, SYS_BUCKET) if reconcile \
+            else df
 
     def _read_reconciled(
         self,
@@ -1418,13 +1429,18 @@ class LakeTable:
         is already one-row-per-key at rest.
 
         ``columns``: data-field subset to read (the key is added if
-        absent — the reconciliation groups by it)."""
+        absent — the reconciliation groups by it). This is the
+        column-pruning seam for merge-on-read reads: the winner
+        aggregation packs its payload into ONE struct, which blocks
+        Catalyst from pruning through it — so the pruning must happen
+        here, upstream of the reconciliation (plan-gated in
+        tests/test_plans.py)."""
         key = self.key_field(snap)
-        cols = None
         if columns is not None:
-            cols = list(dict.fromkeys([*columns, key]))
+            columns = list(dict.fromkeys([*columns, key]))
         entries = self.files(snap, buckets)
-        df = self._read_files(snap, buckets, cols)
+        df = self._read_entries(
+            self._field_subset(self.fields(snap), columns), entries)
         if any(e.get("delta") for e in entries):
             df = self._winner_per_key(df, key)
         return df
@@ -2045,8 +2061,9 @@ class LakeTable:
         snap = self.snapshot()
         if zorder_by is not None and sort_by is not None:
             raise ValueError("sort_by and zorder_by are exclusive")
+        listed = self.files(snap)
         counts: dict[int, int] = {}
-        for f in self.files(snap):
+        for f in listed:
             counts[f["bucket"]] = counts.get(f["bucket"], 0) + 1
         if zorder_by is not None:
             z_cols = list(zorder_by)
@@ -2076,7 +2093,7 @@ class LakeTable:
                    if c > max_files_per_bucket}
         if drop_tombstones_below_lsn is not None:
             thr = int(drop_tombstones_below_lsn)
-            for e in self.files(snap):
+            for e in listed:
                 st = (e.get("stats") or {}).get(SYS_LSN)
                 if st is None or int(st[0]) < thr:
                     fat.add(e["bucket"])
@@ -2103,14 +2120,18 @@ class LakeTable:
             return {"compacted_buckets": 0, "version": snap2["version"],
                     "rebases": snap2["lineage"].get("rebases", 0)}
 
-        fields = self.fields(snap)
-        # reconciled read: folding delta layers into the base applies
-        # the same max-(lsn, deleted) winner rule reads use, so the
-        # compacted base is byte-equivalent to the pre-compaction view
-        # (tombstones retained — the delete guard must survive)
-        df = self._read_reconciled(snap, fat).withColumn(
-            SYS_BUCKET, self.bucket_expr(F.col(self.key_field(snap)))
-        )
+        # one pass over the fat buckets' files, layers unreconciled:
+        # where delta layers are present the winner aggregation after
+        # the bucket exchange folds them with the same max-(lsn,
+        # deleted) rule reads use, so the compacted base is
+        # byte-equivalent to the pre-compaction view (tombstones
+        # retained — the delete guard must survive)
+        entries = [e for e in listed if e["bucket"] in fat]
+        key = self.key_field(snap)
+        df = self._bucket_winners(
+            self._read_entries(self.fields(snap), entries).withColumn(
+                SYS_BUCKET, self.bucket_expr(F.col(key))),
+            key, any(e.get("delta") for e in entries))
         if drop_tombstones_below_lsn is not None:
             # erase expired tombstones (see docstring) — applied AFTER
             # reconciliation, so only a key's WINNING row can qualify;
@@ -2118,48 +2139,34 @@ class LakeTable:
             df = df.filter(~(F.col(SYS_DELETED)
                              & (F.col(SYS_LSN)
                                 < int(drop_tombstones_below_lsn))))
-        out_dir = os.path.join(self.data_dir, f"compact-{uuid.uuid4().hex}")
-        phys = {f"f_{f['id']}": f["type"] for f in fields}
-        projected = df.select(
-            *[F.col(f["name"]).alias(f"f_{f['id']}") for f in fields],
-            F.col(SYS_LSN),
-            F.col(SYS_DELETED),
-            F.col(SYS_BUCKET),
-        )
-        writer = projected.repartition(len(fat), F.col(SYS_BUCKET))
         if sort_by is not None:
             # sorted runs per bucket directory: with maxRecordsPerFile
             # the writer splits each directory's sequential sorted rows
             # into files, so every file is one contiguous value range
-            name_to_phys = {f["name"]: f"f_{f['id']}" for f in fields}
-            writer = writer.sortWithinPartitions(
-                F.col(SYS_BUCKET),
-                *[F.col(name_to_phys[c]) for c in sort_cols])
+            df = df.sortWithinPartitions(
+                F.col(SYS_BUCKET), *[F.col(c) for c in sort_cols])
         elif zorder_by is not None:
-            by_name = {f["name"]: f for f in fields}
+            by_name = {f["name"]: f for f in self.fields(snap)}
             aggs = []
             for i, c in enumerate(z_cols):
-                fld = by_name[c]
                 # string dims aggregate the RAW min/max (the rank
                 # window position depends on their common prefix,
                 # known only after this job); others aggregate the
                 # rank directly
-                src = (F.col(f"f_{fld['id']}")
-                       if fld["type"] == "string"
-                       else _zorder_rank_expr(f"f_{fld['id']}",
-                                              fld["type"]))
+                src = (F.col(c) if by_name[c]["type"] == "string"
+                       else _zorder_rank_expr(c, by_name[c]["type"]))
                 aggs += [F.min(src).alias(f"lo{i}"),
                          F.max(src).alias(f"hi{i}")]
-            # one min/max aggregation over the pre-repartition
-            # projection (no exchange in the bounds job); the collect
-            # is 2 scalars per dimension (bounded driver metadata,
-            # like the bloom/stats jobs)
-            b = projected.agg(*aggs).collect()[0]
+            # one min/max aggregation over the rewrite's rows (column
+            # pruning leaves a base-only rewrite's exchange the key and
+            # the Z columns); the collect is 2 scalars per dimension
+            # (bounded driver metadata, like the bloom/stats jobs)
+            b = df.agg(*aggs).collect()[0]
             ranks, bounds = [], []
             for i, c in enumerate(z_cols):
-                fld = by_name[c]
+                dtype = by_name[c]["type"]
                 lo, hi = b[f"lo{i}"], b[f"hi{i}"]
-                if fld["type"] == "string":
+                if dtype == "string":
                     # rank the 6 bytes AFTER the dimension-wide common
                     # prefix (shared by every value between min and
                     # max), and derive the bounds driver-side from the
@@ -2167,30 +2174,21 @@ class LakeTable:
                     # rank(min)/rank(max) ARE lo/hi (no second job)
                     off = (_lcp_bytes(lo, hi)
                            if lo is not None and hi is not None else 0)
-                    ranks.append(_zorder_rank_expr(
-                        f"f_{fld['id']}", "string", str_offset=off))
+                    ranks.append(_zorder_rank_expr(c, "string",
+                                                   str_offset=off))
                     lo = (None if lo is None
                           else _zorder_str_rank_value(lo, off))
                     hi = (None if hi is None
                           else _zorder_str_rank_value(hi, off))
                 else:
-                    ranks.append(_zorder_rank_expr(
-                        f"f_{fld['id']}", fld["type"]))
+                    ranks.append(_zorder_rank_expr(c, dtype))
                 bounds.append((lo, hi))
             norms = [_zorder_norm(r, lo, hi, len(ranks))
                      for r, (lo, hi) in zip(ranks, bounds)]
-            writer = writer.sortWithinPartitions(
+            df = df.sortWithinPartitions(
                 F.col(SYS_BUCKET), _zorder_key(norms))
-        w = writer.write.mode("overwrite")
-        if rows_per_file is not None:
-            w = w.option("maxRecordsPerFile", int(rows_per_file))
-        w.partitionBy(SYS_BUCKET).parquet(out_dir)
-        new_files = self._collect_written_files(out_dir, phys)[0]
-        self._attach_key_blooms(snap, new_files)
-
-        by_bucket: dict[str, list[dict]] = {}
-        for fmeta in new_files:
-            by_bucket.setdefault(str(fmeta["bucket"]), []).append(fmeta)
+        by_bucket, _rows = self._write_files(
+            snap, df, "compact", rows_per_file=rows_per_file)
         # Manifests are path-referenced everywhere (the change feed
         # resolves a merge's own manifest from its lineage entry), so
         # the rewrite's manifest is written ONCE at a unique path and
@@ -2291,34 +2289,13 @@ class LakeTable:
             return {"rebucketed": False, "version": snap["version"]}
         if n_buckets < 1:
             raise ValueError("n_buckets must be >= 1")
-        fields = self.fields(snap)
         key = self.key_field(snap)
-        new_expr = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast(
-            "int"
-        )
-        df = self._read_reconciled(snap, None).withColumn(
-            SYS_BUCKET, new_expr
-        )
-        out_dir = os.path.join(self.data_dir, f"rebucket-{uuid.uuid4().hex}")
-        phys = {f"f_{f['id']}": f["type"] for f in fields}
-        (
-            df.select(
-                *[F.col(f["name"]).alias(f"f_{f['id']}") for f in fields],
-                F.col(SYS_LSN),
-                F.col(SYS_DELETED),
-                F.col(SYS_BUCKET),
-            )
-            .repartition(n_buckets, F.col(SYS_BUCKET))
-            .write.mode("overwrite")
-            .partitionBy(SYS_BUCKET)
-            .parquet(out_dir)
-        )
-        new_files = self._collect_written_files(out_dir, phys)[0]
-        self._attach_key_blooms(snap, new_files)
-
-        by_bucket: dict[str, list[dict]] = {}
-        for fmeta in new_files:
-            by_bucket.setdefault(str(fmeta["bucket"]), []).append(fmeta)
+        entries = self.files(snap)
+        df = self._read_entries(self.fields(snap), entries).withColumn(
+            SYS_BUCKET,
+            F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int"))
+        by_bucket, _rows = self._write_files(snap, self._bucket_winners(
+            df, key, any(e.get("delta") for e in entries)), "rebucket")
         manifest_path = self._write_manifest(snap["version"] + 1, by_bucket)
         lin = {
             "type": "rebucket",
@@ -2577,6 +2554,46 @@ class LakeTable:
         return {r["path"]: (r["n_rows"], json.loads(r["stats"]))
                 for r in df.collect()}
 
+    def _write_files(self, snap: dict, df: DataFrame, name: str,
+                     delta: bool = False,
+                     rows_per_file: int | None = None
+                     ) -> tuple[dict[str, list[dict]], int]:
+        """Write ``df`` — the data fields by name plus ``_lsn``,
+        ``_deleted`` and ``_bucket`` — as a new file set under
+        ``<data>/<name>-<uuid>`` in the physical (field-id) schema;
+        returns its manifest entries by bucket (key blooms attached)
+        and its row count. A base rewrite (COW merge, compaction,
+        rebucket) is ``partitionBy(_bucket)`` over ``_bucket_winners``'
+        exchange: one file per bucket, split every ``rows_per_file``
+        rows when given. Without that clustering a dynamic-partition write fans
+        each task across every bucket dir, measured 1.5-2x slower
+        end-to-end. A ``delta`` layer keeps ``_bucket`` as a column
+        and is written straight off the winner aggregation's key
+        exchange: AQE coalesces a micro-batch's exchange to one
+        partition, so a small commit writes one file; a large batch
+        keeps its write parallelism and writes a few files, each
+        holding many buckets."""
+        fields = self.fields(snap)
+        out_dir = os.path.join(self.data_dir, f"{name}-{uuid.uuid4().hex}")
+        w = df.select(
+            *[F.col(f["name"]).alias(f"f_{f['id']}") for f in fields],
+            F.col(SYS_LSN),
+            F.col(SYS_DELETED),
+            F.col(SYS_BUCKET),
+        ).write.mode("overwrite")
+        if rows_per_file is not None:
+            w = w.option("maxRecordsPerFile", int(rows_per_file))
+        (w if delta else w.partitionBy(SYS_BUCKET)).parquet(out_dir)
+        new_files, rows = self._collect_written_files(
+            out_dir, {f"f_{f['id']}": f["type"] for f in fields})
+        self._attach_key_blooms(snap, new_files)
+        by_bucket: dict[str, list[dict]] = {}
+        for fmeta in new_files:
+            if delta:
+                fmeta["delta"] = True
+            by_bucket.setdefault(str(fmeta["bucket"]), []).append(fmeta)
+        return by_bucket, rows
+
     def _collect_written_files(
         self, out_dir: str, phys: dict
     ) -> tuple[list[dict], int]:
@@ -2752,19 +2769,21 @@ class LakeTable:
         the same rule reads reconcile with).
 
         ``fill``: optional column transform applied to the winner rows
-        just before the bucket write — the seam cdc/apply.py uses to
-        run the Arrow text extraction once per winning NEW row, after
-        the winner shuffle (already-extracted target rows pass through
-        its masked kernel untouched).
+        just before the write — the seam cdc/apply.py uses to run the
+        Arrow text extraction once per winning NEW row, in the tasks
+        after the commit's one exchange (already-extracted target rows
+        pass through its masked kernel untouched).
 
         ``mode``:
-        - ``"cow"`` (copy-on-write): one max_by winner aggregation over
-          target(touched buckets) ∪ source, then ``fill``, then the
-          bucket-clustering exchange; the touched buckets are rewritten
-          as fresh base files, one per bucket. Map-side partial
-          aggregation collapses duplicate deliveries and hot keys
-          before the shuffle. Reads stay reconciliation-free; each
-          commit rewrites whole buckets.
+        - ``"cow"`` (copy-on-write): the touched buckets' files —
+          base and delta layers, unreconciled — ∪ source go through
+          ONE exchange, hash-partitioned on ``_bucket``; the max_by
+          winner aggregation grouped by (``_bucket``, key) runs on top
+          of it (partial aggregation after the exchange), then
+          ``fill``, then the ``partitionBy(_bucket)`` write: the
+          touched buckets are rewritten as fresh base files, one per
+          bucket (``_bucket_winners``). Reads stay
+          reconciliation-free; each commit rewrites whole buckets.
         - ``"delta"`` (merge-on-read): the source's per-key winners are
           appended as a delta layer WITHOUT reading or rewriting
           the base — O(batch) write cost instead of O(touched bucket
@@ -2772,10 +2791,11 @@ class LakeTable:
           one file per touched bucket: each file is listed under every
           bucket it holds with a row count per bucket, and readers
           filter it on ``_bucket``. So the winner aggregation's key
-          exchange is the commit's only shuffle, and the write runs at
-          that exchange's AQE-coalesced parallelism: a micro-batch
-          writes one data file, a large batch a few, each shared by
-          many buckets. Reads reconcile layers with the same
+          exchange is the commit's only shuffle (its partial
+          aggregation runs map-side, before it), and ``fill`` and the
+          write run in that exchange's AQE-coalesced tasks: a
+          micro-batch writes one data file, a large batch a few, each
+          shared by many buckets. Reads reconcile layers with the same
           winner rule; ``compact()`` folds layers back into one base
           file per bucket. This is the write-amplification fix at design
           scale: a 1k-row micro-batch must not rewrite a 10^8-row
@@ -2865,49 +2885,22 @@ class LakeTable:
         if fences:
             self._guard_correction_fences(snap, src, fences)
 
-        winners_of = src
         if mode == "cow":
-            # rewrite the touched buckets: the winner decision runs over
-            # target ∪ batch (read_raw reconciles any delta layers)
-            winners_of = self.read_raw(buckets=touched).withColumn(
-                SYS_BUCKET, self.bucket_expr(F.col(key))
-            ).unionByName(src)
-        merged = self._winner_per_key(winners_of, key)
+            # rewrite the touched buckets: the target's files are read
+            # unreconciled, and ONE aggregation after the bucket
+            # exchange decides the winners over base ∪ layers ∪ batch
+            target = self._read_entries(fields, self.files(snap, touched))
+            merged = self._bucket_winners(
+                target.withColumn(SYS_BUCKET, self.bucket_expr(F.col(key)))
+                .unionByName(src), key, reconcile=True)
+        else:
+            # the key exchange of the winner aggregation is the commit's
+            # only shuffle; its partial aggregation runs map-side
+            merged = self._winner_per_key(src, key)
         if fill is not None:
             merged = fill(merged)
-
-        out_dir = os.path.join(self.data_dir, f"commit-{uuid.uuid4().hex}")
-        phys = {f"f_{f['id']}": f["type"] for f in fields}
-        write_df = merged.select(
-            *[F.col(f["name"]).alias(f"f_{f['id']}") for f in fields],
-            F.col(SYS_LSN),
-            F.col(SYS_DELETED),
-            F.col(SYS_BUCKET),
-        )
-        if mode == "delta":
-            # a delta layer keeps _bucket as a column and is written
-            # straight off the winner aggregation's key exchange — the
-            # commit's only shuffle. AQE coalesces a micro-batch's
-            # exchange to one partition, so a small commit writes one
-            # file; a large batch keeps its write parallelism and
-            # writes a few files, each holding many buckets
-            write_df.write.mode("overwrite").parquet(out_dir)
-        else:
-            # a COW commit rewrites whole buckets: one bucket-clustering
-            # exchange, one base file per touched bucket (an unclustered
-            # dynamic-partition write was measured 1.5-2x slower
-            # end-to-end — it fans each task across every bucket dir).
-            # With the winner aggregation's key exchange these are the
-            # commit's two shuffles.
-            write_df.repartition(max(len(touched), 1), F.col(SYS_BUCKET)) \
-                .write.mode("overwrite").partitionBy(SYS_BUCKET) \
-                .parquet(out_dir)
-
-        new_files, merged_rows = self._collect_written_files(out_dir, phys)
-        self._attach_key_blooms(snap, new_files)
-        if mode == "delta":
-            for fmeta in new_files:
-                fmeta["delta"] = True
+        by_bucket, merged_rows = self._write_files(
+            snap, merged, "commit", delta=mode == "delta")
 
         if persisted:
             src.unpersist()
@@ -2916,9 +2909,6 @@ class LakeTable:
         # immutable per-commit manifest holding ONLY the rewritten
         # buckets' file entries; untouched buckets keep their parent
         # manifest pointers — O(touched) new metadata per commit
-        by_bucket: dict[str, list[dict]] = {}
-        for fmeta in new_files:
-            by_bucket.setdefault(str(fmeta["bucket"]), []).append(fmeta)
         if wap_id is None:
             manifest_path = self._write_manifest(version, by_bucket)
         else:

@@ -2,10 +2,14 @@
 
 Scale notes (100 TB / 1000-executor design):
 - AQE on: runtime coalescing + skew-join splitting cover most shuffle
-  sizing; AQE does not rebalance the shuffle feeding a MERGE inside
-  ``foreachBatch``, so the CDC merge's hot keys are absorbed by its
-  winner aggregation's map-side partial aggregation instead (see
-  ``LakeTable._winner_per_key``).
+  sizing, and the bucket rewrites size their one exchange by column so
+  AQE's coalescing sets their task count. AQE does not rebalance the
+  shuffle feeding a MERGE inside ``foreachBatch``: a delta merge's hot
+  keys collapse in the winner aggregation's map-side partial
+  aggregation, before its key exchange; a COW merge's exchange is on
+  ``_bucket``, so a hot key's duplicate deliveries cross it and
+  collapse in the partial aggregation after it (see
+  ``LakeTable._winner_per_key`` and ``_bucket_winners``).
 - ``spark.sql.shuffle.partitions`` defaults to the local core count in
   the sandbox; on a real cluster it should be ~2-3x total cores and is
   left overridable via env.

@@ -221,7 +221,7 @@ def test_late_update_after_delete_stays_deleted(spark, tmp_path):
 
 def test_hot_key_distribution(spark, log_dir):
     """The Zipf generator must actually produce a hot host (the skew the
-    winner aggregation's map-side partial aggregation absorbs)."""
+    winner aggregation's partial aggregation absorbs)."""
     df = spark.read.option("basePath", log_dir).parquet(log_dir)
     counts = (
         df.withColumn("host", F.regexp_extract("url", r"https://([^/]+)/", 1))

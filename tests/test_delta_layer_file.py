@@ -308,3 +308,74 @@ def test_branch_publish_lists_a_layer_under_its_live_buckets(spark,
     assert _state(main) == log.expected_state()
     feed = main.changes(v0, main.current_version())
     assert _fold(fork_state, feed) == log.expected_state()
+
+
+def _edge_batch(log: _Log) -> list[dict]:
+    """Two delta layers over a 40-key base, then a batch for a
+    rewrite of their buckets with one of each edge case: a duplicate
+    delivery, late events older than a layer's upsert and than its
+    tombstone, and an upsert at the lsn of a layer's tombstone (the
+    tombstone wins the tie; the fold keeps the first event of an
+    lsn, which is the tombstone)."""
+    log.merge([log.event(f"u{i}", "U") for i in range(20)]
+              + [log.event("u20", "D")], "delta")
+    tie = log.event("u21", "D")
+    log.merge([tie, log.event("u22", "U")], "delta")
+    layer = log.winners[log.t.current_version()]
+    dup = log.event("u23", "U")
+    return [dup, dict(dup), log.event("u24", "I"),
+            log.event("u1", "U", lsn=layer["u1"][0] - 1),
+            log.event("u20", "U", lsn=layer["u20"][0] - 1),
+            log.event("u21", "U", lsn=tie["lsn"])]
+
+
+def test_cow_merge_then_compact_over_layers_match_reference_fold(
+        spark, tmp_path):
+    """A COW merge and then a compaction over buckets holding delta
+    layers read the layers unreconciled and pick every winner in the
+    one aggregation after the bucket exchange: the state and the
+    window feed equal the reference fold after each."""
+    log = _Log(spark, str(tmp_path / "t"))
+    v0 = log.merge([log.event(f"u{i}", "I") for i in range(40)], "cow")
+    rows = _edge_batch(log)
+    layered = {e["bucket"] for e in log.t.files() if e.get("delta")}
+    touched = {log.bucket(r["url"]) for r in rows}
+    assert touched < layered  # some layered buckets stay for compact
+    v1 = log.merge(rows, "cow")
+    assert all(log.t.snapshot()["manifests"][str(b)]
+               == [log.t.snapshot()["lineage"]["commit_manifest"]]
+               for b in touched)
+    v2 = log.compact()
+    assert sorted(log.t.snapshot()["lineage"]["buckets"]) \
+        == sorted(layered - touched)
+    assert all(len(m) == 1 for m in log.t.snapshot()["manifests"].values())
+    for v in (v1, v2):
+        assert _state(log.t) == log.live(v) == log.expected_state(), v
+        window = log.t.changes_window(v0, v)
+        assert _feed_rows(window) == _expected_feed(log.winners[v0],
+                                                    log.winners[v]), v
+        assert _fold(log.live(v0), window) == log.expected_state(), v
+    assert "u20" not in log.live(v2) and "u21" not in log.live(v2)
+
+
+def test_rebucket_over_layers_matches_reference_fold(spark, tmp_path):
+    """rebucket() over buckets holding delta layers folds them in the
+    aggregation after the new layout's bucket exchange: live rows equal
+    the reference fold, every winner (tombstones included) survives,
+    and a later COW merge of late events leaves the state on the fold."""
+    log = _Log(spark, str(tmp_path / "t"))
+    log.merge([log.event(f"u{i}", "I") for i in range(40)], "cow")
+    rows = _edge_batch(log)
+    v = log.merge(rows[:3], "delta")  # a third layer with a duplicate
+    log.t.rebucket(N_BUCKETS // 2 + 1)
+    v = log._committed(dict(log.winners[v]))
+    snap = log.t.snapshot()
+    assert snap["n_buckets"] == N_BUCKETS // 2 + 1
+    assert all(len(m) == 1 for m in snap["manifests"].values())
+    assert not any(e.get("delta") for e in log.t.files())
+    assert {r["url"]: (r["_lsn"], r["_deleted"])
+            for r in log.t.read_raw().collect()} \
+        == {u: w[:2] for u, w in log.winners[v].items()}
+    assert _state(log.t) == log.live(v) == log.expected_state()
+    v = log.merge(rows[3:], "cow")
+    assert _state(log.t) == log.live(v) == log.expected_state()

@@ -5,6 +5,8 @@ evaluation for multi-field extraction, pushed-down parquet filters."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -119,9 +121,10 @@ def test_cow_apply_hands_merge_an_unshuffled_source(spark, tmp_path,
 @pytest.mark.parametrize("mode", ["cow", "delta"])
 def test_merge_decides_winners_in_one_aggregation(spark, tmp_path, mode):
     """merge() owns the winner rule in both modes: ``fill`` receives
-    the output of ONE max_by aggregation (one key exchange, one partial
-    aggregation) — over target ∪ batch in cow, over the batch alone in
-    delta — and no extraction has run before it."""
+    the output of ONE max_by aggregation (one exchange — on the bucket
+    in cow, on the key in delta — and one partial aggregation) — over
+    target ∪ batch in cow, over the batch alone in delta — and no
+    extraction has run before it."""
     from clinical_trials_etl_spark.cdc import apply as apply_mod
     from clinical_trials_etl_spark.cdc.replay import create_pages_table
     from clinical_trials_etl_spark.datagen.changelog import (
@@ -218,7 +221,7 @@ def test_fill_kernel_parses_only_needy_rows(spark):
 def test_mor_read_columns_prunes_the_parquet_scan(spark, tmp_path):
     """Column pruning through merge-on-read reconciliation: Catalyst
     cannot prune through the winner aggregation's payload struct, so
-    read(columns=...) must push the projection to _read_files itself —
+    read(columns=...) must push the projection to _read_reconciled —
     the scan of a delta-layered table asked for one field must read
     that field + system cols only, never the html blobs."""
     import re
@@ -327,3 +330,108 @@ def test_string_key_lookup_runs_one_job(spark, tmp_path):
         rows = t.lookup("u7").collect()
     assert jobs["jobs"] == 1
     assert [r["val"] for r in rows] == ["v8"]
+
+
+def _write_plans(spark, monkeypatch) -> list[str]:
+    """The executed plan of every DataFrame written from now on."""
+    cls = type(spark.range(1))
+    real = cls.write
+    plans: list[str] = []
+
+    def spy(df):
+        plans.append(_plan(df))
+        return real.fget(df)
+
+    monkeypatch.setattr(cls, "write", property(spy))
+    return plans
+
+
+def _touched(t, src) -> set[int]:
+    return {r[0] for r in src.select(
+        t.bucket_expr(F.col("url"))).distinct().collect()}
+
+
+def test_cow_merge_runs_one_bucket_exchange_in_two_jobs(spark, tmp_path,
+                                                        monkeypatch):
+    """Job budget of a COW commit on a base-only table: ONE exchange,
+    hash-partitioned on ``_bucket`` and sized by column (so AQE sets
+    its tasks), under the winner aggregation and the write — 2 Spark
+    jobs, one parquet file per touched bucket."""
+    import os
+
+    from clinical_trials_etl_spark.lake.table import LakeTable
+    from tests.spark_jobs import count_jobs
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), _KV, "url",
+                         n_buckets=16)
+    t.merge(_kv_batch(spark, 64, 1), batch_id="c-0")
+    src = _kv_batch(spark, 64, 100)
+    touched = _touched(t, src)
+    plans = _write_plans(spark, monkeypatch)
+    with count_jobs(spark) as jobs:
+        t.merge(src, batch_id="c-1", touched_hint=touched)
+    assert jobs["jobs"] == 2
+    (plan,) = plans
+    assert plan.count("Exchange") == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(_bucket#\d+, \d+\), "
+                     r"REPARTITION_BY_COL", plan), plan
+    assert "REPARTITION_BY_NUM" not in plan, plan
+    assert plan.count("partial_max_by") == 1, plan
+
+    lin = t.snapshot()["lineage"]
+    entries = t._commit_files(lin)
+    assert sorted(e["bucket"] for e in entries) == sorted(touched)
+    out_dir = os.path.dirname(os.path.dirname(entries[0]["path"]))
+    for b in touched:
+        assert len([f for f in os.listdir(f"{out_dir}/_bucket={b}")
+                    if f.endswith(".parquet")]) == 1, b
+
+
+def test_cow_merge_over_delta_layers_aggregates_once(spark, tmp_path,
+                                                     monkeypatch):
+    """A COW commit over buckets holding delta layers reads them
+    unreconciled: one winner aggregation over base ∪ layers ∪ batch,
+    after the one bucket exchange — 2 Spark jobs, as on a base-only
+    table."""
+    from clinical_trials_etl_spark.lake.table import LakeTable
+    from tests.spark_jobs import count_jobs
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), _KV, "url",
+                         n_buckets=16)
+    t.merge(_kv_batch(spark, 64, 1), batch_id="c-0")
+    for k in range(3):
+        t.merge(_kv_batch(spark, 48, 100 * (k + 1)), batch_id=f"d-{k}",
+                mode="delta")
+    src = _kv_batch(spark, 64, 1000)
+    touched = _touched(t, src)
+    plans = _write_plans(spark, monkeypatch)
+    with count_jobs(spark) as jobs:
+        t.merge(src, batch_id="c-1", touched_hint=touched)
+    assert jobs["jobs"] == 2
+    (plan,) = plans
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("partial_max_by") == 1, plan
+    assert {r["url"]: r["val"] for r in t.read().collect()} \
+        == {f"u{i}": f"v{1000 + i}" for i in range(64)}
+
+
+def test_compact_over_delta_layers_plans_one_exchange(spark, tmp_path,
+                                                      monkeypatch):
+    """compact() folds delta layers with the winner aggregation on top
+    of the write's bucket exchange — one Exchange in its plan."""
+    from clinical_trials_etl_spark.lake.table import LakeTable
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), _KV, "url",
+                         n_buckets=16)
+    for k in range(3):
+        t.merge(_kv_batch(spark, 48, 100 * k), batch_id=f"d-{k}",
+                mode="delta")
+    plans = _write_plans(spark, monkeypatch)
+    t.compact()
+    (plan,) = plans
+    assert plan.count("Exchange") == 1, plan
+    assert "hashpartitioning(_bucket#" in plan, plan
+    assert plan.count("partial_max_by") == 1, plan
+    assert all(len(v) == 1 for v in t.snapshot()["manifests"].values())
+    assert {r["url"]: r["val"] for r in t.read().collect()} \
+        == {f"u{i}": f"v{200 + i}" for i in range(48)}
