@@ -1409,10 +1409,13 @@ class LakeTable:
         The exchange is sized by column, not by the bucket count:
         ``spark.sql.shuffle.partitions`` with AQE coalescing sets the
         tasks after it, where the Arrow ``fill`` kernel runs, and each
-        Python UDF task pays a fixed cost (~0.3 CPU-s on a 4-core VM):
-        sized at one task per bucket, a 16-bucket COW commit ran
-        ``fill`` in 16 tasks instead of <=4 and took about twice the
-        commit CPU."""
+        Python UDF task pays a fixed cost. It was ~0.3 CPU-s on a 4-core
+        VM, most of it the workers re-reading ``pyspark.zip`` and the
+        spark-core jar at every task start (sized at one task per
+        bucket, a 16-bucket COW commit took about twice the commit
+        CPU); since ``dist.install_zip_invalidation_check`` it is ~0.12
+        CPU-s, two thirds of it in the JVM, and a 16-task fill pass
+        still costs about three times a 4-task one."""
         df = df.repartition(F.col(SYS_BUCKET))
         return self._winner_per_key(df, key, SYS_BUCKET) if reconcile \
             else df

@@ -15,6 +15,13 @@ Scale notes (100 TB / 1000-executor design):
   left overridable via env.
 - Arrow execution enabled: every Python-side kernel in this repo is an
   Arrow-vectorized pandas UDF (no per-row Python), per BASELINE.json.
+- Every Python UDF task pays a fixed cost, so fewer, larger tasks are
+  cheaper. Most of it was PySpark's per-task
+  ``importlib.invalidate_caches()``, which before CPython 3.13 re-reads
+  every zip archive on the worker's import path (``pyspark.zip``, the
+  spark-core jar): ~0.17 CPU-s per task. Importing the package installs
+  a stat-checked re-read (``dist.py``); ~0.12 CPU-s per task remains on
+  a 4-core VM, two thirds of it in the JVM.
 - PySpark's DataFrame debugging is off: with it on, every DataFrame and
   Column API call captures the Python call stack and makes about five
   extra driver-to-JVM round trips to record it. A commit builds its
